@@ -1,5 +1,7 @@
 package graft.hockey
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
 
 /** CLI entry point — the Scala counterpart of the reference's
@@ -84,12 +86,14 @@ object Experiment {
 
     println("Building matchups...")
     val matchups = Pipeline.buildMatchups(spark, opts.events, opts.results)
-    println(s"Total matchups: ${matchups.count()}")
+    val matchupRows = matchups.count()
+    println(s"Total matchups: $matchupRows")
 
     val (trainRaw, testRaw, testSeason) = Pipeline.temporalSplit(matchups)
     val train = Pipeline.withBinaryLabel(Pipeline.castFeatures(trainRaw)).cache()
     val test = Pipeline.withBinaryLabel(Pipeline.castFeatures(testRaw)).cache()
-    println(s"Train = ${train.count()}, Test = ${test.count()}, Test season = $testSeason")
+    val (trainRows, testRows) = (train.count(), test.count())
+    println(s"Train = $trainRows, Test = $testRows, Test season = $testSeason")
 
     val chosen = Map(
       "rf" -> ("Random Forest", () => Models.randomForest(cfg)),
@@ -97,22 +101,27 @@ object Experiment {
       "gbt" -> ("Gradient Boosted Trees", () => Models.gbt(cfg)),
       "mlp" -> ("Multilayer Perceptron", () => Models.mlp(cfg)))
 
-    val results = opts.models.flatMap { key =>
-      chosen.get(key).map { case (name, build) =>
-        println(s"\nTraining $name...")
+    // Each fit+eval is a chain of small driver-bound jobs, so the models
+    // run side by side in one SparkContext and their jobs overlap. Results
+    // print afterwards, from this thread and in `opts.models` order.
+    val fitted = concurrently(opts.models.flatMap(chosen.get).map { case (name, build) =>
+      () => {
         val t0 = System.nanoTime()
         val model = build().fit(train)
         val metrics = Evaluation.evaluate(model.transform(test))
-        println(Evaluation.format(name, metrics))
-        println(f"fit+eval: ${(System.nanoTime() - t0) / 1e9}%.1f s")
-        val importances = Models.topFeatureImportances(model)
-        if (importances.nonEmpty) {
-          println("Top feature importances:")
-          importances.foreach { case (f, w) => println(f"  $f%-22s $w%.4f") }
-        }
-        name -> metrics
+        (name, metrics, (System.nanoTime() - t0) / 1e9, Models.topFeatureImportances(model))
       }
-    }.toMap
+    })
+    for ((name, metrics, seconds, importances) <- fitted) {
+      println(s"\nTraining $name...")
+      println(Evaluation.format(name, metrics))
+      println(f"fit+eval: $seconds%.1f s")
+      if (importances.nonEmpty) {
+        println("Top feature importances:")
+        importances.foreach { case (f, w) => println(f"  $f%-22s $w%.4f") }
+      }
+    }
+    val results = fitted.map { case (name, metrics, _, _) => name -> metrics }.toMap
 
     val base = Evaluation.baselines(test)
     println(f"""|
@@ -123,13 +132,29 @@ object Experiment {
     // artifact spec pins); one extra count on a header CSV, trivial next
     // to the fits
     val gameTeamRows = Pipeline.loadResults(spark, opts.results).count()
-    val report = RunReport(gameTeamRows, matchups.count(),
-      train.count(), test.count(), testSeason, results, base)
+    val report = RunReport(gameTeamRows, matchupRows, trainRows, testRows, testSeason,
+      results, base)
     opts.json.foreach { path =>
       java.nio.file.Files.write(java.nio.file.Paths.get(path),
         (reportJson(report, opts.fast) + "\n").getBytes("UTF-8"))
       println(s"Run report written to $path")
     }
     report
+  }
+
+  /** Runs every task on a thread of its own and returns their results in
+    * task order, whichever finishes first. All threads have ended when it
+    * returns. If tasks fail, the first failing task's own exception (in task
+    * order) is rethrown once every task has ended. The threads inherit the
+    * caller's Spark local properties, active session and `Console` output. */
+  def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
+    val outcomes = new Array[Try[A]](tasks.size)
+    val threads = tasks.zipWithIndex.map { case (task, i) =>
+      new Thread(() => outcomes(i) =
+        try Success(task()) catch { case e: Throwable => Failure(e) }, s"hockey-model-$i")
+    }
+    try threads.foreach(_.start())
+    finally threads.foreach(t => if (t.getState != Thread.State.NEW) t.join())
+    outcomes.toSeq.map(_.get)
   }
 }

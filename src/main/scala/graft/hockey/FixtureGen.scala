@@ -30,10 +30,12 @@ import java.time.format.DateTimeFormatter
   * pure uppercase letters ("AAA".."JJJ") so TeamNames' regex-upper
   * fallback maps them to themselves.
   *
-  * Usage: `runMain graft.hockey.FixtureGen [outDir] [--large]` (default
-  * `fixtures/hockey`, committed config).
+  * Usage: `runMain graft.hockey.FixtureGen [outDir] [--large|--sample]`
+  * (default `fixtures/hockey`, committed config).
   *
-  * TWO configs, one generator (r14, VERDICT r13 #1): the COMMITTED
+  * Three configs, one generator. [[Sample]] is a 5-game corpus shaped
+  * like the reference's sample CSVs, committed as `fixtures/hockey_sample`
+  * for HockeySpec's end-to-end tests. The COMMITTED
   * 360-game fixture is sized for the `--fast` artifact and the always-on
   * spec loop, but the reference's FULL hyperparameters (GBT 100×depth-8,
   * RF 200×10 — ref code/experiment.py:697-777) overfit its 240 train
@@ -52,20 +54,34 @@ import java.time.format.DateTimeFormatter
   */
 object FixtureGen {
 
-  /** (calendar year, season id) triples + schedule shape. */
-  case class Config(nTeams: Int, roundsPerSeason: Int)
+  /** Schedule shape: `nTeams` teams play `roundsPerSeason(k)` round-robin
+    * rounds in the k-th season, the first season starting in `firstYear`.
+    * `spellings(i)`, when given, lists the raw names team `i` appears under
+    * (rotated per row, so `TeamNames` has variants to fold); otherwise the
+    * team is written as its code. */
+  case class Config(nTeams: Int, roundsPerSeason: Seq[Int], firstYear: Int = 2011,
+      spellings: Seq[Seq[String]] = Nil)
 
   /** The committed `fixtures/hockey` corpus: 10 teams, 24 rounds,
     * 5 games/round => 120 games/season, 360 games total. */
-  val Committed = Config(nTeams = 10, roundsPerSeason = 24)
+  val Committed = Config(nTeams = 10, roundsPerSeason = Seq.fill(3)(24))
 
   /** The full-hyperparameter artifact corpus: the committed fixture's 10
     * teams (same strengths, same per-game signal) on a 6× denser
     * schedule — 144 rounds = 720 games/season, 2160 games total (1440
     * train / 720 test under the reference temporal split). */
-  val Large = Config(nTeams = 10, roundsPerSeason = 144)
+  val Large = Config(nTeams = 10, roundsPerSeason = Seq.fill(3)(144))
 
-  private val Seasons = Seq((2011, 20112012), (2012, 20122013), (2013, 20132014))
+  /** The committed `fixtures/hockey_sample` corpus, shaped like the
+    * reference's 5-game sample CSVs (ref data/Sample_*.csv): 5 games, 10
+    * results rows, two seasons (3 games in 20122013, 2 in 20132014, so the
+    * temporal split is 3/2 as on the sample), real franchises written
+    * under the full-name, abbreviation, padded and relocated spellings
+    * `TeamNames` folds to LAK and WPG. */
+  val Sample = Config(nTeams = 2, roundsPerSeason = Seq(3, 2), firstYear = 2012,
+    spellings = Seq(
+      Seq("Los Angeles Kings", "L.A", "  L.A.  ", "LAK", "Kings"),
+      Seq("Atlanta Thrashers", "ATL", "Winnipeg   Jets", "WPG")))
 
   private def teamCode(i: Int): String = {
     val c = ('A' + i).toChar
@@ -84,7 +100,10 @@ object FixtureGen {
 
   def main(args: Array[String]): Unit = {
     val (flags, positional) = args.partition(_.startsWith("--"))
-    val cfg = if (flags.contains("--large")) Large else Committed
+    val cfg =
+      if (flags.contains("--large")) Large
+      else if (flags.contains("--sample")) Sample
+      else Committed
     write(positional.lift(0).getOrElse("fixtures/hockey"), cfg)
   }
 
@@ -92,7 +111,6 @@ object FixtureGen {
 
   def write(dir: String, cfg: Config): Unit = {
     val NTeams = cfg.nTeams
-    val RoundsPerSeason = cfg.roundsPerSeason
     val rnd = new java.util.Random(42)
     val results = new StringBuilder
     val events = new StringBuilder
@@ -110,10 +128,12 @@ object FixtureGen {
       "Away_Defenders_ID,Away_Defenders,Away_Goalie_ID,Away_Goalie,BoxID," +
       "BoxID_rev,BoxSize,ShotDistance,ShotAngle,Position,Shoots,xG_F,xG_S\n")
 
-    for ((year, season) <- Seasons) {
+    for ((rounds, k) <- cfg.roundsPerSeason.zipWithIndex) {
+      val year = cfg.firstYear + k
+      val season = year * 10000 + year + 1
       val start = LocalDate.of(year, 10, 1)
       var gameIdx = 0
-      for (round <- 0 until RoundsPerSeason) {
+      for (round <- 0 until rounds) {
         val date = start.plusDays(round.toLong * 2)
         // circle-method round robin: team 0 fixed, the rest rotate
         val rot = (1 until NTeams).map(t => 1 + (t - 1 + round) % (NTeams - 1))
@@ -125,8 +145,7 @@ object FixtureGen {
           val (home, away) = if (round % 2 == 0) (a, b) else (b, a)
           gameIdx += 1
           val gameId = year.toLong * 1000000L + 20000L + gameIdx
-          emitGame(rnd, results, events, gameId, season, date, home, away,
-            NTeams)
+          emitGame(rnd, results, events, gameId, season, date, home, away, cfg)
         }
       }
     }
@@ -140,9 +159,13 @@ object FixtureGen {
 
   private def emitGame(rnd: java.util.Random, results: StringBuilder,
       events: StringBuilder, gameId: Long, season: Int, date: LocalDate,
-      home: Int, away: Int, nTeams: Int): Unit = {
-    val sH = strength(home, nTeams)
-    val sA = strength(away, nTeams)
+      home: Int, away: Int, cfg: Config): Unit = {
+    val sH = strength(home, cfg.nTeams)
+    val sA = strength(away, cfg.nTeams)
+    // the k-th row naming `team`, for any k: its code or one of its spellings
+    def name(team: Int, k: Int): String =
+      if (cfg.spellings.isEmpty) teamCode(team)
+      else cfg.spellings(team)(k % cfg.spellings(team).size)
     def goals(s: Double, opp: Double): Int = {
       val mu = 2.7 + 1.8 * (s - opp)
       math.max(0, math.round(mu + rnd.nextGaussian() * 1.3).toInt)
@@ -159,7 +182,7 @@ object FixtureGen {
       val pts = if (win == 1) 2 else if (otl) 1 else 0
       val xg = gf + rnd.nextGaussian() * 0.4
       results ++= f"$gameId,Reg,$season,${date.format(dateFmt)}," +
-        f"${teamCode(team)},$isHome,$gf,$xg%.4f,${gf - ga},$win,0.0,0.0," +
+        f"${name(team, (gameId % 1000).toInt)},$isHome,$gf,$xg%.4f,${gf - ga},$win,0.0,0.0," +
         f"0.0,${if (win == 0 && otl) "1.0" else "0.0"},${1 - win},$win," +
         f"$pts.0,,,,,,,,\n"
     }
@@ -188,7 +211,7 @@ object FixtureGen {
         val gameTime = 60 + e * 110
         val period = 1 + (gameTime / 1200).min(2)
         events ++= f"$gameId,$season,regular,$venue,$period,$gameTime,," +
-          f"506,$ev,,,,,wrist,,,,${teamCode(team)},,,,,,,,," +
+          f"506,$ev,,,,,wrist,,,,${name(team, eventIdx)},,,,,,,,," +
           f"1,${if (fenwick) 1 else 0}," +
           f"${if (shot) 1 else 0},${if (isGoal) 1 else 0}," +
           f"$gameId$eventIdx%04d,\\N,0,,,,,,,,,,,,,N02,N05,875.0," +

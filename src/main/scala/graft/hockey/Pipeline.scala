@@ -178,17 +178,21 @@ object Pipeline {
   /** A2/F4/C2 (ref code/experiment.py:564-572): temporal split — latest
     * season is the test set; random 80/20 (seed 42) fallback when either
     * side would be empty (single-season inputs). Returns (train, test,
-    * testSeason). */
+    * testSeason).
+    *
+    * One aggregate job decides: the test side holds the max season, so it
+    * is never empty, and the train side is empty exactly when the min
+    * season equals the max. */
   def temporalSplit(matchups: DataFrame): (DataFrame, DataFrame, Int) = {
-    val maxRow = matchups.agg(max("Season")).head()
-    require(!maxRow.isNullAt(0), "no matchups to split — check the input data")
-    val maxSeason = maxRow.getInt(0)
-    val train = matchups.filter(col("Season") < maxSeason)
-    val test = matchups.filter(col("Season") === maxSeason)
-    if (train.isEmpty || test.isEmpty) {
+    val seasons = matchups.agg(min("Season"), max("Season")).head()
+    require(!seasons.isNullAt(1), "no matchups to split — check the input data")
+    val maxSeason = seasons.getInt(1)
+    if (seasons.getInt(0) == maxSeason) {
       val Array(tr, te) = matchups.randomSplit(Array(0.8, 0.2), seed = 42)
       (tr, te, maxSeason)
-    } else (train, test, maxSeason)
+    } else
+      (matchups.filter(col("Season") < maxSeason), matchups.filter(col("Season") === maxSeason),
+        maxSeason)
   }
 
   /** X6 (ref code/experiment.py:628-633): Win (2 points) vs Not-Win. */

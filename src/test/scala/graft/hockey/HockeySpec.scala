@@ -8,13 +8,16 @@ import graft.SparkSpec
 
 /** Reference-parity checks: team normalization (X1-X3), window semantics
   * (W1-W4 — SURVEY §7.4 ranks frame fidelity the #1 risk), and the full
-  * ETL on the reference's committed sample CSVs (SURVEY §5 port strategy).
+  * ETL on `fixtures/hockey_sample`, the committed 5-game corpus
+  * [[FixtureGen.Sample]] writes in the shape of the reference's sample CSVs
+  * (SURVEY §5 port strategy).
   */
 class HockeySpec extends SparkSpec {
   import spark.implicits._
 
-  private val eventsCsv = "/root/reference/data/Sample_NHL_EventData.csv"
-  private val resultsCsv = "/root/reference/data/Sample_results.csv"
+  private val sampleDir = "fixtures/hockey_sample"
+  private val eventsCsv = s"$sampleDir/events.csv"
+  private val resultsCsv = s"$sampleDir/results.csv"
 
   // ---- TeamNames ----
 
@@ -84,7 +87,32 @@ class HockeySpec extends SparkSpec {
     assert(all.getDouble(0) >= 0.0 && all.getDouble(1) <= 1.0)
   }
 
-  // ---- End-to-end on the reference sample CSVs ----
+  // ---- End-to-end on the sample-shaped fixture ----
+
+  test("the committed sample fixture regenerates byte-identically") {
+    val tmp = java.nio.file.Files.createTempDirectory("hockeysample").toString
+    FixtureGen.write(tmp, FixtureGen.Sample)
+    for (f <- Seq("events.csv", "results.csv")) {
+      val committed = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$sampleDir/$f"))
+      val fresh = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$tmp/$f"))
+      assert(java.util.Arrays.equals(committed, fresh),
+        s"$sampleDir/$f is not what FixtureGen.write produces — regenerate with: " +
+          s"""sbt "runMain graft.hockey.FixtureGen $sampleDir --sample"""")
+    }
+  }
+
+  test("sample CSVs: both null sentinels read as null; team spellings fold to one code") {
+    val events = Pipeline.loadEvents(spark, eventsCsv)
+    // `\N` (ShiftIndex) and the empty string (xG_S) are both nulls
+    assert(events.filter($"ShiftIndex".isNotNull || $"xG_S".isNotNull).isEmpty)
+    val results = Pipeline.loadResults(spark, resultsCsv)
+    assert(results.filter($"American Odds".isNotNull || $"OU_Decimal Odds".isNotNull).isEmpty)
+    for (df <- Seq(events.select($"EventTeam".as("raw"), $"TeamCode"),
+        results.select($"Ev_Team_raw".as("raw"), $"TeamCode"))) {
+      assert(df.select("raw").distinct().count() > 2)
+      assert(df.select("TeamCode").distinct().as[String].collect().toSet == Set("LAK", "WPG"))
+    }
+  }
 
   test("sample CSVs: 10 game-team rows, 5 matchups, one home+away per game") {
     val results = Pipeline.loadResults(spark, resultsCsv)
@@ -126,9 +154,21 @@ class HockeySpec extends SparkSpec {
     assert(season == 20132014)
     assert(test.select("Season").distinct().as[Int].collect().toSeq == Seq(20132014))
     assert(train.filter($"Season" === season).isEmpty)
+    assert(train.count() == 3 && test.count() == 2)
     val lab = Pipeline.withBinaryLabel(matchups)
       .select("label", "label_binary").as[(Int, Double)].collect()
     assert(lab.forall { case (l, b) => b == (if (l == 2) 1.0 else 0.0) })
+  }
+
+  test("temporal split falls back to the seeded 80/20 randomSplit on a single season") {
+    val single = (1 to 40).map(i => (i.toLong, 20132014, i % 3)).toDF("GameID", "Season", "label")
+    val (train, test, season) = Pipeline.temporalSplit(single)
+    assert(season == 20132014)
+    val Array(wantTrain, wantTest) = single.randomSplit(Array(0.8, 0.2), seed = 42)
+    def ids(df: org.apache.spark.sql.DataFrame) = df.select("GameID").as[Long].collect().sorted.toSeq
+    assert(ids(train) == ids(wantTrain) && ids(test) == ids(wantTest))
+    assert(ids(train).nonEmpty && ids(test).nonEmpty)
+    assert((ids(train) ++ ids(test)).sorted == (1L to 40L))
   }
 
   test("fast models fit and produce sane evaluation shapes") {
@@ -177,6 +217,7 @@ class HockeySpec extends SparkSpec {
     val ev = spark.read.option("header", "true").csv(s"$out/events_subset")
     val resGames = res.select(col("Game Id")).distinct().as[String].collect().toSet
     val evGames = ev.select("GameID").distinct().as[String].collect().toSet
+    assert(resGames.nonEmpty && evGames.nonEmpty)
     assert(evGames.subsetOf(resGames))
     // game-level sampling: both rows of every sampled game survive
     assert(res.groupBy(col("Game Id")).count().filter($"count" =!= 2).isEmpty)
