@@ -76,10 +76,6 @@ object Scratch {
     p
   }
 
-  /** Alias of [[fresh]], kept for the streaming drives that adopted the
-    * tmpfs contract first (VERDICT r4 #6). */
-  def freshFast(prefix: String): Path = fresh(prefix)
-
   private def delete(f: java.io.File): Unit = {
     if (!Files.isSymbolicLink(f.toPath))
       Option(f.listFiles()).foreach(_.foreach(delete))

@@ -116,4 +116,17 @@ object Tables {
   }
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
+
+  /** Partition count derived from input size, never a constant tuned to
+    * one host (guide §2): one partition per started 32 MiB of `scale` ×
+    * the bytes under `path` (a file, or a directory walked with symlinks
+    * followed; a missing path holds 0 bytes), at least `floor`. Sizes the
+    * streaming state stores and the graph adjacency's bucket count. */
+  def partitionsFor(path: String, floor: Int, scale: Int = 1): Int = {
+    def bytes(f: java.io.File): Long =
+      if (f.isFile) f.length
+      else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
+    val b = scale * bytes(new java.io.File(path))
+    math.max(floor.toLong, (b + (32L << 20) - 1) / (32L << 20)).toInt
+  }
 }

@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Derived, Tables}
 import graft.operators.Ann
 
 /** Gate queries for similarity search over the `embeddings` table:
@@ -43,33 +43,37 @@ object AnnQueries {
     * the centroid table is O(k·dim) and rides along as collected rows,
     * rebuilt as a local relation per consumer so downstream plans
     * broadcast a literal. */
-  private val trainedIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
-
-  /** (grid-quantized corpus, nprobe=2 celled corpus, centroids) per dir. */
   private def gridIndex(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (gridPath, celledPath, centRows, centSchema) =
-      trainedIndex.computeIfAbsent(dir, _ => {
-        import spark.implicits._
-        val iv = Tables.embeddings(spark, dir)
-          .select($"vec_id", Ann.gridQuantize($"embedding").as("embedding"))
-          .withColumn("seed", pmod($"vec_id", lit(8)).cast("int"))
-          .cache()
-        val centroids = Ann.trainCentroidsGrid(iv, "seed", iters = 2)
-        val scratch = graft.Scratch.fresh("graft_ivf_")
-        val gp = scratch.resolve("grid").toString
-        val cp = scratch.resolve("celled").toString
-        iv.select($"vec_id", $"embedding").write.mode("overwrite").parquet(gp)
-        Ann.probeCells(iv, centroids, nprobe = 2)
-          .write.mode("overwrite").parquet(cp)
-        iv.unpersist()
-        (gp, cp, centroids.collect(), centroids.schema)
-      })
-    val centroids = spark.createDataFrame(
-      java.util.Arrays.asList(centRows: _*), centSchema)
-    (spark.read.parquet(gridPath), spark.read.parquet(celledPath), centroids)
+      : (DataFrame, DataFrame, DataFrame) =
+    Derived("ann.gridIndex", dir)(trainIvf(spark, dir, 8, "graft_ivf_")).frames(spark)
+
+  /** A trained IVF index: grid-quantized corpus and nprobe=2 celled corpus
+    * as parquet paths, centroids as collected rows. */
+  private final case class IvfIndex(grid: String, celled: String, centroids: Derived.Rows) {
+    /** (grid-quantized corpus, celled corpus, centroids). */
+    def frames(spark: SparkSession): (DataFrame, DataFrame, DataFrame) =
+      (spark.read.parquet(grid), spark.read.parquet(celled), centroids.toDF(spark))
+  }
+
+  /** Grid-Lloyd IVF training over the whole corpus: seed `pmod(vec_id,
+    * k)`, 2 iterations, ×2 corpus multi-assignment, checkpoints under a
+    * fresh `prefix` scratch dir. */
+  private def trainIvf(spark: SparkSession, dir: String, k: Int,
+      prefix: String): IvfIndex = {
+    import spark.implicits._
+    val iv = Tables.embeddings(spark, dir)
+      .select($"vec_id", Ann.gridQuantize($"embedding").as("embedding"))
+      .withColumn("seed", pmod($"vec_id", lit(k)).cast("int"))
+      .cache()
+    val centroids = Ann.trainCentroidsGrid(iv, "seed", iters = 2)
+    val scratch = graft.Scratch.fresh(prefix)
+    val gp = scratch.resolve("grid").toString
+    val cp = scratch.resolve("celled").toString
+    iv.select($"vec_id", $"embedding").write.mode("overwrite").parquet(gp)
+    Ann.probeCells(iv, centroids, nprobe = 2)
+      .write.mode("overwrite").parquet(cp)
+    iv.unpersist()
+    IvfIndex(gp, cp, Derived.rows(centroids))
   }
 
   /** Label-free IVF: Lloyd-trained coarse quantizer on the INTEGER GRID
@@ -225,22 +229,16 @@ object AnnQueries {
   /** Per-k trained centroid tables for the q190 elbow, memoized like
     * [[upsertCentroids]] (key `dir#k`): same grid-Lloyd recipe as
     * [[gridIndex]] with seed `pmod(vec_id, k)`, 2 iterations. */
-  private val elbowCentroids = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
-
   private def elbowCentroidsFor(spark: SparkSession, dir: String, k: Int)
-      : DataFrame = {
-    import spark.implicits._
-    val (rows, schema) = elbowCentroids.computeIfAbsent(s"$dir#$k", _ => {
+      : DataFrame =
+    Derived("ann.elbowCentroids", s"$dir#$k") {
+      import spark.implicits._
       val (grid, _, _) = gridIndex(spark, dir)
       val iv = grid.withColumn("seed", pmod($"vec_id", lit(k)).cast("int")).cache()
       val c = Ann.trainCentroidsGrid(iv, "seed", iters = 2)
       iv.unpersist(blocking = false)
-      (c.collect(), c.schema)
-    })
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+      Derived.rows(c)
+    }.toDF(spark)
 
   /** IVF QUANTIZER SIZING ("elbow") gate (q190) — q186's companion on the
     * other axis of the index design space: recall gated the PROBE width,
@@ -298,9 +296,16 @@ object AnnQueries {
 
   /** Centroids trained on the BASE slice only (vec_id % 5 ≠ 0), memoized
     * per dir like [[gridIndex]] — the upsert gate's frozen quantizer. */
-  private val upsertCentroids = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
+  private def upsertCentroids(spark: SparkSession, dir: String): DataFrame =
+    Derived("ann.upsertCentroids", dir) {
+      import spark.implicits._
+      val (grid, _, _) = gridIndex(spark, dir)
+      val base = grid.filter($"vec_id" % 5 =!= 0)
+        .withColumn("seed", pmod($"vec_id", lit(8)).cast("int")).cache()
+      val c = Ann.trainCentroidsGrid(base, "seed", iters = 2)
+      base.unpersist(blocking = false)
+      Derived.rows(c)
+    }.toDF(spark)
 
   /** INCREMENTAL index maintenance (q153) — the upsert path a growing
     * corpus needs: the coarse quantizer is trained ONCE on the base slice
@@ -328,22 +333,11 @@ object AnnQueries {
     * churn at sf0.1. The gates then time what they claim to gate: q153 the
     * pruned search of an upserted index, q154 the compaction rewrite +
     * search. */
-  private val upsertedIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def upsertedIndex(spark: SparkSession, dir: String): String =
-    upsertedIndexPath.computeIfAbsent(dir, _ => {
+    Derived("ann.upsertedIndex", dir) {
       import spark.implicits._
       val (grid, _, _) = gridIndex(spark, dir)
-      val (centRows, centSchema) = upsertCentroids.computeIfAbsent(dir, _ => {
-        val base = grid.filter($"vec_id" % 5 =!= 0)
-          .withColumn("seed", pmod($"vec_id", lit(8)).cast("int")).cache()
-        val c = Ann.trainCentroidsGrid(base, "seed", iters = 2)
-        base.unpersist(blocking = false)
-        (c.collect(), c.schema)
-      })
-      val centroids = spark.createDataFrame(
-        java.util.Arrays.asList(centRows: _*), centSchema)
+      val centroids = upsertCentroids(spark, dir)
       val path = graft.Scratch.named(s"q153_${graft.Scratch.dirKey(dir)}").toString
       Ann.saveIndex(centroids,
         Ann.probeCells(grid.filter($"vec_id" % 5 =!= 0), centroids, nprobe = 2),
@@ -351,7 +345,7 @@ object AnnQueries {
       Ann.appendIndex(centroids, grid.filter($"vec_id" % 5 === 0), path,
         assignProbes = 2)
       path
-    })
+    }
 
   def ivfUpsert(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -393,22 +387,11 @@ object AnnQueries {
     * writes are memoized per dir like [[upsertedIndex]]; the gate times
     * pointer-read + pruned search. AnnSpec pins the mid-swap contract
     * (pre-publish readers keep the old complete generation). */
-  private val lifecycleRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def lifecycleRootFor(spark: SparkSession, dir: String): String =
-    lifecycleRoot.computeIfAbsent(dir, _ => {
+    Derived("ann.lifecycleRoot", dir) {
       import spark.implicits._
       val (grid, _, _) = gridIndex(spark, dir)
-      val (centRows, centSchema) = upsertCentroids.computeIfAbsent(dir, _ => {
-        val base = grid.filter($"vec_id" % 5 =!= 0)
-          .withColumn("seed", pmod($"vec_id", lit(8)).cast("int")).cache()
-        val c = Ann.trainCentroidsGrid(base, "seed", iters = 2)
-        base.unpersist(blocking = false)
-        (c.collect(), c.schema)
-      })
-      val centroids = spark.createDataFrame(
-        java.util.Arrays.asList(centRows: _*), centSchema)
+      val centroids = upsertCentroids(spark, dir)
       val r = graft.Scratch.named(s"q157_${graft.Scratch.dirKey(dir)}").toString
       val gen1 = Ann.nextGenerationName(spark, r)
       Ann.saveIndex(centroids,
@@ -419,7 +402,7 @@ object AnnQueries {
       Ann.publishGeneration(spark, r, gen1)
       Ann.compactCurrent(spark, r)
       r
-    })
+    }
 
   def ivfLifecycle(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -430,21 +413,19 @@ object AnnQueries {
 
   /** Bench fixture hook ([[graft.Fixtures]], VERDICT r8 #2): force every
     * memoized derived input of this module — trained/persisted/upserted/
-    * lifecycle indexes and the scale-guard counts — to build NOW, so timed
-    * bench trials measure steady-state search/append/compact only and the
-    * artifact charges fixture cost to an explicit `fixture_secs` field. */
+    * lifecycle/random-projection/PQ/scaled-kNN indexes and the scale-guard
+    * counts — to build NOW, so timed bench trials measure steady-state
+    * search/append/compact only and the artifact charges fixture cost to
+    * an explicit `fixture_secs` field. */
   private[graft] def prebuildFixtures(spark: SparkSession, dir: String): Unit = {
-    import spark.implicits._
     gridIndex(spark, dir): Unit
     upsertedIndex(spark, dir): Unit
     lifecycleRootFor(spark, dir): Unit
     rpIndex(spark, dir): Unit
+    pqIndexFor(spark, dir): Unit
+    mutualKnnIndex(spark, dir): Unit
     Seq(4, 8, 16).foreach(k => elbowCentroidsFor(spark, dir, k): Unit)
-    baselineGuardCount.computeIfAbsent(dir,
-      _ => Tables.embeddings(spark, dir).count()): Unit
-    maxLabelCellCount.computeIfAbsent(dir, _ =>
-      Tables.embeddings(spark, dir).groupBy($"label")
-        .agg(count(lit(1)).as("n")).agg(max($"n")).head().getLong(0)): Unit
+    maxLabelCell(spark, dir): Unit
   }
 
   /** Cap for [[Ann.nearDupPairs]]' hot-cell sub-bucketing in the
@@ -452,10 +433,14 @@ object AnnQueries {
   private val HotCellCap = 10000
 
   /** Largest label-cell size per dir, one count job per JVM (memoized like
-    * [[baselineGuardCount]] so the guard never re-counts inside a timed
+    * [[embeddingCount]] so the guard never re-counts inside a timed
     * bench pass). */
-  private val maxLabelCellCount =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def maxLabelCell(spark: SparkSession, dir: String): Long =
+    Derived("ann.maxLabelCell", dir) {
+      import spark.implicits._
+      Tables.embeddings(spark, dir).groupBy($"label")
+        .agg(count(lit(1)).as("n")).agg(max($"n")).head().getLong(0)
+    }
 
   /** Gate-scale guard for the same-cell pair oracles (ADVICE r8): q31 and
     * q165's DuckDB replays recompute the UNGUARDED all-same-label pairing,
@@ -466,10 +451,7 @@ object AnnQueries {
     * label cell now fails FAST with this diagnostic instead. */
   private def requireGateCellScale(spark: SparkSession, dir: String,
       gate: String): Unit = {
-    import spark.implicits._
-    val n: Long = maxLabelCellCount.computeIfAbsent(dir, _ =>
-      Tables.embeddings(spark, dir).groupBy($"label")
-        .agg(count(lit(1)).as("n")).agg(max($"n")).head().getLong(0))
+    val n = maxLabelCell(spark, dir)
     require(n <= HotCellCap,
       s"$gate: a label cell holds $n vectors > hotCellCap=$HotCellCap — " +
         "Ann.nearDupPairs would sub-bucket it and the unguarded SQL oracle " +
@@ -562,14 +544,13 @@ object AnnQueries {
     * dir (ADVICE r7): the guard is a pure function of the on-disk corpus,
     * but an eager count() inside the builder would otherwise run inside
     * every timed bench pass and every plan-audit build of q148. */
-  private val baselineGuardCount =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def embeddingCount(spark: SparkSession, dir: String): Long =
+    Derived("ann.embeddingCount", dir)(Tables.embeddings(spark, dir).count())
 
   def mutualKnn(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
-    Ann.requireExactBaselineScale(
-      baselineGuardCount.computeIfAbsent(dir, _ => emb.count()),
+    Ann.requireExactBaselineScale(embeddingCount(spark, dir),
       MutualKnnExactCap, "q149 mutualKnnIvf")
     // both sides of the mutuality join read the edge list; cache so the
     // all-pairs top-k pass runs once, not once per join side
@@ -608,36 +589,12 @@ object AnnQueries {
     * Training cost rides the fixture (at warehouse scale the quantizer
     * trains on a bounded sample — the standard IVF recipe; the search
     * path this gate times is what must scale). */
-  private val scaledKnnIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, String, Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
-
   private def mutualKnnIndex(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    import spark.implicits._
-    val n = baselineGuardCount.computeIfAbsent(dir,
-      _ => Tables.embeddings(spark, dir).count())
-    val kCells = math.max(8L, n / 250L).toInt
-    if (kCells == 8) return gridIndex(spark, dir)
-    val (gp, cp, centRows, centSchema) =
-      scaledKnnIndex.computeIfAbsent(dir, _ => {
-        val iv = Tables.embeddings(spark, dir)
-          .select($"vec_id", Ann.gridQuantize($"embedding").as("embedding"))
-          .withColumn("seed", pmod($"vec_id", lit(kCells)).cast("int"))
-          .cache()
-        val centroids = Ann.trainCentroidsGrid(iv, "seed", iters = 2)
-        val scratch = graft.Scratch.fresh("graft_ivf_knn_")
-        val g = scratch.resolve("grid").toString
-        val c = scratch.resolve("celled").toString
-        iv.select($"vec_id", $"embedding").write.mode("overwrite").parquet(g)
-        Ann.probeCells(iv, centroids, nprobe = 2)
-          .write.mode("overwrite").parquet(c)
-        iv.unpersist()
-        (g, c, centroids.collect(), centroids.schema)
-      })
-    val centroids = spark.createDataFrame(
-      java.util.Arrays.asList(centRows: _*), centSchema)
-    (spark.read.parquet(gp), spark.read.parquet(cp), centroids)
+    val kCells = math.max(8L, embeddingCount(spark, dir) / 250L).toInt
+    if (kCells == 8) gridIndex(spark, dir)
+    else Derived("ann.scaledKnnIndex", dir)(
+      trainIvf(spark, dir, kCells, "graft_ivf_knn_")).frames(spark)
   }
 
   def mutualKnnIvf(spark: SparkSession, dir: String): DataFrame = {
@@ -699,18 +656,15 @@ object AnnQueries {
   }
 
   /** Persisted IVF index over the 32-dim RANDOM-PROJECTED vectors,
-    * memoized per dir like [[upsertedIndexPath]] — q169's shortlist
+    * memoized per dir like [[upsertedIndex]] — q169's shortlist
     * index (VERDICT r9 #2). Same recipe as [[gridIndex]] but on
     * [[Ann.signedProjection]] output (already exact integers — ±sums of
     * 1e-3-grid coordinates, no further quantization needed): seed
     * `pmod(vec_id, 8)`, 2 Lloyd iterations, ×2 corpus multi-assignment,
     * written with [[Ann.saveIndex]] so probed cells become partition
     * pruning at the scan. */
-  private val rpIndexPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def rpIndex(spark: SparkSession, dir: String): String =
-    rpIndexPath.computeIfAbsent(dir, _ => {
+    Derived("ann.rpIndex", dir) {
       import spark.implicits._
       val red = Ann.signedProjection(Tables.embeddings(spark, dir), 32)
         .withColumn("seed", pmod($"vec_id", lit(8)).cast("int"))
@@ -720,7 +674,7 @@ object AnnQueries {
       Ann.saveIndex(centroids, Ann.probeCells(red, centroids, nprobe = 2), path)
       red.unpersist(blocking = false)
       path
-    })
+    }
 
   /** Random-projection two-stage ANN gate (q169) — the shortlist-then-
     * rescore retrieval shape: embeddings drop 64 → 32 dims through
@@ -805,22 +759,18 @@ object AnnQueries {
         max($"e").as("max_e"))
   }
 
+  private val PqM = 4
+  private val PqSubDim = 16
+
   /** PQ index fixture per (JVM, dir): 4 × 16-d subspace codebooks (k=8,
     * the integer-grid Lloyd of [[gridIndex]] run per subspace) and the
     * corpus encoded as 4 one-byte codes per vector. Codebooks collect to
     * rows (O(m·k·subdim)) and rebuild as local relations so every
     * consumer broadcasts a literal; codes persist as parquet. */
-  private val pqIndex = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, Array[org.apache.spark.sql.Row],
-             org.apache.spark.sql.types.StructType)]()
-
-  private val PqM = 4
-  private val PqSubDim = 16
-
   private def pqIndexFor(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val (codesPath, bookRows, bookSchema) =
-      pqIndex.computeIfAbsent(dir, _ => {
+    val (codesPath, books) =
+      Derived("ann.pqIndex", dir) {
         import spark.implicits._
         val base = Tables.embeddings(spark, dir)
           .select($"vec_id", Ann.gridQuantize($"embedding").as("g")).cache()
@@ -839,14 +789,11 @@ object AnnQueries {
         val cp = scratch.resolve("pq_codes").toString
         parts.map(_._1).reduce(_ unionByName _)
           .write.mode("overwrite").parquet(cp)
-        val books = parts.map(_._2).reduce(_ unionByName _)
-        val collected = (books.collect(), books.schema)
+        val books = Derived.rows(parts.map(_._2).reduce(_ unionByName _))
         base.unpersist()
-        (cp, collected._1, collected._2)
-      })
-    (spark.read.parquet(codesPath),
-      spark.createDataFrame(
-        java.util.Arrays.asList(bookRows: _*), bookSchema))
+        (cp, books)
+      }
+    (spark.read.parquet(codesPath), books.toDF(spark))
   }
 
   /** PRODUCT-QUANTIZATION ANN with exact re-rank (q234) — the

@@ -254,12 +254,9 @@ object DedupQueries {
     * that needs them; they must not re-run the shingle/minhash/fixpoint
     * machinery per query. q105 itself keeps computing the fixpoint live —
     * it is the gate OF that machinery. */
-  private val clusterFramePath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[ops] def components(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = clusterFramePath.computeIfAbsent(dir, _ => {
+    val path = graft.Derived("dedup.components", dir) {
       val pairs = Dedup.minhashNearDups(Tables.documents(spark, dir),
         "doc_id", "text", ShingleSize, NumHashes, Bands, threshold = 0.3)
         .filter($"is_near_dup")
@@ -270,7 +267,7 @@ object DedupQueries {
         .select($"node".as("doc_id"), $"component")
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
     spark.read.parquet(path)
   }
 
@@ -299,6 +296,15 @@ object DedupQueries {
         when(h < "cc", "train").when(h < "e6", "val").otherwise("test"))
   }
 
+  private def sigsAndSets(slice: DataFrame): DataFrame = {
+    import slice.sparkSession.implicits._
+    slice.select($"doc_id",
+      explode(Dedup.wordShingles($"text", ShingleSize)).as("shingle"))
+      .groupBy($"doc_id")
+      .agg(collect_set($"shingle").as("shset"),
+        (0 until NumHashes).map(i => Dedup.minhash($"shingle", i).as(s"h$i")): _*)
+  }
+
   /** PERSISTED LSH dedup index probed by a DELTA (q160) — the dedup
     * analog of the q152/q157 IVF index lifecycle, and the shape an
     * incremental ingestion pipeline actually runs: "is today's batch a
@@ -316,30 +322,8 @@ object DedupQueries {
     * shared generation pointer (q157). Base = doc_id % 10 ≠ 0, delta =
     * doc_id % 10 = 0; output is the verified delta-vs-base near-dup
     * pairs. */
-  private val lshIndexRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Delta-batch signatures+sets checkpoint per dir (ADVICE r8): the delta
-    * frame feeds BOTH the band-key probe and the verification join, so it
-    * must be materialized once — but the previous `.cache()` per invocation
-    * pinned it in executor memory for the JVM lifetime (never unpersisted,
-    * re-cache warnings per bench pass, 2× footprint on a second sf dir). A
-    * parquet checkpoint in [[graft.Scratch]] gives the same one-shingling
-    * guarantee with file-backed reads instead of a leaked cache entry. */
-  private val lshDeltaPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def sigsAndSets(slice: DataFrame): DataFrame = {
-    import slice.sparkSession.implicits._
-    slice.select($"doc_id",
-      explode(Dedup.wordShingles($"text", ShingleSize)).as("shingle"))
-      .groupBy($"doc_id")
-      .agg(collect_set($"shingle").as("shset"),
-        (0 until NumHashes).map(i => Dedup.minhash($"shingle", i).as(s"h$i")): _*)
-  }
-
   private def lshRootFor(spark: SparkSession, dir: String): String =
-    lshIndexRoot.computeIfAbsent(dir, _ => {
+    graft.Derived("dedup.lshRoot", dir) {
       import spark.implicits._
       val base = sigsAndSets(
         Tables.documents(spark, dir).filter($"doc_id" % 10 =!= 0)).cache()
@@ -352,17 +336,24 @@ object DedupQueries {
       base.unpersist(blocking = false)
       graft.operators.Ann.publishGeneration(spark, r, gen)
       r
-    })
+    }
 
+  /** Delta-batch signatures+sets checkpoint per dir (ADVICE r8): the delta
+    * frame feeds BOTH the band-key probe and the verification join, so it
+    * must be materialized once — but the previous `.cache()` per invocation
+    * pinned it in executor memory for the JVM lifetime (never unpersisted,
+    * re-cache warnings per bench pass, 2× footprint on a second sf dir). A
+    * parquet checkpoint in [[graft.Scratch]] gives the same one-shingling
+    * guarantee with file-backed reads instead of a leaked cache entry. */
   private def lshDeltaFor(spark: SparkSession, dir: String): String =
-    lshDeltaPath.computeIfAbsent(dir, _ => {
+    graft.Derived("dedup.lshDelta", dir) {
       import spark.implicits._
       val p = graft.Scratch.named(s"q160_delta_${graft.Scratch.dirKey(dir)}")
         .resolve("delta").toString
       sigsAndSets(Tables.documents(spark, dir).filter($"doc_id" % 10 === 0))
         .write.mode("overwrite").parquet(p)
       p
-    })
+    }
 
   def lshIndexPersisted(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -402,11 +393,9 @@ object DedupQueries {
     * bench-fixtured; the gate times pointer-read + probe, not the
     * rewrite. Oracle: the full-corpus band-candidate replay restricted to
     * probe-side doc_a (%10 = 0), a ≠ b — both orders of an intra-delta
-    * pair appear, exactly as the engine's probe emits them. */
-  private val lshCompactRoot =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Source generation = q160's PUBLISHED index (read-only — its root and
+    * pair appear, exactly as the engine's probe emits them.
+    *
+    * Source generation = q160's PUBLISHED index (read-only — its root and
     * pointer are untouched); destination = this root's first generation.
     * That is exactly [[graft.operators.Ann.compactIndex]]'s source→dest
     * shape (q154), and it means the base corpus is shingled/minhashed
@@ -415,7 +404,7 @@ object DedupQueries {
     * version rebuilt the full base index a second time, ~3 s of
     * duplicated fixture work at sf0.1). */
   private def lshCompactedRootFor(spark: SparkSession, dir: String): String =
-    lshCompactRoot.computeIfAbsent(dir, _ => {
+    graft.Derived("dedup.lshCompactRoot", dir) {
       import spark.implicits._
       val srcGen = graft.operators.Ann.currentGenerationPath(
         spark, lshRootFor(spark, dir))
@@ -430,7 +419,7 @@ object DedupQueries {
         .write.mode("overwrite").parquet(s"$r/$gen/sets")
       graft.operators.Ann.publishGeneration(spark, r, gen)
       r
-    })
+    }
 
   def lshIndexCompacted(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -484,14 +473,13 @@ object DedupQueries {
     lshRootFor(spark, dir): Unit
     lshDeltaFor(spark, dir): Unit
     lshCompactedRootFor(spark, dir): Unit
-    sweepDenominator.computeIfAbsent(dir, _ =>
-      prefixFilterJoin(spark, dir).count()): Unit
+    sweepDenominator(spark, dir): Unit
   }
 
   /** q188's exact-pair denominator per (JVM, sf-dir) — see the fixture
     * note inside [[lshBandSweep]]. */
-  private val sweepDenominator =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private def sweepDenominator(spark: SparkSession, dir: String): Long =
+    graft.Derived("dedup.sweepDenominator", dir)(prefixFilterJoin(spark, dir).count())
 
   /** The banding configs of the q188 sweep: every divisor split of the
     * 12-hash signature from aggressive (12 bands × 1 row — catches
@@ -529,8 +517,7 @@ object DedupQueries {
     // memoized per (JVM, dir) like every derived input a gate reuses
     // (CLAUDE.md fixture rule), so the sweep times the BANDING trade-off
     // it claims to gate, not a per-pass rebuild of q112's exact join
-    val nTrueCount = sweepDenominator.computeIfAbsent(dir, _ =>
-      prefixFilterJoin(spark, dir).count())
+    val nTrueCount = sweepDenominator(spark, dir)
     val nTrue = spark.range(1).select(lit(nTrueCount).as("n_exact_true"))
     // r16 optimization, result-identical: the five configs' candidate sets
     // overlap heavily (a divisor split's pairs are largely a subset of the

@@ -1,10 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType}
 
-import graft.Tables
+import graft.{Derived, Scratch, Tables}
 
 /** Event-stream analytics over the `events` table — the batch twins of the
   * Structured Streaming surface (graft.streaming). The reference is pure
@@ -197,22 +198,53 @@ object EventQueries {
     * epoch-stamped advancer files. */
   private def stageCorpus(spark: SparkSession, drive: java.nio.file.Path,
       name: String, src: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val p = Paths.get(src)
-    if (Files.isRegularFile(p)) {
-      Files.createSymbolicLink(drive.resolve(name), p): Unit
-    } else {
-      val staging = graft.Scratch.fresh("corpus_stage_")
-      spark.read.parquet(src).coalesce(1)
-        .write.mode("overwrite").parquet(staging.toString)
-      val part = staging.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet")).get
-      val dst = drive.resolve(name)
-      Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(System.currentTimeMillis() - 3600_000L): Unit
-    }
+    val p = java.nio.file.Paths.get(src)
+    if (java.nio.file.Files.isRegularFile(p))
+      java.nio.file.Files.createSymbolicLink(drive.resolve(name), p): Unit
+    else writeDriveFile(spark.read.parquet(src), drive, name,
+      System.currentTimeMillis() - 3600_000L)
   }
+
+  /** Write `df` as ONE parquet file at `drive/name` with mtime `mtimeMs`
+    * (FileStreamSource lists oldest-first, so mtimes order a drive's
+    * batches): a coalesce(1) write to fresh staging, its part file moved
+    * into place. */
+  private def writeDriveFile(df: DataFrame, drive: java.nio.file.Path,
+      name: String, mtimeMs: Long = System.currentTimeMillis()): Unit = {
+    val staging = Scratch.fresh("drive_staging_")
+    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+    val part = staging.toFile.listFiles()
+      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
+    val dst = drive.resolve(name)
+    java.nio.file.Files.move(part.toPath, dst)
+    dst.toFile.setLastModified(mtimeMs): Unit
+  }
+
+  /** Max event time in µs of a RAW on-disk-schema events read (not
+    * Tables.events): a drive's synthetic rows must carry the SOURCE schema
+    * so the stream can union them, so their ts arithmetic dispatches on the
+    * corpus' actual encoding (long nanos vs timestamp micros); the plans
+    * normalize ts through Tables.rebuildNanosTs, as q81/q90. */
+  private def corpusMaxUs(raw: DataFrame): Long = raw.schema("ts").dataType match {
+    case LongType => raw.agg(max(col("ts"))).head().getLong(0) / 1000
+    case _ => Tables.rebuildNanosTs(raw).agg(max(unix_micros(col("ts")))).head().getLong(0)
+  }
+
+  /** `us` as a ts literal in the corpus' on-disk encoding `tsType`. */
+  private def encTs(tsType: DataType, us: Long): Column = tsType match {
+    case LongType => lit(us * 1000L)
+    case t => timestamp_micros(lit(us)).cast(t)
+  }
+
+  /** Synthetic drive rows in the events schema: `base` carries the columns
+    * that vary per row, `fixed` sets the others; value 0.0, props null. */
+  private def eventRows(base: DataFrame, fixed: (String, Column)*): DataFrame =
+    (fixed ++ Seq("value" -> lit(0.0), "props" -> lit(null).cast("string")))
+      .foldLeft(base) { case (df, (c, v)) => df.withColumn(c, v) }
+      .select("event_id", "ts", "user_id", "event_type", "value", "props")
+
+  /** Sentinel/flush offset: +100 days past the corpus' last event. */
+  private val FarFutureUs = 100L * 24 * 3600 * 1000000L
 
   /** Two-batch drive for the q216 LEFT-OUTER stream-stream join, memoized
     * per (JVM, dir): the corpus symlink, then a flush file holding one
@@ -221,45 +253,20 @@ object EventQueries {
     * BOTH sides must advance before buffered never-matched clicks can
     * emit their null rows and leave the state store. Encoding-dispatched
     * ts synthesis, the q92/q166 contract. */
-  private val q216Drive =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def q216DriveFor(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
-    val src = s"$dir/events.parquet"
-    q216Drive.computeIfAbsent(dir, _ => {
+  private def q216DriveFor(spark: SparkSession, dir: String): String =
+    Derived("event.q216Drive", dir) {
+      import spark.implicits._
+      val src = s"$dir/events.parquet"
       val raw = spark.read.parquet(src)
-      val tsType = raw.schema("ts").dataType
-      val maxUs = tsType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.agg(max($"ts")).head().getLong(0) / 1000
-        case _ =>
-          Tables.rebuildNanosTs(raw)
-            .agg(max(unix_micros($"ts"))).head().getLong(0)
-      }
-      def encTs(us: Long) = tsType match {
-        case org.apache.spark.sql.types.LongType => lit(us * 1000L)
-        case t => timestamp_micros(lit(us)).cast(t)
-      }
-      val drive = graft.Scratch.named(s"q216_drive_${graft.Scratch.dirKey(dir)}")
+      val maxUs = corpusMaxUs(raw)
+      val drive = Scratch.named(s"q216_drive_${Scratch.dirKey(dir)}")
       stageCorpus(spark, drive, "aa_events.parquet", src)
-      val staging = graft.Scratch.fresh("q216_staging_")
-      Seq(("click", -2L), ("error", -3L)).toDF("event_type", "event_id")
-        .withColumn("ts", encTs(maxUs + 100L * 24 * 3600 * 1000000L))
-        .withColumn("user_id", lit(-1L))
-        .withColumn("value", lit(0.0))
-        .withColumn("props", lit(null).cast("string"))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = staging.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      val dst = drive.resolve("zz_flush.parquet")
-      Files.move(part.toPath, dst)
-      dst.toFile.setLastModified(System.currentTimeMillis()): Unit
+      writeDriveFile(eventRows(
+        Seq(("click", -2L), ("error", -3L)).toDF("event_type", "event_id"),
+        "ts" -> encTs(raw.schema("ts").dataType, maxUs + FarFutureUs),
+        "user_id" -> lit(-1L)), drive, "zz_flush.parquet")
       drive.toString
-    })
-  }
+    }
 
   /** LEFT-OUTER stream-stream join as a gate query (q216) — the outer
     * half of q90's join-state class, and the part with genuinely
@@ -337,53 +344,20 @@ object EventQueries {
     * not per-pass sentinel-file construction (the fixture convention;
     * [[graft.Scratch.named]] dirs are deleted at JVM exit, never mid-run,
     * so every later pass re-lists the same complete drive). */
-  private val q92Drive =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, java.lang.Long)]()
-
   private def q92DriveFor(spark: SparkSession, dir: String): (String, Long) = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
     Tables.enableNanosRead(spark)
-    val src = s"$dir/events.parquet"
-    val (drivePath, sentinelBoxed) = q92Drive.computeIfAbsent(dir, _ => {
-      // raw on-disk-schema read (not Tables.events): the sentinel file must
-      // carry the SOURCE schema so the stream can union them; the ts
-      // normalization goes through Tables.rebuildNanosTs inside the plan,
-      // as q81/q90. The sentinel arithmetic below therefore dispatches on
-      // the corpus' actual ts encoding (long nanos vs timestamp micros).
+    Derived("event.q92Drive", dir) {
+      val src = s"$dir/events.parquet"
       val raw = spark.read.parquet(src)
-      val tsType = raw.schema("ts").dataType
-      val maxUs = tsType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.agg(max($"ts")).head().getLong(0) / 1000
-        case _ =>
-          Tables.rebuildNanosTs(raw)
-            .agg(max(unix_micros($"ts"))).head().getLong(0)
-      }
-      val sentinelUs = maxUs + 100L * 24 * 3600 * 1000000L
-      // emit the sentinel ts in the same encoding the corpus uses, so the
-      // sentinel parquet's schema unions cleanly with the source files
-      val sentinelTs = tsType match {
-        case org.apache.spark.sql.types.LongType => lit(sentinelUs * 1000L)
-        case t => timestamp_micros(lit(sentinelUs)).cast(t)
-      }
-      val drive = graft.Scratch.named(s"q92_drive_${graft.Scratch.dirKey(dir)}")
-      val staging = graft.Scratch.fresh("q92_staging_")
-      raw.select($"user_id").distinct()
-        .withColumn("event_id", lit(-1L))
-        .withColumn("ts", sentinelTs)
-        .withColumn("event_type", lit("sentinel"))
-        .withColumn("value", lit(0.0))
-        .withColumn("props", lit(null).cast("string"))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-      val part = staging.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, drive.resolve("zz_sentinel.parquet"))
+      val sentinelUs = corpusMaxUs(raw) + FarFutureUs
+      val drive = Scratch.named(s"q92_drive_${Scratch.dirKey(dir)}")
+      writeDriveFile(eventRows(raw.select(col("user_id")).distinct(),
+        "event_id" -> lit(-1L),
+        "ts" -> encTs(raw.schema("ts").dataType, sentinelUs),
+        "event_type" -> lit("sentinel")), drive, "zz_sentinel.parquet")
       stageCorpus(spark, drive, "aa_events.parquet", src)
-      (drive.toString, java.lang.Long.valueOf(sentinelUs))
-    })
-    (drivePath, sentinelBoxed.longValue)
+      (drive.toString, sentinelUs)
+    }
   }
 
   def streamingSessions(spark: SparkSession, dir: String): DataFrame = {
@@ -529,31 +503,19 @@ object EventQueries {
     * the oracle is split-independent (the final per-key emission must
     * equal the global aggregate), the split only forces REAL mid-window
     * re-emissions. */
-  private val q194Drive =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def q194DriveFor(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    import java.nio.file.Files
     Tables.enableNanosRead(spark)
-    q194Drive.computeIfAbsent(dir, _ => {
+    Derived("event.q194Drive", dir) {
       val fixed = Tables.events(spark, dir)
       val (mn, mx) = fixed.agg(min(unix_micros($"ts")), max(unix_micros($"ts")))
         .as[(Long, Long)].head()
       val mid = mn + (mx - mn) / 2
-      val drive = graft.Scratch.named(s"q194_drive_${graft.Scratch.dirKey(dir)}")
-      def writeSlice(name: String, pred: org.apache.spark.sql.Column): Unit = {
-        val staging = graft.Scratch.fresh("q194_staging_")
-        fixed.filter(pred).coalesce(1).write.mode("overwrite")
-          .parquet(staging.toString)
-        val part = staging.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-        Files.move(part.toPath, drive.resolve(name))
-      }
-      writeSlice("aa_early.parquet", unix_micros($"ts") <= mid)
-      writeSlice("bb_late.parquet", unix_micros($"ts") > mid)
+      val drive = Scratch.named(s"q194_drive_${Scratch.dirKey(dir)}")
+      writeDriveFile(fixed.filter(unix_micros($"ts") <= mid), drive, "aa_early.parquet")
+      writeDriveFile(fixed.filter(unix_micros($"ts") > mid), drive, "bb_late.parquet")
       drive.toString
-    })
+    }
   }
 
   /** STREAMING MERGE SINK (q252) — the streaming and lakehouse halves of
@@ -653,7 +615,7 @@ object EventQueries {
     val drive = graft.Scratch.fresh("q184_drive_")
     stageCorpus(spark, drive, "aa_events.parquet", s"$dir/events.parquet")
     val out = graft.Scratch.fresh("q184_out_").resolve("batches").toString
-    val ckpt = graft.Scratch.freshFast("ckpt_q184_").resolve("ckpt").toString
+    val ckpt = graft.Scratch.fresh("ckpt_q184_").resolve("ckpt").toString
     val plan: DataFrame => DataFrame = ev =>
       graft.streaming.Streaming.twsCountSum(
         Tables.rebuildNanosTs(ev)
@@ -714,7 +676,7 @@ object EventQueries {
     Tables.enableNanosRead(spark)
     val drivePath = q194DriveFor(spark, dir)
     val out = graft.Scratch.fresh("q201_out_").resolve("batches").toString
-    val ckpt = graft.Scratch.freshFast("ckpt_q201_").resolve("ckpt").toString
+    val ckpt = graft.Scratch.fresh("ckpt_q201_").resolve("ckpt").toString
     val plan: DataFrame => DataFrame = ev =>
       graft.streaming.Streaming.hourlyCounts(Tables.rebuildNanosTs(ev))
     def run(phase: String): Unit =
@@ -777,74 +739,42 @@ object EventQueries {
     * oracle replays the watermark arithmetic and the pinned `>` boundary
     * in SQL. */
   /** Memoized q166 drive source per (JVM, sf-dir) — same fixture
-    * convention as [[q92Drive]]: the advance/gap/flush files and the
+    * convention as [[q92DriveFor]]: the advance/gap/flush files and the
     * corpus symlink are a pure function of the corpus, built once. */
-  private val lateDrive =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def lateDriveFor(spark: SparkSession, dir: String): String = {
-    import spark.implicits._
-    import java.nio.file.{Files, Paths}
     Tables.enableNanosRead(spark)
-    val src = s"$dir/events.parquet"
-    lateDrive.computeIfAbsent(dir, _ => {
-      // raw on-disk-schema read + encoding-dispatched sentinel arithmetic,
-      // exactly the q92 contract (the constructed files must union with the
-      // source schema; normalization happens inside the plan via the bridge)
+    Derived("event.q166Drive", dir) {
+      val src = s"$dir/events.parquet"
       val raw = spark.read.parquet(src)
-      val tsType = raw.schema("ts").dataType
-      val maxUs = tsType match {
-        case org.apache.spark.sql.types.LongType =>
-          raw.agg(max($"ts")).head().getLong(0) / 1000
-        case _ =>
-          Tables.rebuildNanosTs(raw)
-            .agg(max(unix_micros($"ts"))).head().getLong(0)
-      }
-      def encTs(us: Long) = tsType match {
-        case org.apache.spark.sql.types.LongType => lit(us * 1000L)
-        case t => timestamp_micros(lit(us)).cast(t)
-      }
-      val drive = graft.Scratch.named(s"q166_drive_${graft.Scratch.dirKey(dir)}")
-      val staging = graft.Scratch.fresh("q166_staging_")
-      def writeOne(name: String, df: DataFrame, mtimeMs: Long): Unit = {
-        df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-        val part = staging.toFile.listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-        val dst = drive.resolve(name)
-        Files.move(part.toPath, dst)
-        dst.toFile.setLastModified(mtimeMs): Unit
-      }
+      val maxUs = corpusMaxUs(raw)
+      val drive = Scratch.named(s"q166_drive_${Scratch.dirKey(dir)}")
       def synth(eventId: Long, tsUs: Long, types: DataFrame): DataFrame =
-        types
-          .withColumn("event_id", lit(eventId))
-          .withColumn("ts", encTs(tsUs))
-          .withColumn("user_id", lit(-1L))
-          .withColumn("value", lit(0.0))
-          .withColumn("props", lit(null).cast("string"))
-          .select("event_id", "ts", "user_id", "event_type", "value", "props")
+        eventRows(types, "event_id" -> lit(eventId),
+          "ts" -> encTs(raw.schema("ts").dataType, tsUs), "user_id" -> lit(-1L))
       val advancerType = spark.range(1).select(lit("advancer").as("event_type"))
       // mtimes pin FileStreamSource's oldest-first order: epoch-adjacent
       // for the constructed advance/gap files (older than any corpus
       // file), the corpus symlink keeps its target's mtime, flush is now
-      writeOne("a_advance.parquet", synth(-2L, maxUs, advancerType), 1000L)
-      writeOne("b_gap.parquet", synth(-3L, maxUs, advancerType), 2000L)
+      writeDriveFile(synth(-2L, maxUs, advancerType), drive, "a_advance.parquet", 1000L)
+      writeDriveFile(synth(-3L, maxUs, advancerType), drive, "b_gap.parquet", 2000L)
       stageCorpus(spark, drive, "c_events.parquet", src)
-      val flushTypes = raw.select($"event_type").distinct()
+      val flushTypes = raw.select(col("event_type")).distinct()
         .unionByName(advancerType)
-      writeOne("d_flush.parquet",
-        synth(-1L, maxUs + 100L * 24 * 3600 * 1000000L, flushTypes),
-        System.currentTimeMillis())
+      writeDriveFile(synth(-1L, maxUs + FarFutureUs, flushTypes), drive,
+        "d_flush.parquet")
       drive.toString
-    })
+    }
   }
 
   /** Bench fixture hook ([[graft.Fixtures]]): the memoized streaming drive
-    * sources (q92 sentinels, q166 advance/gap/flush files). */
+    * sources (q92 sentinels, q166 advance/gap/flush files, q194's time
+    * split, q216's per-side flush, q308's three-batch drive). */
   private[graft] def prebuildFixtures(spark: SparkSession, dir: String): Unit = {
     q92DriveFor(spark, dir): Unit
     lateDriveFor(spark, dir): Unit
     q194DriveFor(spark, dir): Unit
     q216DriveFor(spark, dir): Unit
+    q308DriveFor(spark, dir): Unit
   }
 
   def streamingLateData(spark: SparkSession, dir: String): DataFrame = {
@@ -2175,21 +2105,18 @@ object EventQueries {
     * micro-batch races `stop()`. The third (data) batch runs with the
     * sentinel-advanced watermark, so every real session MUST emit before
     * the drive returns. Pure symlinks; nothing new is written. */
-  private val q308Drive =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def q308DriveFor(spark: SparkSession, dir: String): String =
-    q308Drive.computeIfAbsent(dir, _ => {
+    Derived("event.q308Drive", dir) {
       import java.nio.file.{Files, Paths}
       val (q92drive, _) = q92DriveFor(spark, dir)
-      val drive = graft.Scratch.named(s"q308_drive_${graft.Scratch.dirKey(dir)}")
+      val drive = Scratch.named(s"q308_drive_${Scratch.dirKey(dir)}")
       stageCorpus(spark, drive, "aa_events.parquet", s"$dir/events.parquet")
       Files.createSymbolicLink(drive.resolve("ww_sentinel.parquet"),
         Paths.get(s"$q92drive/zz_sentinel.parquet"))
       Files.createSymbolicLink(drive.resolve("zz_sentinel2.parquet"),
         Paths.get(s"$q92drive/zz_sentinel.parquet"))
       drive.toString
-    })
+    }
 
   def streamingSessionWindow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._

@@ -277,12 +277,9 @@ object ExtendedQueries {
     * gate, not its fixture build); [[prebuildDecileGrid]] lets Bench
     * charge the 27-value build to `fixture_secs`. Values are identical to
     * the live derivation's — the narrowing loop is deterministic. */
-  private val decileGridCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Int, Long)]]()
-
   private def decileGridFixture(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    decileGridCache.computeIfAbsent(dir, _ => decileGridRows(spark, dir))
+    graft.Derived("extended.decileGrid", dir)(decileGridRows(spark, dir))
       .toDF("l_returnflag", "decile", "cut_halfcents")
   }
 
@@ -1458,16 +1455,11 @@ object ExtendedQueries {
     * sf-dir); [[prebuildPairLattice]] lets Bench charge the build to
     * `fixture_secs`. Values identical to the live lattice's — every count
     * is an exact integer aggregate. */
-  private val pairLatticeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (Array[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType)]()
-
-  private def frequentPairsFixture(spark: SparkSession, dir: String): DataFrame = {
-    val (rows, schema) = pairLatticeCache.computeIfAbsent(dir, _ => {
+  private def frequentPairsFixture(spark: SparkSession, dir: String): DataFrame =
+    graft.Derived("extended.pairLattice", dir) {
       val (pairs, _, _) = frequentPairLattice(spark, dir)
-      (pairs.collect(), pairs.schema)
-    })
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-  }
+      graft.Derived.rows(pairs)
+    }.toDF(spark)
 
   /** Bench fixture hook ([[graft.Fixtures]]): q344's mined pair frame —
     * the gate times the rule expansion it claims, not the q244 lattice

@@ -362,19 +362,15 @@ object PipelineQueries {
     * query. q302 itself keeps computing the pairs live — it is the gate
     * OF that machinery. Built once per (JVM, sf-dir); [[prebuildLinkage]]
     * lets Bench charge the build to `fixture_secs`. */
-  private val linkagePairsPath =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[ops] def linkagePairsFixture(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val path = linkagePairsPath.computeIfAbsent(dir, _ => {
+    spark.read.parquet(graft.Derived("pipeline.linkagePairs", dir) {
       val p = graft.Scratch.named(s"linkage_${graft.Scratch.dirKey(dir)}")
         .resolve("pairs").toString
       symspellPairs(Tables.customer(spark, dir).select($"c_name".as("name")))
         .write.mode("overwrite").parquet(p)
       p
     })
-    spark.read.parquet(path)
   }
 
   /** Bench fixture hook ([[graft.Fixtures]]): q329's verified pair set —
@@ -721,17 +717,14 @@ object PipelineQueries {
     * built once per (JVM, dir): 64 part files — the shape a per-batch
     * streaming sink (q140/q184/q194) leaves behind after a day of
     * micro-batches. */
-  private val fragmentedBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def fragmentedDocs(spark: SparkSession, dir: String): String =
-    fragmentedBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("pipeline.fragmentedDocs", dir) {
       val out = graft.Scratch.named(s"q203_${graft.Scratch.dirKey(dir)}")
         .resolve("docs_fragmented").toString
       Tables.documents(spark, dir).repartition(64)
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** DATA-FILE COMPACTION with manifest reconciliation (q203, VERDICT r10
     * #4) — the maintenance op the engine's own streaming sinks create the

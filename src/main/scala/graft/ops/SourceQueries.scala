@@ -199,12 +199,9 @@ object SourceQueries {
     * a STORED column — is written to parquet and read back, so the optimizer
     * cannot statically derive `ship_month` from a `yr` predicate and
     * dynamic partition pruning is the only scan-killer available. */
-  private val dppBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private def dppTables(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    dppBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.dppTables", dir) {
       val scratch = graft.Scratch.named(s"q183_${graft.Scratch.dirKey(dir)}")
       val factPath = scratch.resolve("li_bymonth").toString
       val dimPath = scratch.resolve("months").toString
@@ -216,7 +213,7 @@ object SourceQueries {
         .withColumn("yr", substring($"ship_month", 1, 4))
         .coalesce(1).write.mode("overwrite").parquet(dimPath)
       (factPath, dimPath)
-    })
+    }
   }
 
   /** DYNAMIC PARTITION PRUNING gate (q183, VERDICT r9 #3) — the
@@ -247,12 +244,9 @@ object SourceQueries {
   /** Two-generation evolved layout for q189, built once per (JVM, dir):
     * generation 1 written by an "old" writer (doc_id, text, lang only);
     * generation 2 by a "new" writer that added `source` and `n_chars`. */
-  private val evolvedBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def evolvedLayout(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    evolvedBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.evolvedLayout", dir) {
       val out = graft.Scratch.named(s"q189_${graft.Scratch.dirKey(dir)}")
         .resolve("docs_evolved").toString
       val docs = Tables.documents(spark, dir)
@@ -263,7 +257,7 @@ object SourceQueries {
         .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
         .write.mode("overwrite").parquet(s"$out/gen=2")
       out
-    })
+    }
   }
 
   /** SCHEMA-EVOLUTION read gate (q189) — the lakehouse fact of life every
@@ -294,12 +288,9 @@ object SourceQueries {
     * `ship_day` (every row group covers a narrow date slice) and once
     * deterministically scrambled by a hash (every row group spans the full
     * seven-year range, so min/max stats can never exclude it). */
-  private val skipBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private[graft] def skipLayouts(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    skipBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.skipLayouts", dir) {
       val scratch = graft.Scratch.named(s"q202_${graft.Scratch.dirKey(dir)}")
       val sortedPath = scratch.resolve("li_sorted").toString
       val scrambledPath = scratch.resolve("li_scrambled").toString
@@ -315,7 +306,7 @@ object SourceQueries {
       write(li.sortWithinPartitions(md5(concat_ws("|",
         $"l_orderkey", $"l_linenumber"))), scrambledPath)
       (sortedPath, scrambledPath)
-    })
+    }
   }
 
   /** ROW-GROUP DATA SKIPPING gate (q202, VERDICT r10 #3) — the scan-killer
@@ -391,12 +382,9 @@ object SourceQueries {
     * file-statistics TABLE a lakehouse log keeps (file_path, min/max
     * ship_day, n_rows), derived in one scan via `_metadata.file_path` and
     * persisted as parquet — stats live beside the data, not in it. */
-  private val zoneMapBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private[graft] def zoneMapLayout(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    zoneMapBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.zoneMapLayout", dir) {
       val scratch = graft.Scratch.named(s"q229_${graft.Scratch.dirKey(dir)}")
       val dataPath = scratch.resolve("li_zones").toString
       val statsPath = scratch.resolve("li_zonemap").toString
@@ -411,7 +399,7 @@ object SourceQueries {
           count(lit(1)).as("n_rows"))
         .write.mode("overwrite").parquet(statsPath)
       (dataPath, statsPath)
-    })
+    }
   }
 
   /** ZONE-MAP FILE PRUNING (q229) — data skipping one level ABOVE q202's
@@ -457,12 +445,9 @@ object SourceQueries {
     * scan of the base (`_metadata.file_path` / `_metadata.row_index`) and
     * the doc_id is dropped on purpose; a reader that can't reproduce the
     * same positions cannot reconstruct the table. */
-  private val morBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   private[graft] def morLayout(spark: SparkSession, dir: String): (String, String) = {
     import spark.implicits._
-    morBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.morLayout", dir) {
       val scratch = graft.Scratch.named(s"q230_${graft.Scratch.dirKey(dir)}")
       val basePath = scratch.resolve("docs_base").toString
       val delPath = scratch.resolve("docs_deletes").toString
@@ -476,7 +461,7 @@ object SourceQueries {
           col("_metadata.row_index").as("row_index"))
         .write.mode("overwrite").parquet(delPath)
       (basePath, delPath)
-    })
+    }
   }
 
   /** MERGE-ON-READ POSITIONAL DELETES (q230) — the OTHER half of the
@@ -526,9 +511,6 @@ object SourceQueries {
     * partitioned by `c_custkey % 16`, built once per (JVM, dir). The
     * bucket IS the copy-on-write unit: an upsert rewrites only the bucket
     * directories its keys land in. */
-  private val mergeRootBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def mergeRoot(spark: SparkSession, dir: String): String =
     mergeRootTagged(spark, dir, "q205")
 
@@ -538,7 +520,7 @@ object SourceQueries {
     * `_CURRENT` means for the upsert-only oracles. */
   private def mergeRootTagged(spark: SparkSession, dir: String,
       tag: String): String =
-    mergeRootBuilt.computeIfAbsent(s"$dir#$tag", _ => {
+    graft.Derived("source.mergeRoot", s"$dir#$tag") {
       import spark.implicits._
       val root = graft.Scratch.named(s"${tag}_${graft.Scratch.dirKey(dir)}").toString
       val gen = graft.operators.Ann.nextGenerationName(spark, root)
@@ -547,7 +529,7 @@ object SourceQueries {
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$root/$gen")
       graft.operators.Ann.publishGeneration(spark, root, gen)
       root
-    })
+    }
 
   /** The deterministic upsert delta: UPDATES (+100.00 to every account in
     * bucket 3) and INSERTS (bucket-7 keys re-keyed +1,000,000 — exactly
@@ -695,11 +677,8 @@ object SourceQueries {
     * generation (the `c_custkey % 10 = 0` slice — a writer that died
     * before publish), and one STRAY temp file at the root (an aborted
     * task's leftover, 25 nation rows). Built once per (JVM, dir). */
-  private val orphanRootBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def orphanRoot(spark: SparkSession, dir: String): String =
-    orphanRootBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.orphanRoot", dir) {
       import org.apache.spark.sql.functions.col
       val root = graft.Scratch.named(s"q316_${graft.Scratch.dirKey(dir)}").toString
       val cust = Tables.customer(spark, dir)
@@ -711,7 +690,7 @@ object SourceQueries {
       Tables.nation(spark, dir).coalesce(1)
         .write.mode("overwrite").parquet(s"$root/_tmp_orphan.parquet")
       root
-    })
+    }
 
   /** ORPHAN-FILE AUDIT (q316) — the reconciliation pass that must run
     * BEFORE any vacuum deletes (q213 reclaims what this report flags):
@@ -744,11 +723,8 @@ object SourceQueries {
       .agg(count(lit(1)).as("n_entries"), sum($"n_rows").as("n_rows"))
   }
 
-  private val wapRootBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def wapRoot(spark: SparkSession, dir: String): String =
-    wapRootBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.wapRoot", dir) {
       val root = graft.Scratch.named(s"q242_${graft.Scratch.dirKey(dir)}").toString
       val gen = graft.operators.Ann.nextGenerationName(spark, root)
       Tables.customer(spark, dir)
@@ -758,7 +734,7 @@ object SourceQueries {
         .write.mode("overwrite").parquet(s"$root/$gen")
       graft.operators.Ann.publishGeneration(spark, root, gen)
       root
-    })
+    }
 
   /** WRITE-AUDIT-PUBLISH (q242) — the governance contract on top of the
     * snapshot model (Iceberg's WAP / staging-branch pattern): a writer
@@ -1143,10 +1119,8 @@ object SourceQueries {
   /** q226's retention root, built once per (JVM, dir): gen-000001 is a
     * PURE REFERENCE generation — every ship_month directory of the q183
     * month-partitioned fact symlinked in, zero bytes copied. */
-  private val retentionBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def retentionRoot(spark: SparkSession, dir: String): String =
-    retentionBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.retentionRoot", dir) {
       import java.nio.file.{Files, Paths}
       val (factPath, _) = dppTables(spark, dir)
       val root = graft.Scratch.named(s"q226_${graft.Scratch.dirKey(dir)}").toString
@@ -1159,7 +1133,7 @@ object SourceQueries {
       }
       graft.operators.Ann.publishGeneration(spark, root, "gen-000001")
       root
-    })
+    }
 
   /** PARTITION-LEVEL RETENTION (q226) — TTL enforcement as the
     * maintenance op a partitioned time-series table actually runs:
@@ -1225,17 +1199,15 @@ object SourceQueries {
     * view columns), checkpointed through parquet and memoized per
     * (JVM, dir) like the co-purchase edge fixture — the maintenance job
     * must SCAN this, never re-derive it. */
-  private val ivmBaseView = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[ops] def ivmBasePath(spark: SparkSession, dir: String): String =
-    ivmBaseView.computeIfAbsent(dir, _ => {
+    graft.Derived("source.ivmBaseView", dir) {
       val (oBase, _, lBase, _) = ivmSplits(spark, dir)
       val out = graft.Scratch.fresh("q220_base_").resolve("view").toString
       oBase.join(lBase, col("o_orderkey") === col("l_orderkey"))
         .select(col("ym"), col("rev"))
         .write.mode("overwrite").parquet(out)
       out
-    })
+    }
 
   /** INCREMENTAL JOIN-VIEW MAINTENANCE (q220) — the delta-join algebra
     * for a MATERIALIZED JOIN (q209 maintains an aggregate; this maintains
@@ -1271,17 +1243,15 @@ object SourceQueries {
 
   /** q221's bucket-transform layout (16 buckets of l_orderkey), memoized
     * per (JVM, dir) — write-once/look-up-many by contract. */
-  private val hiddenLayoutPath = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private[graft] def hiddenLayout(spark: SparkSession, dir: String): String =
-    hiddenLayoutPath.computeIfAbsent(dir, _ => {
+    graft.Derived("source.hiddenLayout", dir) {
       val out = graft.Scratch.fresh("q221_hidden_").resolve("li").toString
       graft.sources.Sources.writeKeyBucketed(
         Tables.lineitem(spark, dir)
           .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice")),
         out, "l_orderkey", 16, "okey_bucket")
       out
-    })
+    }
 
   /** HIDDEN-PARTITION POINT LOOKUP (q221) — Iceberg-style transform
     * partitioning ([[graft.sources.Sources.readKeyLookup]]): the layout
@@ -1306,8 +1276,11 @@ object SourceQueries {
   /** Bench fixture hook ([[graft.Fixtures]], VERDICT r8 #2): the bucketed
     * fact tables (write-once/join-many by contract), the q183
     * month-partitioned fact + dim, the q189 evolved layout, the q202
-    * sorted/scrambled skipping pair, the q220 base join-view checkpoint,
-    * and the q221 hidden-partition layout. */
+    * sorted/scrambled skipping pair, the q229 zone maps, the q230
+    * merge-on-read base, the q220 base join-view checkpoint, the q221
+    * hidden-partition layout, the q305 blobs, and the generation roots
+    * (every merge tag, q316's orphan root, q242's WAP root, q226's
+    * retention root). */
   private[graft] def prebuildFixtures(spark: SparkSession, dir: String): Unit = {
     bucketedTables(spark, dir): Unit
     dppTables(spark, dir): Unit
@@ -1318,17 +1291,18 @@ object SourceQueries {
     ivmBasePath(spark, dir): Unit
     hiddenLayout(spark, dir): Unit
     blobDir(spark, dir): Unit
+    Seq("q205", "q211", "q225").foreach(tag => mergeRootTagged(spark, dir, tag): Unit)
+    orphanRoot(spark, dir): Unit
+    wapRoot(spark, dir): Unit
+    retentionRoot(spark, dir): Unit
   }
 
   /** One blob file per document (`doc_<id>.txt`, UTF-8 of `text`), written
     * from the EXECUTORS (foreachPartition + java.nio — a distributed
     * object-store export, no driver collect), built once per (JVM, dir):
     * the q305 gate times the binaryFile SCAN it claims, not this export. */
-  private val blobBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def blobDir(spark: SparkSession, dir: String): String =
-    blobBuilt.computeIfAbsent(dir, _ => {
+    graft.Derived("source.blobDir", dir) {
       import spark.implicits._
       val out = graft.Scratch.named(s"q305_${graft.Scratch.dirKey(dir)}")
         .resolve("blobs")
@@ -1343,7 +1317,7 @@ object SourceQueries {
           }
         }
       outS
-    })
+    }
 
   /** MULTIMODAL BLOB SOURCE (q305): scan a directory of opaque per-document
     * files with Spark's `binaryFile` source — the ingestion shape every

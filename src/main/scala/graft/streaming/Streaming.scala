@@ -412,32 +412,6 @@ object Streaming {
     spark.readStream.schema(schema).options(options).parquet(path)
   }
 
-  /** Scale-ADAPTIVE state-store partition count (r15, guide §2 "derive
-    * partitioning from input size, never a constant tuned for either
-    * local mode or the cluster"): one state partition per 32 MiB of
-    * source bytes, floor 2. The old constant 8 was the r4 fix for the
-    * same disease one level up (32 = CPU count), but it still paid
-    * ~0.1 s of per-partition state-store commit + task-launch machinery
-    * per drive for toy state: the q216 drive measured 3.66–3.99 s at
-    * np=8 vs 2.67–2.91 s at np=2 with byte-identical output (19 870
-    * rows), and the saving is pure fixed overhead — batch 2 of that
-    * drive carries ZERO input rows yet cost 745 ms at np=8 (all
-    * addBatch) vs 382 ms at np=2. A deployment pins the count with
-    * `SPARK_GRAFT_STATE_PARTITIONS` (state sizing is an operational
-    * decision; the 32 MiB divisor is a default, not a law). Recovery
-    * safety: a streaming checkpoint persists its own
-    * `spark.sql.shuffle.partitions` in the offset-log conf and reuses
-    * it on restart, so q184's two-invocation recovery pair cannot
-    * diverge even if the derived count changed between runs. */
-  private[streaming] def statePartitionsFor(source: String): Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").map(_.toInt).getOrElse {
-      def bytes(f: java.io.File): Long =
-        if (f.isFile) f.length
-        else Option(f.listFiles).map(_.map(bytes).sum).getOrElse(0L)
-      val b = bytes(new java.io.File(source))
-      math.max(2L, (b + (32L << 20) - 1) / (32L << 20)).toInt
-    }
-
   /** Run `body` with `spark.sql.shuffle.partitions` (= the stateful
     * operators' state-store partition count) sized to the drive's state
     * volume instead of the batch session's CPU count, restoring after.
@@ -446,7 +420,18 @@ object Streaming {
     * the state files, fsyncs, and per-batch task launches for toy state
     * (the ~12-14 s streaming-family fixed overhead of VERDICT r4 #6 was
     * dominated by exactly this). `n = 0` (the drive helpers' default)
-    * derives the count from the source via [[statePartitionsFor]].
+    * derives the count from the source's bytes: one state partition per
+    * 32 MiB, floor 2 ([[graft.Tables.partitionsFor]]; r15, guide §2
+    * "derive partitioning from input size"). The old constant 8 paid
+    * ~0.1 s of per-partition state-store commit + task-launch machinery
+    * per drive for toy state: the q216 drive measured 3.66–3.99 s at
+    * np=8 vs 2.67–2.91 s at np=2 with byte-identical output (19 870
+    * rows), and batch 2 of that drive carries ZERO input rows yet cost
+    * 745 ms at np=8 (all addBatch) vs 382 ms at np=2. Recovery safety: a
+    * streaming checkpoint persists its own `spark.sql.shuffle.partitions`
+    * in the offset-log conf and reuses it on restart, so q184's
+    * two-invocation recovery pair cannot diverge even if the derived
+    * count changed between runs.
     *
     * CONTRACT: the conf change is SESSION-GLOBAL while `body` runs — any
     * batch query planned concurrently in the same session would silently
@@ -455,9 +440,11 @@ object Streaming {
     * helper supports; a host that plans batch work concurrently with a
     * streaming drive must run the drive in `spark.cloneSession()` (per-
     * session conf isolation) instead. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
+  private def withStatePartitions[A](spark: SparkSession, n: Int,
+      source: String)(body: => A): A = {
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    spark.conf.set("spark.sql.shuffle.partitions",
+      (if (n > 0) n else graft.Tables.partitionsFor(source, floor = 2)).toString)
     try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
@@ -474,7 +461,7 @@ object Streaming {
       statePartitions: Int = 0,
       checkpointDir: Option[String] = None,
       outputMode: String = "append"): Unit = withStatePartitions(spark,
-    if (statePartitions > 0) statePartitions else statePartitionsFor(sourceDir)) {
+    statePartitions, sourceDir) {
     val stream = fileStream(spark, sourceDir, sourceOptions)
     val q = plan(stream).writeStream
       .outputMode(outputMode)
@@ -482,7 +469,7 @@ object Streaming {
         batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
       }
       .option("checkpointLocation", checkpointDir.getOrElse(
-        graft.Scratch.freshFast(s"ckpt_${name}_").resolve("ckpt").toString))
+        graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString))
       .queryName(name)
       .start()
     try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
@@ -503,8 +490,7 @@ object Streaming {
       delta: DataFrame => DataFrame, name: String,
       sourceOptions: Map[String, String] = Map.empty,
       statePartitions: Int = 0): Unit =
-    withStatePartitions(spark,
-        if (statePartitions > 0) statePartitions else statePartitionsFor(sourceDir)) {
+    withStatePartitions(spark, statePartitions, sourceDir) {
       import org.apache.spark.sql.functions._
       val stream = fileStream(spark, sourceDir, sourceOptions)
       val q = stream.writeStream
@@ -530,7 +516,7 @@ object Streaming {
           graft.operators.Ann.publishGeneration(spark, root, gen)
         }
         .option("checkpointLocation",
-          graft.Scratch.freshFast(s"ckpt_${name}_").resolve("ckpt").toString)
+          graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString)
         .queryName(name)
         .start()
       try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
@@ -550,14 +536,14 @@ object Streaming {
       mode: OutputMode = OutputMode.Complete(),
       sourceOptions: Map[String, String] = Map.empty,
       statePartitions: Int = 0): DataFrame = withStatePartitions(spark,
-    if (statePartitions > 0) statePartitions else statePartitionsFor(sourceDir)) {
+    statePartitions, sourceDir) {
     val stream = fileStream(spark, sourceDir, sourceOptions)
     val q = plan(stream).writeStream
       .outputMode(mode)
       // tmpfs checkpoint: the memory sink makes this drive non-durable by
       // construction, so disk-fsynced state/offset logs are pure overhead
       .option("checkpointLocation",
-        graft.Scratch.freshFast(s"ckpt_${name}_").resolve("ckpt").toString)
+        graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString)
       .format("memory").queryName(name)
       .start()
     try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }

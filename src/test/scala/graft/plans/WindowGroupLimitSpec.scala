@@ -29,7 +29,7 @@ import graft.tools.PlanChecks
   * columns (workingSetCoverage's top-100 — no window at all), or bounded
   * frames (the apportionment remainders, the k+1-row priority sample).
   * That claim is no longer hand-maintained (VERDICT r14 #3):
-  * [[RegistrySpwSweepSpec]] executes EVERY registered gate at sf0.001 and
+  * [[graft.ops.QueriesSpec]] executes EVERY registered gate at sf0.001 and
   * fails if any single-partition window exchange carries a data-scale
   * frame — a new unpartitioned rank filter that loses its pushdown now
   * fails CI mechanically. If one is ADDED deliberately, also add it to

@@ -651,14 +651,16 @@ class StreamingSpec extends SparkSpec {
         val out = new java.io.FileOutputStream(f)
         try out.write(new Array[Byte](bytes)) finally out.close()
       }
-      assert(Streaming.statePartitionsFor(dir.getPath) == 2) // empty dir
-      assert(Streaming.statePartitionsFor(dir.getPath + "/nope") == 2)
+      assert(graft.Tables.partitionsFor(dir.getPath, floor = 2) == 2) // empty dir
+      assert(graft.Tables.partitionsFor(dir.getPath + "/nope", floor = 2) == 2)
       fileOf("a.parquet", 1 << 20) // 1 MiB
-      assert(Streaming.statePartitionsFor(dir.getPath) == 2)
+      assert(graft.Tables.partitionsFor(dir.getPath, floor = 2) == 2)
       val single = new java.io.File(dir, "a.parquet").getPath
-      assert(Streaming.statePartitionsFor(single) == 2) // plain-file source
+      assert(graft.Tables.partitionsFor(single, floor = 2) == 2) // plain-file source
       fileOf("b.parquet", 80 << 20) // dir total 81 MiB -> ceil(81/32) = 3
-      assert(Streaming.statePartitionsFor(dir.getPath) == 3)
+      assert(graft.Tables.partitionsFor(dir.getPath, floor = 2) == 3)
+      // the graph adjacency's rule: 2 × the edge bytes -> ceil(162/32) = 6
+      assert(graft.Tables.partitionsFor(dir.getPath, floor = 1, scale = 2) == 6)
     } finally {
       dir.listFiles().foreach(_.delete()); dir.delete(): Unit
     }
