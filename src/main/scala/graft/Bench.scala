@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): times every SparkEntry query on
   * `$SPARK_GRAFT_SF_DIR` and prints one JSON line.
   *
@@ -14,13 +12,14 @@ import org.apache.spark.sql.SparkSession
   *     (streaming/ANN/graph — VERDICT r9 #6; a full-suite pass cost more
   *     than a timed trial while the per-query min across trials already
   *     absorbs ordinary plans' first-pass JIT), TIME-BOXED by
-  *     `SPARK_GRAFT_BENCH_WARMUP_SECS` (default 600) and overridable via
-  *     `SPARK_GRAFT_BENCH_WARMUP=all|none|families`; the artifact records
-  *     the mode and the count actually run.
+  *     `SPARK_GRAFT_BENCH_WARMUP_SECS` (default 600); the artifact records
+  *     the count actually run.
   *  3. TRIALS: `SPARK_GRAFT_BENCH_TRIALS` (default 3) timed suite passes in
   *     sorted name order with per-query min — so per-query numbers measure
   *     steady-state plan execution, not first-query session warm-up or
   *     whichever query a GC pause happened to land on.
+  * Every gate executes through [[GateRunner]] (noop sink, cache cleared
+  * after each gate, on production plans).
   *
   * TIMEOUT-ROBUSTNESS (VERDICT r8 #1 — two driver runs in a row lost all
   * timing data to host contention): the artifact is persisted after EVERY
@@ -111,25 +110,34 @@ object Bench {
     val tStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - tStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Bench times the PRODUCTION plans: q64's exact yardstick twins (a
-    // multi-scan that exists only to verify the sketches at the sf0.01
-    // correctness gate) are switched off here — see
-    // ExtendedQueries.yardstickEnabled. SPARK_GRAFT_YARDSTICK=on re-enables.
-    if (!sys.props.contains("graft.yardstick"))
-      System.setProperty("graft.yardstick", "off")
-    // q148 (exact O(n²) mutual-kNN) is likewise a yardstick — it exists
-    // only as q149's recall baseline (AnnQueries.mutualKnn doc). It stays
-    // in the bench because at the gate corpus it is cheap (~1.4 s at
-    // sf0.1), but it must NOT be scaled with the corpus — and that is now
-    // ENFORCED, not just documented (VERDICT r6 #3): mutualKnn fails fast
-    // past AnnQueries.MutualKnnExactCap rows with a pointer at q149.
-    val spark = LocalSession.fromEnv(defaultCpus = "4")
-
-    // Execute the FULL physical plan via the noop sink: a plain df.count()
-    // would let Catalyst prune every projection/window the query exists to
-    // compute (a string-functions query would be timed as a bare scan).
-    def execute(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+    // SUBSET RUNS (VERDICT r11 #1 — cross-round A/B adjudication): the
+    // shared-query comparison against a prior round's artifact needs a run
+    // of EXACTLY that round's query set, alone, on a quiet host.
+    // SPARK_GRAFT_BENCH_ONLY = a file of query names (one per line) or a
+    // comma-separated list filters the suite; a subset artifact can never
+    // replace the committed full artifact (enforced in persist below).
+    val onlySet: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map { v =>
+        val p = java.nio.file.Paths.get(v)
+        if (java.nio.file.Files.isRegularFile(p))
+          scala.jdk.CollectionConverters.ListHasAsScala(
+            java.nio.file.Files.readAllLines(p)).asScala
+            .map(_.trim).filter(_.nonEmpty).toSet
+        else v.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      }
+    val ordered = onlySet.fold(GateRunner.all)(GateRunner.select)
+    onlySet.foreach { s =>
+      System.err.println(s"[bench] SUBSET run: ${ordered.size}/" +
+        s"${GateRunner.all.size} queries (${s.size} requested)")
+    }
+    // q148 (exact O(n²) mutual-kNN) is a yardstick like q64's exact twins
+    // (which GateRunner.production switches off) — it exists only as
+    // q149's recall baseline (AnnQueries.mutualKnn doc). It stays in the
+    // bench because at the gate corpus it is cheap (~1.4 s at sf0.1), but
+    // it must NOT be scaled with the corpus — and that is ENFORCED, not
+    // just documented (VERDICT r6 #3): mutualKnn fails fast past
+    // AnnQueries.MutualKnnExactCap rows with a pointer at q149.
+    val spark = LocalSession.fromEnv()
 
     // 3-decimal timings: millisecond precision is all the measurement
     // carries, and shorter lines are likelier to survive the driver's
@@ -150,62 +158,28 @@ object Bench {
     // JIT). What genuinely needs pre-trial warming is the heavy-machinery
     // families whose first execution pays costs later passes never see
     // again: streaming (state-store provider load + micro-batch engine),
-    // ANN (index probe paths), graph (iterative frames). Default warms
-    // exactly those; SPARK_GRAFT_BENCH_WARMUP=all|none|families overrides.
-    // SUBSET RUNS (VERDICT r11 #1 — cross-round A/B adjudication): the
-    // shared-query comparison against a prior round's artifact needs a run
-    // of EXACTLY that round's query set, alone, on a quiet host.
-    // SPARK_GRAFT_BENCH_ONLY = a file of query names (one per line) or a
-    // comma-separated list filters the suite; a subset artifact can never
-    // replace the committed full artifact (enforced in persist below).
-    val onlySet: Option[Set[String]] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map { v =>
-        val p = java.nio.file.Paths.get(v)
-        if (java.nio.file.Files.isRegularFile(p))
-          scala.jdk.CollectionConverters.ListHasAsScala(
-            java.nio.file.Files.readAllLines(p)).asScala
-            .map(_.trim).filter(_.nonEmpty).toSet
-        else v.split(",").map(_.trim).filter(_.nonEmpty).toSet
-      }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => onlySet.forall(_.contains(n)) }
-    onlySet.foreach { s =>
-      System.err.println(s"[bench] SUBSET run: ${ordered.size}/" +
-        s"${SparkEntry.queries.size} queries (${s.size} requested)")
-    }
+    // ANN (index probe paths), graph (iterative frames).
     val warmFamilies: Set[String] =
       ops.EventQueries.queries.keySet ++ ops.AnnQueries.queries.keySet ++
         ops.GraphQueries.queries.keySet
-    val warmupMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "families")
-    // intersect with the (possibly subset) suite so the warmed/size
+    // only the (possibly subset) suite's members, so the warmed/size
     // accounting and the budget message stay truthful under BENCH_ONLY
-    val warmupSet: Set[String] = (warmupMode match {
-      case "all" => ordered.map(_._1).toSet
-      case "none" => Set.empty[String]
-      case _ => warmFamilies
-    }).intersect(ordered.map(_._1).toSet)
+    val warmupGates = ordered.filter(g => warmFamilies.contains(g.name))
     val warmupBudget =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_SECS", "600").toDouble
     val tWarm = System.nanoTime()
     var warmed = 0
-    ordered.foreach { case (name, fn) =>
-      if (warmupSet.contains(name) &&
-          (System.nanoTime() - tWarm) / 1e9 < warmupBudget) {
-        try { execute(fn); warmed += 1 } catch { case e: Throwable =>
-          System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
-        }
-      }
-    }
+    GateRunner.production(warmupGates.foreach { g =>
+      if ((System.nanoTime() - tWarm) / 1e9 < warmupBudget &&
+          GateRunner.run(spark, g, sfDir, GateRunner.Noop).ok)
+        warmed += 1
+    })
     val warmupSecs = (System.nanoTime() - tWarm) / 1e9
-    System.err.println(s"[bench] warm-up ($warmupMode): $warmed/" +
-      s"${warmupSet.size} queries in ${r3d(warmupSecs)} s")
-    if (warmed < warmupSet.size)
+    System.err.println(s"[bench] warm-up (families): $warmed/" +
+      s"${warmupGates.size} queries in ${r3d(warmupSecs)} s")
+    if (warmed < warmupGates.size)
       System.err.println(s"[bench] warm-up budget ($warmupBudget s) hit after " +
-        s"$warmed/${warmupSet.size} queries")
-    // Operators that cache intermediates (e.g. the minhash shingle table)
-    // leave warm entries behind; clear so every timed run executes its FULL
-    // plan instead of reading the warm-up's cached partitions.
-    spark.catalog.clearCache()
+        s"$warmed/${warmupGates.size} queries")
 
     // ---- phase 2: timed trials, artifact persisted per trial ----
     // Per-query MIN across passes (r3 finding #2): four adjacent
@@ -219,17 +193,18 @@ object Bench {
     val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1200").toDouble
     // failed queries report -1 (never a fake positive time) and are
     // excluded from the total
-    def timedPass(): Map[String, Double] = ordered.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { execute(fn); true } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); false
+    def timedPass(): Map[String, Double] = GateRunner.production(ordered.map { g =>
+      val o = GateRunner.run(spark, g, sfDir, GateRunner.Noop)
+      g.name -> (if (o.ok) o.secs else -1.0)
+    }.toMap)
+    // Per query, `pick` over its non-failed times across passes (-1 when
+    // every pass failed): the artifact's min and max columns.
+    def acrossPasses(passes: Seq[Map[String, Double]],
+        pick: Seq[Double] => Double): Seq[(String, Double)] =
+      ordered.map { g =>
+        val ts = passes.map(_(g.name)).filter(_ >= 0)
+        g.name -> (if (ts.nonEmpty) pick(ts) else -1.0)
       }
-      // stop the clock BEFORE the inter-query cache clear: unpersisting
-      // another query's leftovers is harness bookkeeping, not plan cost
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // no cross-query cache accumulation
-      name -> (if (ok) dt else -1.0)
-    }.toMap
 
     // CANARY ANCHOR (VERDICT r11 #2): the intra-run spread rule (≤1.3×)
     // cannot catch a UNIFORMLY slow host — r11's two committed artifacts,
@@ -266,14 +241,8 @@ object Bench {
     }.getOrElse(committedCanary.toSeq)
 
     def artifactLine(passes: Seq[Map[String, Double]]): String = {
-      val results = ordered.map { case (name, _) =>
-        val ts = passes.map(_(name)).filter(_ >= 0)
-        name -> (if (ts.nonEmpty) ts.min else -1.0)
-      }
-      val maxima = ordered.map { case (name, _) =>
-        val ts = passes.map(_(name)).filter(_ >= 0)
-        name -> (if (ts.nonEmpty) ts.max else -1.0)
-      }
+      val results = acrossPasses(passes, _.min)
+      val maxima = acrossPasses(passes, _.max)
       // Self-adjudication (VERDICT r4 #1): alongside the per-query min, the
       // artifact records each trial's full-suite total and every query's max
       // across trials, so a reader can see the spread (a quiet run shows
@@ -339,15 +308,8 @@ object Bench {
       // is file-backed (Scratch parquet) or driver-collected rows, so the
       // FILE side is the number that actually grows with the suite.
       val scratchBytes = Scratch.totalBytes
-      s"""{"metric":"total","value":${r3d(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","trials":$trials,"trials_completed":${passes.size},"trial_totals":$totals,"spread":$spread,$rebaselined"canary_delta_vs_committed":$canaryDelta,"queries_max":$qsMax,"fixture_secs":${r3d(fixtureSecs)},"fixtures":$fx,"warmup_secs":${r3d(warmupSecs)},"warmup_queries":$warmed,"warmup_mode":"$warmupMode","cached_bytes":$cachedBytes,"cached_rdds":${storage.length},"scratch_bytes":$scratchBytes,"canary_queries":${CanaryQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},"canary_secs":${r3d(canary)},"canary_history":$historyJson}"""
+      s"""{"metric":"total","value":${r3d(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","trials":$trials,"trials_completed":${passes.size},"trial_totals":$totals,"spread":$spread,$rebaselined"canary_delta_vs_committed":$canaryDelta,"queries_max":$qsMax,"fixture_secs":${r3d(fixtureSecs)},"fixtures":$fx,"warmup_secs":${r3d(warmupSecs)},"warmup_queries":$warmed,"warmup_mode":"families","cached_bytes":$cachedBytes,"cached_rdds":${storage.length},"scratch_bytes":$scratchBytes,"canary_queries":${CanaryQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},"canary_secs":${r3d(canary)},"canary_history":$historyJson}"""
     }
-
-    // Canary of the artifact line being persisted, re-derived the same way
-    def canaryOfLine(passes: Seq[Map[String, Double]]): Double =
-      canaryOf(ordered.map { case (name, _) =>
-        val ts = passes.map(_(name)).filter(_ >= 0)
-        name -> (if (ts.nonEmpty) ts.min else -1.0)
-      })
 
     // ARTIFACT DECOUPLING (VERDICT r9 #1): the repo-root `bench.json` is a
     // COMMITTED adjudication artifact — DocsConsistencySpec pins
@@ -452,7 +414,7 @@ object Bench {
       t += 1
       // persist + short line after EVERY trial: a kill from here on still
       // leaves a valid artifact with `trials_completed` = what actually ran
-      persist(artifactLine(passes), canaryOfLine(passes))
+      persist(artifactLine(passes), canaryOf(acrossPasses(passes, _.min)))
       val tot = passes.last.values.filter(_ >= 0).sum
       println(s"""{"metric":"trial","trial":$t,"of":$trials,"total":${r3d(tot)},"unit":"sec","sf":"$sfDir"}""")
       System.out.flush()
@@ -470,13 +432,7 @@ object Bench {
     println(line)
     val totalsShort = passes.map(p => r3d(p.values.filter(_ >= 0).sum))
       .mkString("[", ",", "]")
-    val totalShort = {
-      val results = ordered.map { case (name, _) =>
-        val ts = passes.map(_(name)).filter(_ >= 0)
-        if (ts.nonEmpty) ts.min else -1.0
-      }
-      r3d(results.filter(_ >= 0).sum)
-    }
+    val totalShort = r3d(acrossPasses(passes, _.min).map(_._2).filter(_ >= 0).sum)
     println(s"""{"metric":"total","value":$totalShort,"unit":"sec","nq":${ordered.size},"sf":"$sfDir","trial_totals":$totalsShort}""")
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,21 +6,10 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names — incremental self-check
-    val only = args.lift(2).map(_.split(',').toSet)
-    val spark = LocalSession.fromEnv(defaultCpus = "4")
+    val gates = args.lift(2).fold(GateRunner.all)(a => GateRunner.select(a.split(',')))
+    val spark = LocalSession.fromEnv()
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries that cache intermediates (q77 embeddings, q100 signatures)
-      // must not pin them across the remaining ~100 queries of the run
-      spark.catalog.clearCache()
-    }
+    gates.foreach(GateRunner.run(spark, _, sfDir, GateRunner.Parquet(outDir)))
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -34,9 +22,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => only.forall(_.contains(k)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = gates.map(g => s"${q(g.name)}: ${q(SparkEntry.oracleSql(g.name))}")
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -37,25 +37,7 @@ object Graph {
     * is a vertex id, so input skew is handled by the orientation itself.
     */
   def triangleCount(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("u").as("vtx"))
-      .unionAll(edges.select(col("v").as("vtx")))
-      .groupBy(col("vtx")).agg(count(lit(1)).as("deg"))
-    val withDeg = edges
-      .join(deg.select(col("vtx").as("u"), col("deg").as("du")), "u")
-      .join(deg.select(col("vtx").as("v"), col("deg").as("dv")), "v")
-    val uFirst = (col("du") < col("dv")) ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = withDeg.select(
-      when(uFirst, col("u")).otherwise(col("v")).as("s"),
-      when(uFirst, col("v")).otherwise(col("u")).as("d"))
-    // wedge pairs at each source, canonicalized by id so they line up with
-    // the canonical (u < v) edge set regardless of the closing edge's
-    // degree orientation
-    val wedges = oriented.select(col("s"), col("d").as("x"))
-      .join(oriented.select(col("s"), col("d").as("y")), "s")
-      .filter(col("x") < col("y"))
-      .select(least(col("x"), col("y")).as("d1"),
-        greatest(col("x"), col("y")).as("d2"))
+    val wedges = wedgesOf(edges, degrees(edges))
     val closing = edges.select(col("u").as("d1"), col("v").as("d2"),
       lit(1).as("hit"))
     // SHUFFLE_HASH on the edge side: the probe stream is the wedge volume
@@ -98,27 +80,31 @@ object Graph {
       .select(col("vtx"), col("deg"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
 
-  /** Degree census of a canonical edge list, CHECKPOINTED: deg feeds many
-    * readers in every consumer (two orientation joins, final outer joins,
+  /** Degree census (vtx, deg) of a canonical edge list. */
+  private def degrees(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("vtx"))
+      .unionAll(edges.select(col("v").as("vtx")))
+      .groupBy(col("vtx")).agg(count(lit(1)).as("deg"))
+
+  /** [[degrees]], CHECKPOINTED: deg feeds many readers in every consumer
+    * of [[closedTriangles]] (two orientation joins, final outer joins,
     * and — via orientation — everything downstream); localCheckpoint
     * materializes it once so the degree agg runs once, not per reader
     * (the q132 checkpoint rule). Measured at sf0.1 (nodeTriangles): 7.9 s
     * with deg re-derived per reader, 5.3 s checkpointed. */
   private def degreeFrame(edges: DataFrame): DataFrame =
-    edges.select(col("u").as("vtx"))
-      .unionAll(edges.select(col("v").as("vtx")))
-      .groupBy(col("vtx")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
+    degrees(edges).localCheckpoint()
 
-  /** Closed triangles (s, d1, d2) with s the wedge's source corner and
-    * d1 < d2 — the shared core of [[nodeTriangles]] and
-    * [[edgeCommonNeighbors]]: degree-ordered orientation (the
-    * [[triangleCount]] O(m^1.5) bound), source-kept wedge self-join, LEFT
-    * SEMI close against the canonical edge set. `oriented` stays LAZY —
-    * its two wedge-side readers recompute two cheap broadcast joins off
-    * the checkpointed deg, and materializing its |E| rows costs more than
-    * that recompute (measured at sf0.1: 7.4 s vs 5.3 s lazy). */
-  private def closedTriangles(edges: DataFrame, deg: DataFrame): DataFrame = {
+  /** Every wedge (s, d1, d2) with d1 < d2 under degree-ordered
+    * orientation — the [[triangleCount]] O(m^1.5) bound: each edge points
+    * from its lower-(degree, id) endpoint `s` to the higher, and wedges
+    * pair two out-edges of the same source. d1/d2 are canonicalized by id
+    * so they line up with the canonical (u < v) edge set regardless of the
+    * closing edge's degree orientation. `oriented` stays LAZY — its two
+    * wedge-side readers recompute two cheap broadcast joins off `deg`, and
+    * materializing its |E| rows costs more than that recompute (measured
+    * at sf0.1: 7.4 s vs 5.3 s lazy). */
+  private def wedgesOf(edges: DataFrame, deg: DataFrame): DataFrame = {
     val withDeg = edges
       .join(deg.select(col("vtx").as("u"), col("deg").as("du")), "u")
       .join(deg.select(col("vtx").as("v"), col("deg").as("dv")), "v")
@@ -127,15 +113,21 @@ object Graph {
     val oriented = withDeg.select(
       when(uFirst, col("u")).otherwise(col("v")).as("s"),
       when(uFirst, col("v")).otherwise(col("u")).as("d"))
-    val wedges = oriented.select(col("s"), col("d").as("x"))
+    oriented.select(col("s"), col("d").as("x"))
       .join(oriented.select(col("s"), col("d").as("y")), "s")
       .filter(col("x") < col("y"))
       .select(col("s"), least(col("x"), col("y")).as("d1"),
         greatest(col("x"), col("y")).as("d2"))
-    wedges.join(
+  }
+
+  /** Closed triangles (s, d1, d2) with s the wedge's source corner and
+    * d1 < d2 — the shared core of [[nodeTriangles]] and
+    * [[edgeCommonNeighbors]]: [[wedgesOf]] over the checkpointed deg,
+    * LEFT SEMI close against the canonical edge set. */
+  private def closedTriangles(edges: DataFrame, deg: DataFrame): DataFrame =
+    wedgesOf(edges, deg).join(
       edges.select(col("u").as("d1"), col("v").as("d2")).hint("shuffle_hash"),
       Seq("d1", "d2"), "left_semi")
-  }
 
   /** Per-edge common-neighbor counts — the edge-local companion of
     * [[nodeTriangles]] and the numerator of every neighborhood-overlap

@@ -187,7 +187,7 @@ object EventQueries {
     * streaming rows (q194/q216/q227) measured exactly that: a drive
     * processing only its flush file (found r15 when the new
     * StateMeter showed q216's 4× peak state at 2 rows vs 4020 at 1×,
-    * and RowCount confirmed 0 output rows on the scaled corpus).
+    * and a row-count audit confirmed 0 output rows on the scaled corpus).
     * Part-file symlinks would be wrong differently: maxFilesPerTrigger=1
     * would split the corpus across batches, advancing the watermark
     * mid-corpus and dropping unordered parts as late. One file keeps

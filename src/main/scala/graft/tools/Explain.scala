@@ -1,8 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{GateRunner, LocalSession}
 
 /** Plan-audit utility: print the formatted physical plan of one or all
   * SparkEntry queries. The review checklist per query: filters appear in
@@ -13,20 +11,22 @@ import graft.SparkEntry
   * Usage: runMain graft.tools.Explain [queryName ...] [--dir sfDir]
   */
 object Explain {
-  def main(args: Array[String]): Unit = {
+  /** The plan tools' command line: `--dir sfDir` (default sf0.01) and the
+    * remaining positional arguments. */
+  private[tools] def dirArg(args: Array[String]): (String, Seq[String]) = {
     val dir = args.sliding(2).collectFirst { case Array("--dir", d) => d }
       .getOrElse("/root/testdata/sf0.01")
-    val names = args.filterNot(_.startsWith("--")).filterNot(a => args.sliding(2)
-      .exists { case Array(f, v) => f == "--dir" && v == a; case _ => false })
-    val spark = graft.LocalSession.fromEnv(defaultCpus = "8", logLevel = "ERROR")
-    val chosen = if (names.nonEmpty) names.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    chosen.foreach { name =>
-      SparkEntry.queries.get(name) match {
-        case Some(fn) =>
-          println(s"\n=== $name ===")
-          fn(spark, dir).explain("formatted")
-        case None => System.err.println(s"unknown query: $name")
-      }
+    val i = args.indexOf("--dir")
+    (dir, if (i < 0) args.toSeq else (args.take(i) ++ args.drop(i + 2)).toSeq)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (dir, names) = dirArg(args)
+    val gates = if (names.nonEmpty) GateRunner.select(names) else GateRunner.all
+    val spark = LocalSession.fromEnv(logLevel = "ERROR")
+    gates.foreach { g =>
+      println(s"\n=== ${g.name} ===")
+      g.fn(spark, dir).explain("formatted")
     }
     spark.stop()
   }

@@ -111,7 +111,7 @@ object KCoreCertify {
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = graft.LocalSession.fromEnv(defaultCpus = "8")
+    val spark = graft.LocalSession.fromEnv()
     val engine = engineCensus(spark, dir)
     val edges = referenceEdges(spark, dir)
     val (k, reference) = referenceCensus(edges)

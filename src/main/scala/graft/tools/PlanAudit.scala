@@ -1,11 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 
-import graft.SparkEntry
+import graft.GateRunner
 
 /** One-line-per-query physical-plan audit: how many scans, shuffle
   * exchanges, broadcasts, sorts, and whole-stage-codegen spans each gate
@@ -17,31 +14,18 @@ import graft.SparkEntry
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val dir = args.sliding(2).collectFirst { case Array("--dir", d) => d }
-      .getOrElse("/root/testdata/sf0.01")
-    val outFile = args.filterNot(_.startsWith("--"))
-      .filterNot(a => args.sliding(2).exists {
-        case Array(f, v) => f == "--dir" && v == a; case _ => false
-      }).headOption
+    val (dir, positional) = Explain.dirArg(args)
+    val outFile = positional.headOption
 
-    val spark = graft.LocalSession.fromEnv(defaultCpus = "8", logLevel = "ERROR")
-
-    def flatten(p: SparkPlan): Seq[SparkPlan] = {
-      val self = p match {
-        case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
-        case _ => Seq(p)
-      }
-      self ++ p.children.flatMap(flatten) ++
-        p.subqueries.flatMap(flatten)
-    }
+    val spark = graft.LocalSession.fromEnv(logLevel = "ERROR")
 
     // numeric qNN(N) order, not lexicographic (q100 after q99, not at q10)
-    val rows = SparkEntry.queries.toSeq.sortBy { case (name, _) =>
-      ("""\d+""".r.findFirstIn(name).map(_.toInt).getOrElse(Int.MaxValue), name)
-    }.map { case (name, fn) =>
+    val rows = GateRunner.all.sortBy { g =>
+      ("""\d+""".r.findFirstIn(g.name).map(_.toInt).getOrElse(Int.MaxValue), g.name)
+    }.map { case GateRunner.Gate(name, fn) =>
       try {
         val plan = fn(spark, dir).queryExecution.executedPlan
-        val nodes = flatten(plan)
+        val nodes = PlanChecks.nodes(plan)
         val names = nodes.map(_.nodeName)
         Seq(name,
           names.count(_.contains("Scan")).toString,

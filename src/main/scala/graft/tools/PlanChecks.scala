@@ -5,7 +5,7 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.window.WindowExec
 
-/** Executed-plan structural checks shared by the plan specs and
+/** Plan structural checks shared by the plan specs, [[PlanAudit]] and
   * [[ScaleProbe]].
   *
   * The check that motivated this file: a `Window.orderBy` with no
@@ -25,6 +25,13 @@ object PlanChecks {
     case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
     case q: QueryStageExec => unwrap(q.plan)
     case other => other
+  }
+
+  /** Every node of `plan`, children and subqueries included, with AQE
+    * wrappers descended (the wrappers themselves are not listed). */
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = {
+    val p = unwrap(plan)
+    p +: (p.children ++ p.subqueries).flatMap(nodes)
   }
 
   /** Every `(windowNodeName, rowsThroughExchange)` pair where a

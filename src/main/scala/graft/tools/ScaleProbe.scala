@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{LocalSession, SparkEntry, Tables}
+import graft.{GateRunner, LocalSession, Tables}
 
 /** Two-point SCALING probe (VERDICT r10 #1) — measured evidence behind
   * every "linear at 100 TB" design argument: the most expensive gates run
@@ -29,11 +29,11 @@ import graft.{LocalSession, SparkEntry, Tables}
   * original, so intra-copy structure (dup clusters, near-dup pairs,
   * session shapes) is preserved `factor` times over.
   *
-  * Protocol per gate and size: one untimed pass (pays memoized fixture
-  * builds — index training, graph checkpoints, streaming drives — plus
-  * JIT, the Bench warm-up contract), then one timed pass of the full plan
-  * through the noop sink. Ratios therefore compare steady-state plan
-  * execution only.
+  * Protocol per gate and size ([[graft.GateRunner.timed]]): one untimed
+  * pass (pays memoized fixture builds — index training, graph
+  * checkpoints, streaming drives — plus JIT, the Bench warm-up contract),
+  * then one timed pass of the full plan through the noop sink. Ratios
+  * therefore compare steady-state plan execution only.
   *
   * Usage: `runMain graft.tools.ScaleProbe [sfDir] [outMd] [factor]
   * [gate,gate,...]` — defaults: sf0.1, SCALING.md, 10, the ten most
@@ -396,34 +396,23 @@ object ScaleProbe {
     "q216_streaming_outer_join", "q227_streaming_full_outer",
     "q92_streaming_sessions")
 
-  /** Run `fn` once untimed (fixtures + JIT), then once timed through the
-    * noop sink (full-plan execution, the Bench rule). The WARM pass
-    * executes the plan's own RDD (same full-plan work as the noop sink)
-    * so its executed exchange metrics are readable afterwards — that is
-    * where the single-partition-window row count (VERDICT r12 #4: the
-    * 10× wall-clock slope CANNOT see a single-partition sort, which is
-    * "linear"... on one core) comes from. Returns (seconds, spwRows,
-    * stateRows — the peak stateful-operator row count any streaming
-    * drive held during the gate, 0 for batch gates; see
+  /** One gate at one corpus through [[GateRunner.timed]]: the warm pass
+    * pays fixture builds and JIT and executes the plan's own RDD, so its
+    * executed exchange metrics give the single-partition-window row count
+    * (VERDICT r12 #4: the 10× wall-clock slope CANNOT see a
+    * single-partition sort, which is "linear"... on one core); the timed
+    * noop pass gives the seconds. A failed pass fails the probe. Returns
+    * (seconds, spwRows, stateRows — the peak stateful-operator row count
+    * any streaming drive held during the gate, 0 for batch gates; see
     * [[graft.streaming.Streaming.StateMeter]]). */
-  private def timeGate(spark: SparkSession,
-      fn: (SparkSession, String) => DataFrame, dir: String)
+  private def timeGate(spark: SparkSession, gate: GateRunner.Gate, dir: String)
       : (Double, Long, Long) = {
-    def once(): Unit = {
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      spark.catalog.clearCache()
-    }
     graft.streaming.Streaming.StateMeter.reset()
-    // warm: fixture builds land here, not in the measurement
-    val warm = fn(spark, dir)
-    warm.queryExecution.executedPlan.execute().foreach(_ => ())
+    val (warm, timed) = GateRunner.timed(spark, gate, dir)
+    for (o <- Seq(warm, timed); e <- o.error) throw e
     val spw = PlanChecks.maxSinglePartitionWindowRows(
-      warm.queryExecution.executedPlan)
-    spark.catalog.clearCache()
-    val t0 = System.nanoTime()
-    once()
-    ((System.nanoTime() - t0) / 1e9, spw,
-      graft.streaming.Streaming.StateMeter.maxRows)
+      warm.frame.get.queryExecution.executedPlan)
+    (timed.secs, spw, graft.streaming.Streaming.StateMeter.maxRows)
   }
 
   case class Result(gate: String, t1: Double, tN: Double,
@@ -435,17 +424,15 @@ object ScaleProbe {
     * markdown table, and return the results — the testable core behind
     * [[main]] (no session stop, no process exit). */
   def run(spark: SparkSession, sfDir: String, outMd: String, factor: Int,
-      gates: Seq[String], failAt: Double): Seq[Result] = {
+      gates: Seq[GateRunner.Gate], failAt: Double): Seq[Result] = {
     val scaled = scaledCorpus(spark, sfDir, factor)
     System.err.println(s"[scale] corpus ready: $scaled (${factor}x $sfDir)")
 
-    val results = gates.map { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown gate: $name"))
-      val (t1, spw1, st1) = timeGate(spark, fn, sfDir)
-      val (tN, spwN, stN) = timeGate(spark, fn, scaled)
-      val r = Result(name, t1, tN, spw1, spwN, st1, stN)
-      System.err.println(f"[scale] $name%-34s 1x=${r.t1}%7.2fs " +
+    val results = gates.map { g =>
+      val (t1, spw1, st1) = timeGate(spark, g, sfDir)
+      val (tN, spwN, stN) = timeGate(spark, g, scaled)
+      val r = Result(g.name, t1, tN, spw1, spwN, st1, stN)
+      System.err.println(f"[scale] ${g.name}%-34s 1x=${r.t1}%7.2fs " +
         f"${factor}x=${r.tN}%7.2fs ratio=${r.ratio}%6.2f " +
         f"spw=${r.spw1}%d/${r.spwN}%d state=${r.state1}%d/${r.stateN}%d")
       r
@@ -454,17 +441,16 @@ object ScaleProbe {
     // skewed-variant diagnostics (see skewedCorpus): 1× side reuses the
     // main run's measurement; the N× side runs against the skewed build
     val skewResults: Seq[Result] = {
-      val covered = SkewGates.filter(gates.contains)
+      val covered = gates.filter(g => SkewGates.contains(g.name))
       if (covered.isEmpty) Seq.empty
       else {
         val skewDir = skewedCorpus(spark, sfDir, factor)
         System.err.println(s"[scale] skewed corpus ready: $skewDir")
-        covered.map { name =>
-          val fn = SparkEntry.queries(name)
-          val base = results.find(_.gate == name).get
-          val (tS, spwS, stS) = timeGate(spark, fn, skewDir)
-          val r = Result(name, base.t1, tS, base.spw1, spwS, base.state1, stS)
-          System.err.println(f"[scale] $name%-34s (skew) 1x=${r.t1}%7.2fs " +
+        covered.map { g =>
+          val base = results.find(_.gate == g.name).get
+          val (tS, spwS, stS) = timeGate(spark, g, skewDir)
+          val r = Result(g.name, base.t1, tS, base.spw1, spwS, base.state1, stS)
+          System.err.println(f"[scale] ${g.name}%-34s (skew) 1x=${r.t1}%7.2fs " +
             f"${factor}x=${r.tN}%7.2fs ratio=${r.ratio}%6.2f " +
             f"spw=${r.spw1}%d/${r.spwN}%d state=${r.state1}%d/${r.stateN}%d")
           r
@@ -479,7 +465,7 @@ object ScaleProbe {
     md ++= s"# Scaling probe — measured two-point slope\n\n"
     md ++= s"`graft.tools.ScaleProbe` on `$sfDir` vs a salted ${factor}× union\n"
     md ++= s"(distinct keys/text/vectors per copy — see the ScaleProbe scaladoc),\n"
-    md ++= s"local[32]; per gate: one warm pass (fixtures + JIT), one timed\n"
+    md ++= s"${spark.sparkContext.master}; per gate: one warm pass (fixtures + JIT), one timed\n"
     md ++= s"full-plan pass. Fail thresholds: ratio ≥ $failAt, or\n"
     md ++= s"1-part-window rows ≥ $spwCap at ${factor}× (`spw` columns: the\n"
     md ++= s"largest EXECUTED row count any single-partition window exchange\n"
@@ -585,7 +571,7 @@ object ScaleProbe {
       |  full-suite number with this note as provenance.
       |- **r15: the r12–r14 streaming probe rows were measuring EMPTY
       |  drives.** Found by the new state meter the instant it landed:
-      |  q216's 4× peak state read 2 rows vs 4020 at 1×, and a RowCount
+      |  q216's 4× peak state read 2 rows vs 4020 at 1×, and a row-count
       |  audit confirmed ZERO output rows for q92/q216/q227 on the
       |  scaled corpus. Root cause: the drive builders symlinked
       |  `events.parquet` into the drive dir, which is a single FILE in
@@ -653,11 +639,10 @@ object ScaleProbe {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val outMd = args.lift(1).getOrElse("SCALING.md")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
-    val gates = args.lift(3).map(_.split(',').toSeq).getOrElse(DefaultGates)
+    val gates = GateRunner.select(
+      args.lift(3).map(_.split(',').toSeq).getOrElse(DefaultGates))
     val failAt = sys.env.getOrElse("SPARK_GRAFT_SCALE_FAIL", "15").toDouble
-    if (!sys.props.contains("graft.yardstick"))
-      System.setProperty("graft.yardstick", "off")
-    val spark = LocalSession.fromEnv(defaultCpus = "32")
+    val spark = LocalSession.fromEnv()
     val results = run(spark, sfDir, outMd, factor, gates, failAt)
     spark.stop()
     val spwCap =

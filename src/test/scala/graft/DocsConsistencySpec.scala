@@ -11,6 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Contracts pinned here:
   *  - README's "N oracle-gated queries" == SparkEntry.queries.size, and
   *    every query has an oracle (queries/oracleSql key sets coincide);
+  *  - every gate the sf0.1 sweep list and the scale probe name is
+  *    registered (a misspelled name would otherwise drop out of a run);
   *  - PLANS.md (the committed plan audit) has a row for every gate query;
   *  - the committed bench.json covers exactly the gate queries, and the
   *    headline total ARCHITECTURE.md quotes for it (`**N.NN s**` in the
@@ -41,6 +43,19 @@ class DocsConsistencySpec extends AnyFunSuite {
       s"queries without oracleSql: ${names.diff(oracles).toSeq.sorted}")
     assert(oracles.diff(names).isEmpty,
       s"oracleSql without queries: ${oracles.diff(names).toSeq.sorted}")
+  }
+
+  test("every sweep-list and scale-probe gate name is a registered gate") {
+    val sweep = read("tools/sweep_gates_sf01.txt").linesIterator
+      .map(_.trim).filter(_.nonEmpty).toSeq
+    val lists = Seq("tools/sweep_gates_sf01.txt" -> sweep,
+      "ScaleProbe.DefaultGates" -> tools.ScaleProbe.DefaultGates,
+      "ScaleProbe.SkewGates" -> tools.ScaleProbe.SkewGates)
+    val unknown = lists.flatMap { case (list, gates) =>
+      gates.filterNot(names.contains).map(g => s"$list: $g")
+    }
+    assert(sweep.nonEmpty && unknown.isEmpty,
+      s"unregistered gate names: ${unknown.mkString(", ")}")
   }
 
   test("PLANS.md has a row for every gate query") {

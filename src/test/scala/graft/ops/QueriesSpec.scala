@@ -1,10 +1,11 @@
 package graft.ops
 
-import graft.{Derived, Fixtures, SparkEntry, SparkSpec}
+import graft.{Derived, Fixtures, GateRunner, SparkEntry, SparkSpec}
 import graft.tools.PlanChecks
 
-/** The registry pass: every declared gate executes ONCE at sf0.001 (one
-  * `collect()`, the cache cleared after it) and must
+/** The registry pass: every declared gate executes ONCE at sf0.001
+  * through [[graft.GateRunner]]'s plan sink (the cache cleared after it,
+  * the same path Verify and Bench use) and must
   *  - return rows;
   *  - emit no duplicate column names (the oracle compare sorts columns by
   *    name);
@@ -43,16 +44,17 @@ class QueriesSpec extends SparkSpec {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
+  for (gate <- GateRunner.all; name = gate.name) {
     test(s"$name runs and returns rows at sf0.001") {
       prebuilt: Unit
       val builds = Derived.builds
-      val df = fn(spark, sf0001)
-      val (rows, funnels) = try {
-        val n = df.collect().length // executes df's own plan: metrics populated
-        (n, PlanChecks.singlePartitionWindowRows(df.queryExecution.executedPlan)
-          .filter(_._2 > MaxSpwRows))
-      } finally spark.catalog.clearCache() // no cross-gate cache accumulation
+      // executes df's own plan (metrics populated), then clears the cache
+      val run = GateRunner.run(spark, gate, sf0001, GateRunner.Plan)
+      run.error.foreach(e => throw e)
+      val df = run.frame.get
+      val rows = run.rows
+      val funnels = PlanChecks.singlePartitionWindowRows(df.queryExecution.executedPlan)
+        .filter(_._2 > MaxSpwRows)
       assert(rows > 0, s"$name returned no rows")
       val dups = df.columns.groupBy(identity).collect { case (c, v) if v.length > 1 => c }
       assert(dups.isEmpty, s"$name: duplicate output columns ${dups.mkString(",")}")

@@ -6,14 +6,26 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.bridge
+import org.apache.spark.sql.internal.SQLConf
+import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSpec
 
 /** The rewrite must (1) fire on the bounded-window shape, (2) add a bucket
   * equi conjunct that survives to a hash-joinable plan, and (3) be invisible
-  * semantically — identical rows to the un-rewritten join on random data. */
-class RangeJoinRuleSpec extends SparkSpec {
+  * semantically — identical rows to the un-rewritten join on random data.
+  *
+  * The shared session installs this rule (GraftExtensions), so the suite
+  * excludes it from the session optimizer: each test applies it by hand to
+  * the un-rewritten plan and compares against the un-rewritten join. */
+class RangeJoinRuleSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
+
+  override def beforeAll(): Unit =
+    spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, RangeJoinRule.ruleName)
+
+  override def afterAll(): Unit =
+    spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
 
   private def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
 

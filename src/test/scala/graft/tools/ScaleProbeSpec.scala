@@ -14,7 +14,7 @@ class ScaleProbeSpec extends SparkSpec {
     val out = graft.Scratch.fresh("scaling-md").resolve("SCALING.md").toString
     val gates = Seq("q101_grouped_quantile_pruned", "q132_session_overlap")
     val results = ScaleProbe.run(spark, sf0001, out, factor = 2,
-      gates = gates, failAt = 15.0)
+      gates = graft.GateRunner.select(gates), failAt = 15.0)
     assert(results.map(_.gate) == gates)
     results.foreach { r =>
       assert(r.t1 > 0 && r.tN > 0, s"non-positive timing: $r")

@@ -119,3 +119,10 @@ if [ -n "$FAILS" ] || ! echo "$SUMMARY" | grep -q ' 0 failed'; then
   echo "[sweep] FAILURES present" >&2
   exit 1
 fi
+# every listed gate must have been compared: a listed gate that Verify
+# did not run would otherwise be missing from "N passed, 0 failed" unseen
+CHECKED=$(echo "$SUMMARY" | awk '/passed/ && /failed/ {print $1 + $3}')
+if [ "${CHECKED:-0}" -ne "$N_GATES" ]; then
+  echo "[sweep] check.py compared ${CHECKED:-0} gates, the list has $N_GATES" >&2
+  exit 1
+fi
