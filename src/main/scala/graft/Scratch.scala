@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+
 /** Run-scoped scratch directories for gate queries that must write real
   * files (sink round trips, streaming foreachBatch sinks, derived-table
   * checkpoints).
@@ -30,6 +32,22 @@ object Scratch {
     * on first use, the same path on every later call in this JVM. */
   def named(key: String): Path =
     byKey.computeIfAbsent(key, k => fresh(s"graft_${k}_"))
+
+  /** The run dir of one invocation of a checkpointing operator: the stable
+    * [[named]] dir `<prefix>_<key>` when the caller passes a reuse key (a
+    * bench warm-up and its timed trials then overwrite one dir), else a
+    * [[fresh]] one. */
+  def runDir(prefix: String, key: Option[String]): Path =
+    key.map(k => named(s"${prefix}_$k")).getOrElse(fresh(s"graft_${prefix}_"))
+
+  /** Writes `df` as parquet to `dir/tag` and reads it back: the file hop
+    * that cuts a lineage once and, unlike a `.persist`, gives every reader
+    * real size statistics (so joins against it can stay broadcasts). */
+  def hop(df: DataFrame, dir: Path, tag: String): DataFrame = {
+    val p = dir.resolve(tag).toString
+    df.write.mode("overwrite").parquet(p)
+    df.sparkSession.read.parquet(p)
+  }
 
   /** Total bytes currently held by every scratch dir this JVM handed out
     * — the FILE-BACKED side of the memoized-fixture footprint (VERDICT

@@ -48,6 +48,7 @@ object Experiment {
     require(o.events != null && o.results != null,
       "usage: --events <csv> --results <csv> [--models rf,lr,gbt,mlp] " +
         "[--fast] [--json <path>]")
+    Models.select(o.models): Unit
     o
   }
 
@@ -78,6 +79,7 @@ object Experiment {
   }
 
   def run(spark: SparkSession, opts: Opts): RunReport = {
+    val chosen = Models.select(opts.models)
     val cfg =
       if (opts.fast)
         Models.ModelConfig(rfNumTrees = 10, rfMaxDepth = 4, lrMaxIter = 20,
@@ -95,21 +97,15 @@ object Experiment {
     val (trainRows, testRows) = (train.count(), test.count())
     println(s"Train = $trainRows, Test = $testRows, Test season = $testSeason")
 
-    val chosen = Map(
-      "rf" -> ("Random Forest", () => Models.randomForest(cfg)),
-      "lr" -> ("Logistic Regression", () => Models.logisticRegression(cfg)),
-      "gbt" -> ("Gradient Boosted Trees", () => Models.gbt(cfg)),
-      "mlp" -> ("Multilayer Perceptron", () => Models.mlp(cfg)))
-
     // Each fit+eval is a chain of small driver-bound jobs, so the models
     // run side by side in one SparkContext and their jobs overlap. Results
     // print afterwards, from this thread and in `opts.models` order.
-    val fitted = concurrently(opts.models.flatMap(chosen.get).map { case (name, build) =>
+    val fitted = concurrently(chosen.map { m =>
       () => {
         val t0 = System.nanoTime()
-        val model = build().fit(train)
+        val model = m.pipeline(cfg).fit(train)
         val metrics = Evaluation.evaluate(model.transform(test))
-        (name, metrics, (System.nanoTime() - t0) / 1e9, Models.topFeatureImportances(model))
+        (m.name, metrics, (System.nanoTime() - t0) / 1e9, Models.topFeatureImportances(model))
       }
     })
     for ((name, metrics, seconds, importances) <- fitted) {

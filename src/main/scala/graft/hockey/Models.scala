@@ -60,11 +60,27 @@ object Models {
         .setMaxIter(cfg.mlpMaxIter).setBlockSize(cfg.mlpBlockSize)
         .setSeed(cfg.seed)))
 
-  def all(cfg: ModelConfig = ModelConfig()): Seq[(String, MlPipeline)] = Seq(
-    "Random Forest" -> randomForest(cfg),
-    "Logistic Regression" -> logisticRegression(cfg),
-    "Gradient Boosted Trees" -> gbt(cfg),
-    "Multilayer Perceptron" -> mlp(cfg))
+  /** One fittable model: its `--models` key, the display name its metrics
+    * are reported under, and its pipeline. */
+  final case class Entry(key: String, name: String, pipeline: ModelConfig => MlPipeline)
+
+  /** Every model, in reference order. */
+  val table: Seq[Entry] = Seq(
+    Entry("rf", "Random Forest", randomForest),
+    Entry("lr", "Logistic Regression", logisticRegression),
+    Entry("gbt", "Gradient Boosted Trees", gbt),
+    Entry("mlp", "Multilayer Perceptron", mlp))
+
+  /** The entries for `keys`, in `keys` order; an unknown key fails here,
+    * naming it. */
+  def select(keys: Seq[String]): Seq[Entry] = {
+    val byKey = table.map(e => e.key -> e).toMap
+    val unknown = keys.filterNot(byKey.contains)
+    require(unknown.isEmpty,
+      s"unknown model key(s): ${unknown.map(k => s"\"$k\"").mkString(", ")}" +
+        s" (known: ${table.map(_.key).mkString(", ")})")
+    keys.map(byKey)
+  }
 
   /** M9 (ref code/experiment.py:39-54): top-k feature importances from any
     * tree-ensemble final stage. */

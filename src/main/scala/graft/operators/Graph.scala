@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Scratch
+
 /** Distributed graph analytics over edge lists — the co-occurrence /
   * similarity-graph layer of a data-curation pipeline (near-dup clusters
   * already ride on [[Connect]]; this adds closed-triangle structure, the
@@ -79,6 +81,12 @@ object Graph {
     deg.join(perVtx, Seq("vtx"), "left_outer")
       .select(col("vtx"), col("deg"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
+
+  /** The symmetric (src, dst) adjacency of an undirected edge list: every
+    * edge in both directions. */
+  private[graft] def adjacency(edges: DataFrame): DataFrame =
+    edges.select(col("u").as("src"), col("v").as("dst"))
+      .unionAll(edges.select(col("v").as("src"), col("u").as("dst")))
 
   /** Degree census (vtx, deg) of a canonical edge list. */
   private def degrees(edges: DataFrame): DataFrame =
@@ -202,20 +210,13 @@ object Graph {
       scratchKey: Option[String] = None,
       adjOpt: Option[DataFrame] = None): DataFrame = {
     require(scale % 20 == 0, "scale must be divisible by 20 for an exact base term")
-    val run = scratchKey.map(k => graft.Scratch.named(s"pagerank_$k"))
-      .getOrElse(graft.Scratch.fresh("graft_pagerank_"))
+    val run = Scratch.runDir("pagerank", scratchKey)
     // adjOpt (r16): a dst-bucketed symmetric adjacency makes each
     // iteration's contribution sum (groupBy dst) exchange-free; the
     // degree census groups by dst too — identical counts by symmetry.
-    val adj = adjOpt.getOrElse(
-      edges.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
-    val deg = {
-      val p = run.resolve("deg").toString
-      adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg"))
-        .write.mode("overwrite").parquet(p)
-      edges.sparkSession.read.parquet(p)
-    }
+    val adj = adjOpt.getOrElse(adjacency(edges))
+    val deg = Scratch.hop(
+      adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg")), run, "deg")
     val base = lit(scale / 20 * 3)
     var pr = deg.select(col("vtx"), lit(scale).as("pr"), col("deg"))
     (1 to iters).foreach { _ =>
@@ -259,31 +260,23 @@ object Graph {
       scratchKey: Option[String] = None,
       adjOpt: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val run = scratchKey.map(k => graft.Scratch.named(s"bfs_$k"))
-      .getOrElse(graft.Scratch.fresh("graft_bfs_"))
-    def hop(df: DataFrame, tag: String): DataFrame = {
-      val p = run.resolve(tag).toString
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
+    val run = Scratch.runDir("bfs", scratchKey)
     // adjOpt (r16): a dst-bucketed symmetric adjacency makes each hop's
     // frontier `distinct` (keyed on the matched dst) and the seed's
     // degree census (groupBy dst ≡ groupBy src by symmetry) exchange-free.
-    val adj = adjOpt.getOrElse(
-      edges.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
+    val adj = adjOpt.getOrElse(adjacency(edges))
     val deg = adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg"))
-    val seed = hop(deg.orderBy(col("deg").asc, col("vtx").asc)
-      .limit(1).select(col("vtx")), "seed")
+    val seed = Scratch.hop(deg.orderBy(col("deg").asc, col("vtx").asc)
+      .limit(1).select(col("vtx")), run, "seed")
     var frontier = seed
     var reached = seed // union of disjoint per-hop frontier files
     var counts = seed.agg(count(lit(1)).as("n_frontier"))
       .select(lit(0).as("hop"), col("n_frontier"))
     (1 to hops).foreach { k =>
-      val next = hop(
+      val next = Scratch.hop(
         adj.join(frontier, adj("src") === frontier("vtx"))
           .select(col("dst").as("vtx")).distinct()
-          .join(reached, Seq("vtx"), "left_anti"), s"f$k")
+          .join(reached, Seq("vtx"), "left_anti"), run, s"f$k")
       counts = counts.unionAll(next.agg(count(lit(1)).as("n_frontier"))
         .select(lit(k).as("hop"), col("n_frontier")))
       reached = reached.unionAll(next) // disjoint by the anti-join
@@ -326,33 +319,25 @@ object Graph {
       edges: DataFrame, iters: Int = 3,
       scratchKey: Option[String] = None,
       adjOpt: Option[DataFrame] = None): DataFrame = {
-    val run = scratchKey.map(k => graft.Scratch.named(s"lpa_$k"))
-      .getOrElse(graft.Scratch.fresh("graft_lpa_"))
-    def hop(df: DataFrame, tag: String): DataFrame = {
-      val p = run.resolve(tag).toString
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
+    val run = Scratch.runDir("lpa", scratchKey)
     // adjOpt (r16): callers that keep the symmetric adjacency as a
     // dst-bucketed table pass it in — HashPartitioning(dst) satisfies
     // both per-round aggregations' clustering AND the seed distinct (by
     // symmetry, distinct dst ≡ distinct src), so every round runs with
     // zero exchanges. Any (src, dst) symmetric closure is accepted;
     // results are identical either way.
-    val adj = adjOpt.getOrElse(
-      edges.select(col("u").as("src"), col("v").as("dst"))
-        .unionAll(edges.select(col("v").as("src"), col("u").as("dst"))))
+    val adj = adjOpt.getOrElse(adjacency(edges))
     var labels = adj.select(col("dst").as("vtx")).distinct()
       .select(col("vtx"), col("vtx").as("lbl"))
     (1 to iters).foreach { i =>
-      labels = hop(
+      labels = Scratch.hop(
         adj.join(labels, adj("src") === labels("vtx"))
           .groupBy(col("dst").as("vtx"), col("lbl"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("vtx"))
           .agg(max(struct(col("c").as("c"), negate(col("lbl")).as("neg"),
             col("lbl").as("lbl"))).as("m"))
-          .select(col("vtx"), col("m").getField("lbl").as("lbl")), s"l$i")
+          .select(col("vtx"), col("m").getField("lbl").as("lbl")), run, s"l$i")
     }
     labels.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"))
@@ -382,16 +367,7 @@ object Graph {
       scratchKey: Option[String] = None): DataFrame = {
     // one dir per INVOCATION (was: one per ckpt call — r12 ADVICE's tmpfs
     // accumulation), and one per JVM when the caller passes a reuse key
-    val run = scratchKey.map(k => graft.Scratch.named(s"kcore_$k"))
-      .getOrElse(graft.Scratch.fresh("graft_kcore_"))
-    def ckpt(df: DataFrame, tag: String): DataFrame = {
-      val p = run.resolve(tag).toString
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
-    def degrees(e: DataFrame): DataFrame =
-      e.select(col("u").as("vtx")).unionAll(e.select(col("v").as("vtx")))
-        .groupBy(col("vtx")).agg(count(lit(1)).as("deg"))
+    val run = Scratch.runDir("kcore", scratchKey)
     var cur = edges.select(col("u"), col("v"))
     // The per-round degree frame is CHECKPOINTED (r15 optimization):
     // lazily it was an independent subtree under each of its readers —
@@ -399,7 +375,7 @@ object Graph {
     // 2-scan degree agg (2× per round), and k0 re-derived round 1's
     // degrees a third time. One tiny (≤|V| rows) parquet hop per round
     // serves all of them; k0 is a 1-row agg over the round-1 hop.
-    var deg = ckpt(degrees(cur), "deg1")
+    var deg = Scratch.hop(degrees(cur), run, "deg1")
     val k0 = deg.agg(expr("sum(deg) div count(*)").as("k"))
     val census = (1 to rounds).map { r =>
       val degR = deg
@@ -412,10 +388,10 @@ object Graph {
       // is the 2|E|-row degree agg.
       val keep = degR.crossJoin(broadcast(k0))
         .filter(col("deg") >= col("k")).select(col("vtx"))
-      val next = ckpt(
+      val next = Scratch.hop(
         cur.join(keep.select(col("vtx").as("u")), Seq("u"))
           .join(keep.select(col("vtx").as("v")), Seq("v"))
-          .select(col("u"), col("v")), s"e$r")
+          .select(col("u"), col("v")), run, s"e$r")
       val row = degR.agg(count(lit(1)).as("n_before"))
         .crossJoin(keep.agg(count(lit(1)).as("n_kept")))
         .crossJoin(next.agg(count(lit(1)).as("n_edges")))
@@ -423,7 +399,7 @@ object Graph {
           (col("n_before") - col("n_kept")).as("n_removed"),
           col("n_kept"), col("n_edges"))
       cur = next
-      if (r < rounds) deg = ckpt(degrees(cur), s"deg${r + 1}")
+      if (r < rounds) deg = Scratch.hop(degrees(cur), run, s"deg${r + 1}")
       row
     }
     census.reduce(_ unionAll _)

@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.annotation.tailrec
-
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -10,26 +8,44 @@ import org.apache.spark.sql.functions._
   * percentile/median aggregate is untenable (its state buffers the value
   * distribution: ~n distinct doubles per partition for continuous data).
   *
-  * [[rankValues]] finds the r1-th and r2-th smallest values (1-based) by
-  * repeatedly histogramming the candidate range (one `buckets`-row shuffle
-  * per level) and narrowing to the bucket(s) covering the target ranks.
-  * When the covering range holds ≤ [[MaxCollect]] rows it is resolved with
-  * one bounded TakeOrdered; otherwise the range recurses — each level
-  * divides the value range by `buckets`, so even a fully degenerate
-  * distribution (all mass in one bucket) converges: the range shrinks
-  * geometrically until double resolution separates the values or they are
-  * all equal. Driver state is O(buckets) longs per level; nothing
-  * data-sized ever reaches the driver.
+  * ONE narrowing loop ([[narrowing]]) serves every entry point: the grouped
+  * calls key it by a group column, and [[exactPercentiles]] (with
+  * [[exactPercentile]] / [[exactMedian]]) is its one-group case, run over
+  * a constant group. Each level histograms every open candidate range in
+  * one `buckets`-row-per-range shuffle and narrows to the bucket(s)
+  * covering the target ranks; a range resolves once its covering bucket
+  * holds ≤ `maxCollect` rows or one value, or once its ranks straddle two
+  * buckets. Otherwise it recurses into the covering bucket's own
+  * [min, max] — at most 1/`buckets` of the parent range — so even a fully
+  * degenerate distribution converges: the range shrinks geometrically
+  * until double resolution separates the values. Driver state is
+  * O(groups × buckets) longs per level; nothing data-sized ever reaches
+  * the driver.
   *
-  * [[exactMedian]] / [[exactPercentile]] reproduce the interpolation rule
-  * shared by Spark's `percentile`/`median` and DuckDB's `quantile_cont`:
-  * rank = 1 + p·(n−1), linear interpolation between the two covering
-  * values. For integral-valued columns and dyadic p the result is a single
-  * exact double on any engine (the q54 rationale).
+  * Low-cardinality route, per group: the head aggregate carries an HLL
+  * estimate of each group's distinct values, and a group estimated at
+  * ≤ `maxCollect / 2` resolves at level 0 through the loop's
+  * value-distribution resolve — one (group, value) count pass instead of
+  * a histogram descent, the right algorithm when a column holds few
+  * distinct values (integral quantities, categories). The estimate only
+  * picks the route; both routes are exact.
+  *
+  * Interpolation reproduces the rule shared by Spark's
+  * `percentile`/`median` and DuckDB's `quantile_cont`: rank = 1 + p·(n−1),
+  * linear interpolation a + (b − a)·frac between the two covering values.
+  * For integral-valued columns and dyadic p the result is a single exact
+  * double on any engine (the q54 rationale).
+  *
+  * Null, NaN, and ±Infinity rows are EXCLUDED (nulls per SQL; the
+  * non-finite values would poison the histogram arithmetic — min/NaN
+  * makes the range NaN, ±Inf makes bucket widths infinite — and send
+  * data-sized state to the driver. Callers that assign meaning to
+  * non-finite values should clamp them to finite sentinels first).
   */
 object Stats {
 
-  /** Rows the final TakeOrdered may gather; above this the range recurses. */
+  /** The global entry points' default bound on rows one resolve may
+    * gather per range. */
   private val MaxCollect = 1 << 16
 
   def exactMedian(df: DataFrame, valueCol: String, buckets: Int = 2048): Double =
@@ -41,108 +57,14 @@ object Stats {
       buckets: Int = 2048, maxCollect: Int = MaxCollect): Double =
     exactPercentiles(df, valueCol, Seq(p), buckets, maxCollect).head
 
-  /** Exact quantiles for several p values, sharing the head statistics,
-    * the cardinality probe, AND the first-level histogram across all of
-    * them. Route choice: a cheap HLL probe picks between
-    * (a) LOW-CARDINALITY — one `groupBy(value).count` pass resolves every
-    * quantile from the (small) value distribution, the right algorithm
-    * when the column holds few distinct values (integral quantities,
-    * categories); and (b) CONTINUOUS — ONE shared histogram over
-    * [min, max] locates every p's covering bucket(s), then only the
-    * per-p tails narrow independently. The probe only selects the route;
-    * both routes are exact.
-    *
-    * Null, NaN, and ±Infinity rows are EXCLUDED (nulls per SQL; the
-    * non-finite values would poison the histogram arithmetic — min/NaN
-    * makes the range NaN, ±Inf makes bucket widths infinite — and send
-    * data-sized state to the driver. Callers that assign meaning to
-    * non-finite values should clamp them to finite sentinels first). */
+  /** Exact quantiles of the whole column for several p values — the
+    * one-group case of the narrowing loop, so every p shares the head
+    * statistics, the cardinality estimate and each level's histogram.
+    * NaN for every p when no finite value exists. */
   def exactPercentiles(df: DataFrame, valueCol: String, ps: Seq[Double],
       buckets: Int = 2048, maxCollect: Int = MaxCollect): Seq[Double] = {
-    require(ps.forall(p => p >= 0.0 && p <= 1.0), s"p must be in [0,1]: $ps")
-    // The prune makes ≥3 passes over the projected values (head stats,
-    // level-1 histogram, per-p tail resolves) — persist the single-column
-    // projection for the prune's lifetime so each pass reads the cached
-    // column, not the full source scan (q64 r3 regression: uncached, every
-    // pass re-scanned lineitem). MEMORY_AND_DISK: a too-big cache spills
-    // rather than recomputing.
-    val vals = df.select(col(valueCol).cast("double").as("v"))
-      .filter(finite(col("v")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try exactPercentilesOn(vals, ps, buckets, maxCollect)
-    finally vals.unpersist(blocking = false)
-  }
-
-  private def exactPercentilesOn(vals: DataFrame, ps: Seq[Double],
-      buckets: Int, maxCollect: Int): Seq[Double] = {
-    val head = vals.agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
-      count(lit(1)).as("n"), approx_count_distinct(col("v")).as("nd")).head()
-    if (head.isNullAt(2) || head.getLong(2) == 0L) return ps.map(_ => Double.NaN)
-    val (mn, mx, n) = (head.getDouble(0), head.getDouble(1), head.getLong(2))
-    if (mn == mx) return ps.map(_ => mn)
-    def ranks(p: Double): (Long, Long, Double) = {
-      // 0-based fractional position, EXACTLY as Spark's percentile and
-      // DuckDB's quantile_cont compute it — adding 1.0 before taking the
-      // fraction can shift it by an ulp for non-dyadic p
-      val pos = p * (n - 1)
-      val lower = math.floor(pos)
-      val r1 = lower.toLong + 1
-      (r1, math.min(n, r1 + 1), pos - lower)
-    }
-    if (head.getLong(3) <= maxCollect / 2) {
-      // low-cardinality: one distribution pass answers every quantile
-      val dist = vals.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("v").asc).collect().map(r => (r.getDouble(0), r.getLong(1)))
-      ps.map { p =>
-        val (r1, r2, frac) = ranks(p)
-        var cum = 0L; var a = Double.NaN; var b = Double.NaN
-        for ((v, cnt) <- dist) {
-          if (a.isNaN && cum + cnt >= r1) a = v
-          if (b.isNaN && cum + cnt >= r2) b = v
-          cum += cnt
-        }
-        if (frac == 0.0) a else a + (b - a) * frac
-      }
-    } else {
-      // continuous: ONE level-1 histogram over [mn, mx] serves every p —
-      // each p re-uses it to find its covering bucket(s), and only the
-      // (bucket-sized) tails narrow per p
-      val width = (mx - mn) / buckets
-      if (width == 0.0 || width.isNaN) {
-        // range below double resolution at the top level
-        ps.map { p =>
-          val (r1, r2, frac) = ranks(p)
-          val (a, b) = rankValues(vals, r1, r2, mn, mx, buckets, maxCollect)
-          if (frac == 0.0) a else a + (b - a) * frac
-        }
-      } else {
-        val bucket = least(lit(buckets - 1),
-          greatest(lit(0), floor((col("v") - mn) / width))).cast("int")
-        val hist = vals.groupBy(bucket.as("b")).agg(count(lit(1)).as("cnt"))
-          .orderBy("b").collect().map(r => (r.getInt(0), r.getLong(1)))
-        ps.map { p =>
-          val (r1, r2, frac) = ranks(p)
-          var cum = 0L; var before = 0L; var bLo = -1; var bHi = -1
-          for ((b, cnt) <- hist) {
-            if (bLo < 0 && cum + cnt >= r1) { bLo = b; before = cum }
-            if (bHi < 0 && cum + cnt >= r2) bHi = b
-            cum += cnt
-          }
-          val (a, b) =
-            if (bLo != bHi) {
-              // straddle: r1 = max of bucket bLo, r2 = min of bucket bHi
-              val r = vals.agg(
-                max(when(bucket === bLo, col("v"))).as("a"),
-                min(when(bucket === bHi, col("v"))).as("b")).head()
-              (r.getDouble(0), r.getDouble(1))
-            } else rankValues(vals.filter(bucket === bLo),
-              r1 - before, r2 - before,
-              mn + bLo * width, math.min(mx, mn + (bLo + 1) * width),
-              buckets, maxCollect)
-          if (frac == 0.0) a else a + (b - a) * frac
-        }
-      }
-    }
+    val got = percentiles(df, lit(0), valueCol, ps, buckets, maxCollect)
+    ps.indices.map(pi => got.getOrElse((0, pi), Double.NaN))
   }
 
   /** Finite-value predicate: not null, not NaN, not ±Infinity. */
@@ -159,12 +81,6 @@ object Stats {
     * the driver holds O(groups × buckets) longs, and groups narrow
     * independently — a group resolves as soon as its covering range holds
     * ≤ `maxCollect` rows.
-    *
-    * Like [[rankValues]], level-to-level membership is decided by the SAME
-    * clamped bucket expression that counted the row, never by re-deriving a
-    * value-range predicate — an FP division at a bucket boundary may
-    * disagree with the real-arithmetic range, and a row that was counted
-    * must stay in scope or ranks drift.
     *
     * For many small groups use an ordinary window/aggregate (q98); this
     * path is for the "20 sources, billions of rows each" shape.
@@ -189,34 +105,45 @@ object Stats {
       ps: Seq[Double], buckets: Int = 1024,
       maxCollect: Int = 4096): Map[(Any, Double), Double] = {
     require(ps.nonEmpty, "ps must be non-empty")
+    percentiles(df, col(groupCol), valueCol, ps, buckets, maxCollect)
+      .map { case ((g, pi), v) => (g, ps(pi)) -> v }
+  }
+
+  def groupedMedian(df: DataFrame, groupCol: String, valueCol: String): Map[Any, Double] =
+    groupedPercentile(df, groupCol, valueCol, 0.5)
+
+  /** [[narrowing]] over the finite values of `valueCol`, grouped by `group`,
+    * keyed by (group, index into `ps`); a group with no finite value has
+    * no key. The (g, v) projection is persisted for the loop's lifetime:
+    * every level joins it against the broadcast ranges up to three times
+    * (distribution resolve, histogram, bucket resolve/narrow) — without
+    * the cache each pass would re-scan the source (q64 r3 regression).
+    * MEMORY_AND_DISK: a too-big cache spills rather than recomputing. */
+  private def percentiles(df: DataFrame, group: Column, valueCol: String,
+      ps: Seq[Double], buckets: Int, maxCollect: Int): Map[(Any, Int), Double] = {
     require(ps.forall(p => p >= 0.0 && p <= 1.0), s"p must be in [0,1]: $ps")
-    // null/NaN/±Inf excluded, as in exactPercentiles (same rationale).
-    // Persisted for the loop's lifetime: every level joins the (g, v)
-    // projection against the broadcast ranges up to three times (tiny-range
-    // resolve, histogram, bucket resolve/narrow) — without the cache each
-    // pass would re-scan the source.
-    val vals = df.select(col(groupCol).as("g"), col(valueCol).cast("double").as("v"))
+    val vals = df.select(group.as("g"), col(valueCol).cast("double").as("v"))
       .filter(finite(col("v")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try groupedPercentilesOn(vals, ps, buckets, maxCollect)
-      .map { case ((g, pi), v) => (g, ps(pi)) -> v }
+    try narrowing(vals, ps, buckets, maxCollect)
     finally vals.unpersist(blocking = false)
   }
 
-  /** The (g, p)-keyed narrowing loop behind [[groupedPercentiles]].
+  /** The (g, p)-keyed narrowing loop — the one exact-quantile algorithm.
     *
     * Distributed frames carry a RANGE id (`rid`), not (g, p): a range is a
     * chain of bucket filters rooted at a group's full [mn, mx], and every
     * p currently inside the same chain shares its rows, its histogram, and
     * its resolves — so the number of distributed jobs per level is bounded
     * by the number of DISTINCT ranges, not the number of quantiles.
-    * Membership is decided ONLY by the chained clamped-bucket filter (the
-    * [[rankValues]] rule): a child range's rows are exactly the parent's
-    * rows that counted into the chosen bucket, so two ps sharing a rid
-    * share an identical row set by construction, and ranks never drift.
-    * Interpolation, rank arithmetic, and the span/resolve/narrow rules are
-    * verbatim the single-p loop's — same op sequence, same doubles. */
-  private def groupedPercentilesOn(vals: DataFrame, ps: Seq[Double],
+    * Level-to-level membership is decided ONLY by the chained clamped
+    * bucket expression that counted the row, never by re-deriving a
+    * value-range predicate — an FP division at a bucket boundary may
+    * disagree with the real-arithmetic range, and a row that was counted
+    * must stay in scope or ranks drift. So a child range's rows are exactly
+    * the parent's rows that counted into the chosen bucket, and two ps
+    * sharing a rid share an identical row set by construction. */
+  private def narrowing(vals: DataFrame, ps: Seq[Double],
       buckets: Int, maxCollect: Int): Map[(Any, Int), Double] = {
     val spark = vals.sparkSession
     val gType = vals.schema("g").dataType
@@ -231,12 +158,19 @@ object Stats {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
     val gRid = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+    // root ranges of the groups whose HLL estimate is ≤ maxCollect / 2:
+    // they take the distribution resolve at level 0
+    val lowCard = scala.collection.mutable.Set.empty[Int]
     vals.groupBy(col("g"))
-      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"), count(lit(1)).as("n"))
+      .agg(min(col("v")).as("mn"), max(col("v")).as("mx"), count(lit(1)).as("n"),
+        approx_count_distinct(col("v")).as("nd"))
       .collect().foreach { r =>
         val (g, mn, mx, n) = (r.get(0), r.getDouble(1), r.getDouble(2), r.getLong(3))
         var anyOpen = false
         ps.zipWithIndex.foreach { case (p, pi) =>
+          // 0-based fractional position, EXACTLY as Spark's percentile and
+          // DuckDB's quantile_cont compute it — adding 1.0 before taking
+          // the fraction can shift it by an ulp for non-dyadic p
           val pos = p * (n - 1)
           val lower = math.floor(pos)
           val r1 = lower.toLong + 1
@@ -246,7 +180,11 @@ object Stats {
             anyOpen = true
           }
         }
-        if (anyOpen) { ranges(nextRid) = (mn, mx); gRid(g) = nextRid; nextRid += 1 }
+        if (anyOpen) {
+          ranges(nextRid) = (mn, mx); gRid(g) = nextRid
+          if (r.getLong(4) <= maxCollect / 2) lowCard += nextRid
+          nextRid += 1
+        }
       }
     if (state.isEmpty) return result.toMap
 
@@ -261,6 +199,11 @@ object Stats {
     // the clamped bucket of v within the joined range's [lo, hi)
     def bucketCol: Column = least(lit(buckets - 1), greatest(lit(0),
       floor((col("v") - col("lo")) / ((col("hi") - col("lo")) / buckets)))).cast("int")
+    // (g, p) is answered by the r1-th and r2-th values a and b of its range
+    def settle(k: (Any, Int), a: Double, b: Double): Unit = {
+      val frac = state.remove(k).get.frac
+      result(k) = if (frac == 0.0) a else a + (b - a) * frac
+    }
     def ridFrame(rids: Seq[Int]): DataFrame = {
       val rows = rids.map { rid =>
         val (lo, hi) = ranges(rid); Row(Int.box(rid), lo, hi) }
@@ -271,11 +214,15 @@ object Stats {
 
     while (state.nonEmpty) {
       val activeRids = state.valuesIterator.map(_.rid).toSet
-      // ranges below double resolution: resolve through the (tiny)
-      // per-range value distribution
+      // low-cardinality roots, and ranges below double resolution (only a
+      // handful of representable values remain, however many ROWS carry
+      // them): resolve through the small per-range value distribution.
+      // A collapsed range (lo == hi) lands here too — returning `lo` would
+      // hand back a bucket BOUNDARY, and boundary-rounded rows clamped into
+      // the range may carry a neighboring representable double instead.
       val tinyRids = activeRids.filter { rid =>
         val (lo, hi) = ranges(rid); val w = (hi - lo) / buckets
-        w == 0.0 || w.isNaN }
+        lowCard(rid) || w == 0.0 || w.isNaN }
       if (tinyRids.nonEmpty) {
         val dist = cur.filter(col("rid").isin(tinyRids.toSeq.map(Int.box): _*))
           .groupBy(col("rid"), col("v")).agg(count(lit(1)).as("cnt"))
@@ -289,70 +236,45 @@ object Stats {
             if (b.isNaN && cum + c >= s.r2) b = v
             cum += c
           }
-          result(k) = if (s.frac == 0.0) a else a + (b - a) * s.frac
-          state.remove(k)
+          settle(k, a, b)
         }
       }
       if (state.nonEmpty) {
         val histRids = state.valuesIterator.map(_.rid).toSet.toSeq.sorted
         val hist = cur.join(broadcast(ridFrame(histRids)), "rid")
-          .groupBy(col("rid"), bucketCol.as("b")).agg(count(lit(1)).as("cnt"))
+          .groupBy(col("rid"), bucketCol.as("b"))
+          .agg(count(lit(1)).as("cnt"), min(col("v")).as("mn"), max(col("v")).as("mx"))
           .collect().groupBy(_.getInt(0))
-        // Per (g, p), three outcomes from its covering buckets (verbatim
-        // the single-p rules):
+        // Per (g, p), three outcomes from its covering buckets:
         //  - (r1, r2) in DIFFERENT buckets: r1 is the last row of bucket
-        //    bLo and r2 the first of bucket bHi — one aggregate resolves
-        //    both exactly (narrowing would be a non-terminating trap when
-        //    [bLo..bHi] spans the whole range, e.g. a balanced two-valued
-        //    group);
-        //  - one SMALL bucket: bounded per-bucket top-k collect;
-        //  - one LARGE bucket: narrow to it (range shrinks by the bucket
-        //    count each level — guaranteed progress).
+        //    bLo and r2 the first of bucket bHi, so the histogram's own
+        //    max(bLo) / min(bHi) answer both exactly (narrowing would be a
+        //    non-terminating trap when [bLo..bHi] spans the whole range,
+        //    e.g. a balanced two-valued group); likewise one bucket whose
+        //    rows all carry ONE value answers both ranks with it;
+        //  - one SMALL bucket: bounded per-bucket collect;
+        //  - one LARGE bucket: narrow to it (the range shrinks at least by
+        //    the bucket count each level — guaranteed progress).
         // Work batches by DISTINCT (rid, bucket) — ps sharing a target
         // bucket share the job and, for narrow, the child range.
-        val span = scala.collection.mutable.LinkedHashMap.empty[(Any, Int), (Int, Int)]
         val resolve = scala.collection.mutable.LinkedHashMap.empty[(Any, Int), (Int, Long)]
-        val narrow = scala.collection.mutable.LinkedHashMap.empty[(Any, Int), (Int, Long)]
+        val narrow = scala.collection.mutable.LinkedHashMap.empty[(Any, Int), (Row, Long)]
+        val answered = scala.collection.mutable.LinkedHashMap.empty[(Any, Int), (Double, Double)]
         state.foreach { case (k, s) =>
-          val h = hist.getOrElse(s.rid, Array.empty[Row])
-            .map(r => (r.getInt(1), r.getLong(2))).sortBy(_._1)
-          var cum = 0L; var before = 0L; var bLo = -1; var bHi = -1
-          var inBucket = 0L
-          for ((b, c) <- h) {
-            if (bLo < 0 && cum + c >= s.r1) { bLo = b; before = cum; inBucket = c }
-            if (bHi < 0 && cum + c >= s.r2) bHi = b
+          val h = hist.getOrElse(s.rid, Array.empty[Row]).sortBy(_.getInt(1))
+          var cum = 0L; var before = 0L; var bLo: Row = null; var bHi: Row = null
+          for (r <- h) {
+            val c = r.getLong(2)
+            if (bLo == null && cum + c >= s.r1) { bLo = r; before = cum }
+            if (bHi == null && cum + c >= s.r2) bHi = r
             cum += c
           }
-          if (bLo != bHi) span(k) = (bLo, bHi)
-          else if (inBucket <= maxCollect) resolve(k) = (bLo, before)
+          if ((bLo ne bHi) || bLo.getDouble(3) == bLo.getDouble(4))
+            answered(k) = (bLo.getDouble(4), bHi.getDouble(3))
+          else if (bLo.getLong(2) <= maxCollect) resolve(k) = (bLo.getInt(1), before)
           else narrow(k) = (bLo, before)
         }
-        if (span.nonEmpty) {
-          // one agg row per DISTINCT (rid, bLo, bHi) triple
-          // .iterator before .map: mapping a Map to pairs/tuples must not
-          // re-collapse by a now-non-unique key
-          val triples = span.iterator.map { case (k, (bLo, bHi)) =>
-            (state(k).rid, bLo, bHi) }.toSeq.distinct.zipWithIndex
-          val rows = triples.map { case ((rid, bLo, bHi), sid) =>
-            val (lo, hi) = ranges(rid)
-            Row(Int.box(rid), lo, hi, Int.box(bLo), Int.box(bHi), Int.box(sid)) }
-          val f = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
-            StructType(Seq(StructField("rid", IntegerType), StructField("lo", DoubleType),
-              StructField("hi", DoubleType), StructField("bLo", IntegerType),
-              StructField("bHi", IntegerType), StructField("sid", IntegerType))))
-          val got = cur.join(broadcast(f), "rid")
-            .groupBy(col("sid")).agg(
-              max(when(bucketCol === col("bLo"), col("v"))).as("a"),
-              min(when(bucketCol === col("bHi"), col("v"))).as("b"))
-            .collect().map(r => r.getInt(0) -> (r.getDouble(1), r.getDouble(2))).toMap
-          val sidOf = triples.toMap
-          span.foreach { case (k, (bLo, bHi)) =>
-            val s = state(k)
-            val (a, b) = got(sidOf((s.rid, bLo, bHi)))
-            result(k) = if (s.frac == 0.0) a else a + (b - a) * s.frac
-            state.remove(k)
-          }
-        }
+        answered.foreach { case (k, (a, b)) => settle(k, a, b) }
         if (resolve.nonEmpty) {
           // rows collected are bounded by the covering-bucket size
           // (≤ maxCollect per distinct bucket), keeping the driver contract
@@ -373,19 +295,18 @@ object Stats {
             val s = state(k)
             val sorted = got.getOrElse((s.rid, bLo), Array.empty[Row])
               .map(_.getDouble(2)).sorted
-            val a = sorted((s.r1 - before).toInt - 1)
-            val b = sorted((s.r2 - before).toInt - 1)
-            result(k) = if (s.frac == 0.0) a else a + (b - a) * s.frac
-            state.remove(k)
+            settle(k, sorted((s.r1 - before).toInt - 1), sorted((s.r2 - before).toInt - 1))
           }
         }
         if (narrow.nonEmpty) {
-          // each DISTINCT (rid, bLo) becomes ONE child range; every p that
-          // chose it re-keys onto the child and keeps sharing rows
-          val pairs = narrow.iterator.map { case (k, (bLo, _)) =>
-            (state(k).rid, bLo) }.toSeq.distinct // .iterator: same pair-collapse trap
-          val childOf = pairs.map { p => p -> { val c = nextRid; nextRid += 1; c } }.toMap
-          val rows = pairs.map { case (rid, bLo) =>
+          // each DISTINCT covering bucket (a histogram row: rid, b, cnt,
+          // mn, mx) becomes ONE child range; every p that chose it re-keys
+          // onto the child and keeps sharing rows
+          val picked = narrow.valuesIterator.map(_._1).toSeq.distinct
+          val childOf = picked.map { h =>
+            (h.getInt(0), h.getInt(1)) -> { val c = nextRid; nextRid += 1; c } }.toMap
+          val rows = picked.map { h =>
+            val (rid, bLo) = (h.getInt(0), h.getInt(1))
             val (lo, hi) = ranges(rid)
             Row(Int.box(rid), lo, hi, Int.box(bLo), Int.box(childOf((rid, bLo)))) }
           val f = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
@@ -395,15 +316,15 @@ object Stats {
           cur = cur.join(broadcast(f), "rid")
             .filter(bucketCol === col("bLo"))
             .select(col("child").as("rid"), col("v"))
-          pairs.foreach { case (rid, bLo) =>
-            val (lo, hi) = ranges(rid)
-            val width = (hi - lo) / buckets
-            ranges(childOf((rid, bLo))) =
-              (lo + bLo * width, math.min(hi, lo + (bLo + 1) * width))
-          }
-          narrow.foreach { case (k, (bLo, before)) =>
+          // the child spans its rows' own [min, max], not the bucket's
+          // nominal bounds: two values packed far below the bucket width
+          // (0 and 1e-300) separate at the next level instead of after one
+          // level per factor of `buckets` in between
+          picked.foreach { h =>
+            ranges(childOf((h.getInt(0), h.getInt(1)))) = (h.getDouble(3), h.getDouble(4)) }
+          narrow.foreach { case (k, (h, before)) =>
             val s = state(k)
-            s.rid = childOf((s.rid, bLo))
+            s.rid = childOf((h.getInt(0), h.getInt(1)))
             s.r1 -= before
             s.r2 -= before
           }
@@ -412,71 +333,5 @@ object Stats {
       }
     }
     result.toMap
-  }
-
-  def groupedMedian(df: DataFrame, groupCol: String, valueCol: String): Map[Any, Double] =
-    groupedPercentile(df, groupCol, valueCol, 0.5)
-
-  /** The r1-th and r2-th smallest of `vals.v` (1-based, r1 ≤ r2 ≤ r1+1),
-    * scanning only within [lo, hi]. */
-  @tailrec private def rankValues(vals: DataFrame, r1: Long, r2: Long,
-      lo: Double, hi: Double, buckets: Int, maxCollect: Int): (Double, Double) = {
-    // NOTE: a collapsed range (lo == hi) deliberately falls into the
-    // width==0 branch below — returning `lo` directly would hand back a
-    // bucket BOUNDARY, and boundary-rounded rows clamped into the range
-    // may carry a neighboring representable double, not `lo` itself.
-    val width = (hi - lo) / buckets
-    if (width == 0.0 || width.isNaN) {
-      // Range below double resolution: only a handful of representable
-      // values remain, however many ROWS carry them — resolve through the
-      // (tiny) value distribution, never a row collect.
-      val dist = vals.groupBy(col("v")).agg(count(lit(1)).as("cnt"))
-        .orderBy(col("v").asc).collect().map(r => (r.getDouble(0), r.getLong(1)))
-      var cum = 0L; var a = Double.NaN; var b = Double.NaN
-      for ((v, cnt) <- dist) {
-        if (a.isNaN && cum + cnt >= r1) a = v
-        if (b.isNaN && cum + cnt >= r2) b = v
-        cum += cnt
-      }
-      return (a, b)
-    }
-    val bucket = least(lit(buckets - 1),
-      greatest(lit(0), floor((col("v") - lo) / width))).cast("int")
-    val hist = vals.groupBy(bucket.as("b")).agg(count(lit(1)).as("cnt"))
-      .orderBy("b").collect().map(r => (r.getInt(0), r.getLong(1)))
-    var cum = 0L; var before = 0L; var bLo = -1; var bHi = -1
-    for ((b, cnt) <- hist) {
-      if (bLo < 0 && cum + cnt >= r1) { bLo = b; before = cum }
-      if (bHi < 0 && cum + cnt >= r2) bHi = b
-      cum += cnt
-    }
-    if (bLo != bHi) {
-      // r2 = r1 + 1 and they land in DIFFERENT buckets ⇒ r1 is the last
-      // row of bucket bLo and r2 the first of bucket bHi — one aggregate
-      // resolves both exactly. (Narrowing instead would be a trap: with
-      // mass at both range extremes, [bLo..bHi] spans the whole range and
-      // the recursion would make no progress — an infinite loop.)
-      val r = vals.agg(
-        max(when(bucket === bLo, col("v"))).as("a"),
-        min(when(bucket === bHi, col("v"))).as("b")).head()
-      return (r.getDouble(0), r.getDouble(1))
-    }
-    val need = r2 - before
-    val inRange = vals.filter(bucket === bLo)
-    if (need <= maxCollect) {
-      // bounded distributed top-k: TakeOrdered of `need` rows, never the
-      // whole bucket
-      val arr = inRange.orderBy(col("v").asc).limit(need.toInt)
-        .collect().map(_.getDouble(0))
-      ((arr((r1 - before).toInt - 1), arr((r2 - before).toInt - 1)))
-    } else {
-      // narrow to the single covering bucket and re-rank inside it — the
-      // range shrinks by the bucket count each level, so this terminates;
-      // boundary-rounded stragglers are clamped into the edge buckets by
-      // the greatest/least guards, so no counted row can escape the range
-      val newLo = lo + bLo * width
-      val newHi = math.min(hi, lo + (bLo + 1) * width)
-      rankValues(inRange, r1 - before, r2 - before, newLo, newHi, buckets, maxCollect)
-    }
   }
 }

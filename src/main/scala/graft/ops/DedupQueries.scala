@@ -105,11 +105,6 @@ object DedupQueries {
   def prefixFilterJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val run = graft.Scratch.named(s"q112_${graft.Scratch.dirKey(dir)}")
-    def ckpt(df: DataFrame, tag: String): DataFrame = {
-      val p = run.resolve(tag).toString
-      df.write.mode("overwrite").parquet(p)
-      spark.read.parquet(p)
-    }
     // distinct shingle rows, materialized ONCE (localCheckpoint — block
     // store, not a parquet hop: the frame is consumed exactly twice
     // within this invocation and spills to disk under pressure instead
@@ -144,10 +139,10 @@ object DedupQueries {
     // ONE dict-join + per-doc sort pass feeds BOTH the prefix index and
     // the verify arrays (r6: a second groupBy+collect_list over sh for the
     // verify sets re-shuffled and re-sorted the same 250k shingle rows)
-    val docArr = ckpt(sh.join(dict.select($"s", $"rank"), "s")
+    val docArr = graft.Scratch.hop(sh.join(dict.select($"s", $"rank"), "s")
       .groupBy($"doc_id")
       .agg(sort_array(collect_list($"rank")).as("sarr"))
-      .select($"doc_id", $"sarr", size($"sarr").as("sz")), "docarr")
+      .select($"doc_id", $"sarr", size($"sarr").as("sz")), run, "docarr")
     // both sides of the candidate self-join read this frame: the explode
     // re-runs per side, but off the checkpointed docArr parquet it is a
     // cheap columnar scan + explode (re-measured r15), not a rebuild.

@@ -67,10 +67,7 @@ object GraphQueries {
     * aggregations, not sort-merge joins. */
   private def coPurchaseAdj(spark: SparkSession, dir: String): DataFrame =
     spark.table(graft.Derived("graph.adjacency", dir) {
-      import spark.implicits._
-      val e = coPurchaseEdges(spark, dir)
-      val adj = e.select($"u".as("src"), $"v".as("dst"))
-        .unionAll(e.select($"v".as("src"), $"u".as("dst")))
+      val adj = graft.operators.Graph.adjacency(coPurchaseEdges(spark, dir))
       val buckets = Tables.partitionsFor(edgesPath(spark, dir), floor = 8, scale = 2)
       val name = s"graft_adj_${graft.Scratch.dirKey(dir)}"
       val path = graft.Scratch.named(s"adjbkt_${graft.Scratch.dirKey(dir)}")

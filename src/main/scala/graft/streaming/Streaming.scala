@@ -412,20 +412,24 @@ object Streaming {
     spark.readStream.schema(schema).options(options).parquet(path)
   }
 
-  /** Run `body` with `spark.sql.shuffle.partitions` (= the stateful
-    * operators' state-store partition count) sized to the drive's state
-    * volume instead of the batch session's CPU count, restoring after.
-    * State partitioning is a per-deployment sizing decision pinned into
-    * the checkpoint; for the gate drives, 32 partitions would mean 16×
-    * the state files, fsyncs, and per-batch task launches for toy state
-    * (the ~12-14 s streaming-family fixed overhead of VERDICT r4 #6 was
-    * dominated by exactly this). `n = 0` (the drive helpers' default)
-    * derives the count from the source's bytes: one state partition per
-    * 32 MiB, floor 2 ([[graft.Tables.partitionsFor]]; r15, guide §2
-    * "derive partitioning from input size"). The old constant 8 paid
-    * ~0.1 s of per-partition state-store commit + task-launch machinery
-    * per drive for toy state: the q216 drive measured 3.66–3.99 s at
-    * np=8 vs 2.67–2.91 s at np=2 with byte-identical output (19 870
+  /** The one drive every sink below shares: a file-source stream over
+    * `sourceDir`, handed to `sink` to build its writer; a scratch
+    * checkpoint unless `checkpointDir` is given; start, process everything
+    * available, record the state peak ([[StateMeter]]), stop.
+    *
+    * While the drive runs, `spark.sql.shuffle.partitions` (= the stateful
+    * operators' state-store partition count) is sized to the drive's state
+    * volume instead of the batch session's CPU count, and restored after:
+    * one state partition per 32 MiB of source, floor 2
+    * ([[graft.Tables.partitionsFor]]; r15, guide §2 "derive partitioning
+    * from input size"). State partitioning is a per-deployment sizing
+    * decision pinned into the checkpoint; for the gate drives, 32
+    * partitions would mean 16× the state files, fsyncs, and per-batch task
+    * launches for toy state (the ~12-14 s streaming-family fixed overhead
+    * of VERDICT r4 #6 was dominated by exactly this). The old constant 8
+    * paid ~0.1 s of per-partition state-store commit + task-launch
+    * machinery per drive for toy state: the q216 drive measured 3.66–3.99 s
+    * at np=8 vs 2.67–2.91 s at np=2 with byte-identical output (19 870
     * rows), and batch 2 of that drive carries ZERO input rows yet cost
     * 745 ms at np=8 (all addBatch) vs 382 ms at np=2. Recovery safety: a
     * streaming checkpoint persists its own `spark.sql.shuffle.partitions`
@@ -433,19 +437,32 @@ object Streaming {
     * two-invocation recovery pair cannot diverge even if the derived
     * count changed between runs.
     *
-    * CONTRACT: the conf change is SESSION-GLOBAL while `body` runs — any
-    * batch query planned concurrently in the same session would silently
-    * inherit the streaming state sizing. The gate drives (Verify/Bench)
-    * execute queries strictly sequentially, which is the only mode this
-    * helper supports; a host that plans batch work concurrently with a
-    * streaming drive must run the drive in `spark.cloneSession()` (per-
-    * session conf isolation) instead. */
-  private def withStatePartitions[A](spark: SparkSession, n: Int,
-      source: String)(body: => A): A = {
+    * CONTRACT: the conf change is SESSION-GLOBAL while the drive runs —
+    * any batch query planned concurrently in the same session would
+    * silently inherit the streaming state sizing. The gate drives
+    * (Verify/Bench) execute queries strictly sequentially, which is the
+    * only mode this helper supports; a host that plans batch work
+    * concurrently with a streaming drive must run the drive in
+    * `spark.cloneSession()` (per-session conf isolation) instead.
+    *
+    * The default checkpoint is tmpfs scratch: the gate drives are
+    * non-durable by construction (the memory sink cannot even restart),
+    * so disk-fsynced state/offset logs are pure overhead. */
+  private def drive(spark: SparkSession, sourceDir: String, name: String,
+      sourceOptions: Map[String, String], checkpointDir: Option[String] = None)(
+      sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
+        org.apache.spark.sql.Row]): Unit = {
     val saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
-      (if (n > 0) n else graft.Tables.partitionsFor(source, floor = 2)).toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+      graft.Tables.partitionsFor(sourceDir, floor = 2).toString)
+    try {
+      val q = sink(fileStream(spark, sourceDir, sourceOptions))
+        .option("checkpointLocation", checkpointDir.getOrElse(
+          graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString))
+        .queryName(name)
+        .start()
+      try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
   }
 
   /** `checkpointDir`: pass the SAME path across two invocations to
@@ -458,22 +475,15 @@ object Streaming {
   def runForeachBatch(spark: SparkSession, sourceDir: String, outDir: String,
       plan: DataFrame => DataFrame, name: String,
       sourceOptions: Map[String, String] = Map.empty,
-      statePartitions: Int = 0,
       checkpointDir: Option[String] = None,
-      outputMode: String = "append"): Unit = withStatePartitions(spark,
-    statePartitions, sourceDir) {
-    val stream = fileStream(spark, sourceDir, sourceOptions)
-    val q = plan(stream).writeStream
-      .outputMode(outputMode)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-      }
-      .option("checkpointLocation", checkpointDir.getOrElse(
-        graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString))
-      .queryName(name)
-      .start()
-    try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
-  }
+      outputMode: String = "append"): Unit =
+    drive(spark, sourceDir, name, sourceOptions, checkpointDir) { stream =>
+      plan(stream).writeStream
+        .outputMode(outputMode)
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          batch.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
+        }
+    }
 
   /** STREAMING MERGE SINK (q252) — foreachBatch that maintains a keyed
     * SNAPSHOT TABLE under the generation-pointer model instead of
@@ -488,12 +498,10 @@ object Streaming {
     * raw batch to (key BIGINT, n_delta BIGINT, cents_delta BIGINT). */
   def runMergeSink(spark: SparkSession, sourceDir: String, root: String,
       delta: DataFrame => DataFrame, name: String,
-      sourceOptions: Map[String, String] = Map.empty,
-      statePartitions: Int = 0): Unit =
-    withStatePartitions(spark, statePartitions, sourceDir) {
+      sourceOptions: Map[String, String] = Map.empty): Unit =
+    drive(spark, sourceDir, name, sourceOptions) { stream =>
       import org.apache.spark.sql.functions._
-      val stream = fileStream(spark, sourceDir, sourceOptions)
-      val q = stream.writeStream
+      stream.writeStream
         .outputMode("append")
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
             _: Long) =>
@@ -515,11 +523,6 @@ object Streaming {
           merged.write.mode("overwrite").parquet(s"$root/$gen")
           graft.operators.Ann.publishGeneration(spark, root, gen)
         }
-        .option("checkpointLocation",
-          graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString)
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
     }
 
   /** Run a streaming query over a parquet directory source and collect the
@@ -534,19 +537,10 @@ object Streaming {
   def runOnce(spark: SparkSession, sourceDir: String,
       plan: DataFrame => DataFrame, name: String,
       mode: OutputMode = OutputMode.Complete(),
-      sourceOptions: Map[String, String] = Map.empty,
-      statePartitions: Int = 0): DataFrame = withStatePartitions(spark,
-    statePartitions, sourceDir) {
-    val stream = fileStream(spark, sourceDir, sourceOptions)
-    val q = plan(stream).writeStream
-      .outputMode(mode)
-      // tmpfs checkpoint: the memory sink makes this drive non-durable by
-      // construction, so disk-fsynced state/offset logs are pure overhead
-      .option("checkpointLocation",
-        graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString)
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
+      sourceOptions: Map[String, String] = Map.empty): DataFrame = {
+    drive(spark, sourceDir, name, sourceOptions) { stream =>
+      plan(stream).writeStream.outputMode(mode).format("memory")
+    }
     spark.table(name)
   }
 }

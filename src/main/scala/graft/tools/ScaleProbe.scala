@@ -16,8 +16,8 @@ import graft.{GateRunner, LocalSession, Tables}
   * wedge growth in the triangle join, state growth in streaming — is
   * invisible at one size but shows up as ratio ≫ factor here; the probe
   * FAILS LOUDLY (nonzero exit after writing results) when any ratio
-  * reaches `SPARK_GRAFT_SCALE_FAIL` (default 15 at factor 10: headroom
-  * over shuffle/log-factor growth, far under quadratic's 100).
+  * reaches [[FailRatio]] (15 at factor 10: headroom over shuffle/
+  * log-factor growth, far under quadratic's 100).
   *
   * The scaled corpus is a SALTED union, not a blind `factor`-fold copy
   * ([[scaledCorpus]]): keys are offset per copy and document text /
@@ -420,11 +420,19 @@ object ScaleProbe {
     def ratio: Double = tN / math.max(t1, 0.05) // floor: sub-50ms base noise
   }
 
+  /** A gate fails the probe when its N×-to-1× wall-clock ratio reaches
+    * this. */
+  val FailRatio = 15.0
+
+  /** A gate fails the probe when a single-partition window exchange
+    * carried at least this many rows at N×. */
+  val SpwCap = 50000L
+
   /** Build the scaled corpus, probe every gate at both sizes, write the
     * markdown table, and return the results — the testable core behind
     * [[main]] (no session stop, no process exit). */
   def run(spark: SparkSession, sfDir: String, outMd: String, factor: Int,
-      gates: Seq[GateRunner.Gate], failAt: Double): Seq[Result] = {
+      gates: Seq[GateRunner.Gate]): Seq[Result] = {
     val scaled = scaledCorpus(spark, sfDir, factor)
     System.err.println(s"[scale] corpus ready: $scaled (${factor}x $sfDir)")
 
@@ -459,15 +467,13 @@ object ScaleProbe {
     }
 
     def f2(v: Double) = f"$v%.2f"
-    val spwCap =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_SPW_CAP", "50000").toLong
     val md = new StringBuilder
     md ++= s"# Scaling probe — measured two-point slope\n\n"
     md ++= s"`graft.tools.ScaleProbe` on `$sfDir` vs a salted ${factor}× union\n"
     md ++= s"(distinct keys/text/vectors per copy — see the ScaleProbe scaladoc),\n"
     md ++= s"${spark.sparkContext.master}; per gate: one warm pass (fixtures + JIT), one timed\n"
-    md ++= s"full-plan pass. Fail thresholds: ratio ≥ $failAt, or\n"
-    md ++= s"1-part-window rows ≥ $spwCap at ${factor}× (`spw` columns: the\n"
+    md ++= s"full-plan pass. Fail thresholds: ratio ≥ $FailRatio, or\n"
+    md ++= s"1-part-window rows ≥ $SpwCap at ${factor}× (`spw` columns: the\n"
     md ++= s"largest EXECUTED row count any single-partition window exchange\n"
     md ++= s"carried — the wall-clock slope cannot see a single-partition\n"
     md ++= s"sort, which is \"linear\" on one core; bounded control frames\n"
@@ -481,14 +487,14 @@ object ScaleProbe {
     md ++= s"|---|---:|---:|---:|---:|---:|---:|---:|---|\n"
     results.foreach { r =>
       val verdict =
-        if (r.ratio >= failAt) "**SUPER-LINEAR — FAIL**"
-        else if (r.spwN >= spwCap) "**1-PART WINDOW — FAIL**"
+        if (r.ratio >= FailRatio) "**SUPER-LINEAR — FAIL**"
+        else if (r.spwN >= SpwCap) "**1-PART WINDOW — FAIL**"
         else if (r.ratio <= factor * 1.2) "linear or better"
         else "linear + overhead"
       md ++= s"| ${r.gate} | ${f2(r.t1)} | ${f2(r.tN)} | ${f2(r.ratio)} | ${r.spw1} | ${r.spwN} | ${r.state1} | ${r.stateN} | $verdict |\n"
     }
     md ++= s"\nA ratio near $factor is linear; well under $factor means fixed\n"
-    md ++= s"per-run overhead still dominates at 1×; at or above $failAt the\n"
+    md ++= s"per-run overhead still dominates at 1×; at or above $FailRatio the\n"
     md ++= s"gate has a term growing faster than the data and the probe exits\n"
     md ++= s"nonzero.\n"
     if (skewResults.nonEmpty) {
@@ -641,14 +647,11 @@ object ScaleProbe {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val gates = GateRunner.select(
       args.lift(3).map(_.split(',').toSeq).getOrElse(DefaultGates))
-    val failAt = sys.env.getOrElse("SPARK_GRAFT_SCALE_FAIL", "15").toDouble
     val spark = LocalSession.fromEnv()
-    val results = run(spark, sfDir, outMd, factor, gates, failAt)
+    val results = run(spark, sfDir, outMd, factor, gates)
     spark.stop()
-    val spwCap =
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_SPW_CAP", "50000").toLong
-    val flagged = results.filter(_.ratio >= failAt)
-    val funneled = results.filter(_.spwN >= spwCap)
+    val flagged = results.filter(_.ratio >= FailRatio)
+    val funneled = results.filter(_.spwN >= SpwCap)
     if (flagged.nonEmpty || funneled.nonEmpty) {
       if (flagged.nonEmpty)
         System.err.println(s"[scale] SUPER-LINEAR gates: " +

@@ -188,7 +188,7 @@ class DocsConsistencySpec extends AnyFunSuite {
       s"SCALING.md lacks rows for default probe gates $missing — " +
         """regenerate with sbt "runMain graft.tools.ScaleProbe"""")
     // and no committed row may carry a super-linear ratio
-    val bad = rows.filter(_._2 >= 15.0)
+    val bad = rows.filter(_._2 >= tools.ScaleProbe.FailRatio)
     assert(bad.isEmpty, s"committed SCALING.md ships super-linear ratios: $bad")
     assert(scaling.contains("## Findings log"),
       "SCALING.md lost its findings log")

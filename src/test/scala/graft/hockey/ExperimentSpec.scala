@@ -5,7 +5,8 @@ import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
 import graft.SparkSpec
 
 /** `Experiment.run` fits its models concurrently: the thread helper's
-  * contract, and the console order the concurrent phase keeps. */
+  * contract, and the console order the concurrent phase keeps. Also the
+  * CLI's rejection of unknown `--models` keys. */
 class ExperimentSpec extends SparkSpec {
 
   test("concurrently returns results in task order, whatever order the tasks finish in") {
@@ -55,5 +56,20 @@ class ExperimentSpec extends SparkSpec {
     assert(blocks == blocks.sorted, text)
     assert(text.indexOf("Train = ") < blocks.head, text)
     assert(report.metrics.keySet == Set("Multilayer Perceptron", "Logistic Regression"))
+  }
+
+  test("an unknown --models key is rejected, and named, before any work starts") {
+    val parsed = intercept[IllegalArgumentException] {
+      Experiment.parseArgs(Array("--events", "e.csv", "--results", "r.csv", "--models", "rf,xgb"))
+    }
+    assert(parsed.getMessage.contains("\"xgb\""), parsed.getMessage)
+    // run rejects it before reading its inputs: these paths do not exist
+    val ran = intercept[IllegalArgumentException] {
+      Experiment.run(spark, Experiment.Opts("no/such/events.csv", "no/such/results.csv",
+        models = Seq("rf", " lr"), fast = true))
+    }
+    assert(ran.getMessage.contains("\" lr\""), ran.getMessage)
+    assert(Experiment.parseArgs(Array("--events", "e.csv", "--results", "r.csv",
+      "--models", "mlp,rf")).models == Seq("mlp", "rf"))
   }
 }

@@ -195,9 +195,10 @@ class HockeySpec extends SparkSpec {
     val cfg = Models.ModelConfig(rfNumTrees = 3, rfMaxDepth = 3, lrMaxIter = 5,
       gbtMaxIter = 2, gbtMaxDepth = 2, mlpMaxIter = 3)
     val dir = graft.Scratch.fresh("models").toString
-    for ((name, pipe) <- Models.all(cfg)) {
+    for (m <- Models.table) {
+      val name = m.name
       val slug = name.toLowerCase.replace(' ', '_')
-      val model = pipe.fit(labeled)
+      val model = m.pipeline(cfg).fit(labeled)
       model.write.overwrite().save(s"$dir/$slug")
       val reloaded = org.apache.spark.ml.PipelineModel.load(s"$dir/$slug")
       val orig = model.transform(labeled)

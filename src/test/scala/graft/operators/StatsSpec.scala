@@ -1,11 +1,42 @@
 package graft.operators
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
 
 class StatsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Spark jobs `body` starts on this thread, counted by a listener. A
+    * marker job in a group of its own follows `body`; the listener sees
+    * events in order, so once it has seen the marker it has seen every
+    * job of `body`. */
+  private def jobsOf(body: => Unit): Int = {
+    val id = java.util.UUID.randomUUID().toString
+    val (jobs, marked) = (new AtomicInteger, new java.util.concurrent.CountDownLatch(1))
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`id`) => jobs.incrementAndGet(): Unit
+          case Some(g) if g == s"$id-marker" => marked.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(id, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$id-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("exactMedian equals the median aggregate (odd n, even n, skew, constants)") {
     val odd = Seq(5.0, 1.0, 9.0, 3.0, 7.0).toDF("v")
@@ -155,6 +186,69 @@ class StatsSpec extends SparkSpec {
       val oneShot = Stats.exactPercentile(vs, "v", p)
       val recursed = Stats.exactPercentile(vs, "v", p, buckets = 16, maxCollect = 4)
       assert(oneShot == recursed, s"p=$p: $oneShot vs $recursed")
+    }
+  }
+
+  test("low-cardinality data: the global and the grouped call run no more jobs than the old global route") {
+    // integral values, 37 distinct — under both entry points' HLL threshold
+    // (maxCollect / 2), so each group resolves at level 0 through one
+    // value-distribution pass after the head aggregate. 7 is the job count
+    // of the former dedicated global route (head aggregate, then an
+    // ordered groupBy(v).count collect); the grouped loop used to run 10,
+    // paying a histogram level and a resolve after its head pass
+    val oneGroup = (0 until 5000).map(i => (i % 37).toDouble).toDF("v")
+    val grouped = (0 until 6000).map(i => (s"g${i % 3}", (i % 37).toDouble)).toDF("g", "v")
+    val ps = Seq(0.25, 0.5, 0.75)
+    val global = jobsOf { Stats.exactPercentiles(oneGroup, "v", ps): Unit }
+    val perGroup = jobsOf { Stats.groupedPercentiles(grouped, "g", "v", ps): Unit }
+    assert(global <= 7, s"exactPercentiles ran $global jobs")
+    assert(perGroup <= 7, s"groupedPercentiles ran $perGroup jobs")
+  }
+
+  test("property: exactPercentiles equals groupedPercentiles under one constant group") {
+    // one loop serves both entry points; the global call is its one-group
+    // case. Shapes: random integral data with duplicates, a balanced
+    // two-valued straddle, a range below double resolution (the
+    // distribution resolve), and a continuous column driven through
+    // several narrowing levels (maxCollect = 4)
+    val rng = new scala.util.Random(23)
+    val ulp = math.ulp(1.0)
+    val shapes: Seq[(String, Seq[Double])] = Seq(
+      "integral+dups" -> {
+        val base = Seq.fill(300 + rng.nextInt(300))(math.floor(rng.nextGaussian() * 50) - 10)
+        base ++ base.take(rng.nextInt(base.size))
+      },
+      "straddle" -> (Seq.fill(500)(0.0) ++ Seq.fill(500)(1.0)),
+      "tiny-range" -> Seq.fill(400)(1.0 + rng.nextInt(5) * ulp),
+      "continuous" -> Seq.fill(3000)(rng.nextGaussian() * 1000))
+    val ps = Seq(0.0, 0.05, 0.25, 0.5, 0.51, 0.9, 1.0)
+    for ((shape, vs) <- shapes; (buckets, maxCollect) <- Seq((16, 4), (2048, 1 << 16))) {
+      val df: DataFrame = vs.toDF("v")
+      val global = Stats.exactPercentiles(df, "v", ps, buckets, maxCollect)
+      val grouped = Stats.groupedPercentiles(df.withColumn("g", lit("all")), "g", "v",
+        ps, buckets, maxCollect)
+      ps.zip(global).foreach { case (p, want) =>
+        assert(grouped(("all", p)) == want,
+          s"$shape buckets=$buckets maxCollect=$maxCollect p=$p: ${grouped(("all", p))} vs $want")
+      }
+    }
+    assert(Stats.exactPercentiles(Seq.empty[Double].toDF("v"), "v", ps).forall(_.isNaN))
+    assert(Stats.exactPercentiles(Seq(Double.NaN).toDF("v"), "v", ps).forall(_.isNaN))
+  }
+
+  test("two values packed far below the bucket width separate at the next level") {
+    // 0 and 1e-300 share one level-1 bucket with 1000 rows; narrowing to
+    // the bucket's nominal bounds took one level per factor of 2048 down
+    // to 1e-300 (~90 levels); narrowing to its rows' own [min, max] splits
+    // them at level 2
+    val df = (Seq.fill(500)(0.0) ++ Seq.fill(500)(1e-300) ++ (1 to 2000).map(_.toDouble))
+      .toDF("v")
+    for (p <- Seq(0.1, 0.25)) {
+      val want = df.agg(expr(s"percentile(v, ${p}D)")).head().getDouble(0)
+      var got = Double.NaN
+      val jobs = jobsOf { got = Stats.exactPercentile(df, "v", p, maxCollect = 64) }
+      assert(got == want, s"p=$p: $got vs $want")
+      assert(jobs <= 12, s"p=$p ran $jobs jobs")
     }
   }
 }
