@@ -12,12 +12,11 @@ package graft
   *     (streaming/ANN/graph — VERDICT r9 #6; a full-suite pass cost more
   *     than a timed trial while the per-query min across trials already
   *     absorbs ordinary plans' first-pass JIT), TIME-BOXED by
-  *     `SPARK_GRAFT_BENCH_WARMUP_SECS` (default 600); the artifact records
-  *     the count actually run.
-  *  3. TRIALS: `SPARK_GRAFT_BENCH_TRIALS` (default 3) timed suite passes in
-  *     sorted name order with per-query min — so per-query numbers measure
-  *     steady-state plan execution, not first-query session warm-up or
-  *     whichever query a GC pause happened to land on.
+  *     [[WarmupSecs]]; the artifact records the count actually run.
+  *  3. TRIALS: [[Trials]] timed suite passes in sorted name order with
+  *     per-query min — so per-query numbers measure steady-state plan
+  *     execution, not first-query session warm-up or whichever query a GC
+  *     pause happened to land on.
   * Every gate executes through [[GateRunner]] (noop sink, cache cleared
   * after each gate, on production plans).
   *
@@ -26,11 +25,20 @@ package graft
   * completed trial (trial 1 alone is a valid min-of-1 artifact, with
   * `trials_completed` recording how many ran), a SHORT total line prints
   * per trial so any log tail carries usable numbers, and an overall
-  * wall-clock budget (`SPARK_GRAFT_BENCH_BUDGET` seconds, default 1200,
-  * measured from main() entry) skips remaining trials when exceeded —
-  * a driver kill at any point now leaves parseable data behind.
+  * wall-clock budget ([[BudgetSecs]], measured from main() entry) skips
+  * remaining trials when exceeded — a driver kill at any point now leaves
+  * parseable data behind.
   */
 object Bench {
+
+  /** The protocol's fixed sizes: the family warm-up's time box (s), the
+    * timed passes (r4: back-to-back identical runs measured 125 s vs 181 s
+    * on a shared host — a third pass materially tightens the per-query
+    * min), and the wall budget (s, from main() entry) past which no further
+    * trial starts. */
+  val WarmupSecs = 600.0
+  val Trials = 3
+  val BudgetSecs = 1200.0
 
   /** Lower median (exact for odd n, mean-of-middle-two for even). */
   def medianOf(xs: Seq[Double]): Double = {
@@ -165,12 +173,10 @@ object Bench {
     // only the (possibly subset) suite's members, so the warmed/size
     // accounting and the budget message stay truthful under BENCH_ONLY
     val warmupGates = ordered.filter(g => warmFamilies.contains(g.name))
-    val warmupBudget =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP_SECS", "600").toDouble
     val tWarm = System.nanoTime()
     var warmed = 0
     GateRunner.production(warmupGates.foreach { g =>
-      if ((System.nanoTime() - tWarm) / 1e9 < warmupBudget &&
+      if ((System.nanoTime() - tWarm) / 1e9 < WarmupSecs &&
           GateRunner.run(spark, g, sfDir, GateRunner.Noop).ok)
         warmed += 1
     })
@@ -178,7 +184,7 @@ object Bench {
     System.err.println(s"[bench] warm-up (families): $warmed/" +
       s"${warmupGates.size} queries in ${r3d(warmupSecs)} s")
     if (warmed < warmupGates.size)
-      System.err.println(s"[bench] warm-up budget ($warmupBudget s) hit after " +
+      System.err.println(s"[bench] warm-up budget ($WarmupSecs s) hit after " +
         s"$warmed/${warmupGates.size} queries")
 
     // ---- phase 2: timed trials, artifact persisted per trial ----
@@ -186,11 +192,7 @@ object Bench {
     // memory-heavy queries drifted 2.9-4.2× in-suite while their isolated
     // times were unchanged — single-JVM GC/fragmentation noise, not plan
     // regressions. The min across suite passes is the steady-state plan
-    // cost; a GC hit lands on different queries each pass. Default 3
-    // trials (r4: back-to-back identical runs measured 125 s vs 181 s on a
-    // shared host — a third pass materially tightens the min).
-    val trials = sys.env.getOrElse("SPARK_GRAFT_BENCH_TRIALS", "3").toInt.max(1)
-    val budget = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET", "1200").toDouble
+    // cost; a GC hit lands on different queries each pass.
     // failed queries report -1 (never a fake positive time) and are
     // excluded from the total
     def timedPass(): Map[String, Double] = GateRunner.production(ordered.map { g =>
@@ -308,7 +310,7 @@ object Bench {
       // is file-backed (Scratch parquet) or driver-collected rows, so the
       // FILE side is the number that actually grows with the suite.
       val scratchBytes = Scratch.totalBytes
-      s"""{"metric":"total","value":${r3d(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","trials":$trials,"trials_completed":${passes.size},"trial_totals":$totals,"spread":$spread,$rebaselined"canary_delta_vs_committed":$canaryDelta,"queries_max":$qsMax,"fixture_secs":${r3d(fixtureSecs)},"fixtures":$fx,"warmup_secs":${r3d(warmupSecs)},"warmup_queries":$warmed,"warmup_mode":"families","cached_bytes":$cachedBytes,"cached_rdds":${storage.length},"scratch_bytes":$scratchBytes,"canary_queries":${CanaryQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},"canary_secs":${r3d(canary)},"canary_history":$historyJson}"""
+      s"""{"metric":"total","value":${r3d(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","trials":$Trials,"trials_completed":${passes.size},"trial_totals":$totals,"spread":$spread,$rebaselined"canary_delta_vs_committed":$canaryDelta,"queries_max":$qsMax,"fixture_secs":${r3d(fixtureSecs)},"fixtures":$fx,"warmup_secs":${r3d(warmupSecs)},"warmup_queries":$warmed,"warmup_mode":"families","cached_bytes":$cachedBytes,"cached_rdds":${storage.length},"scratch_bytes":$scratchBytes,"canary_queries":${CanaryQueries.map("\"" + _ + "\"").mkString("[", ",", "]")},"canary_secs":${r3d(canary)},"canary_history":$historyJson}"""
     }
 
     // ARTIFACT DECOUPLING (VERDICT r9 #1): the repo-root `bench.json` is a
@@ -409,18 +411,18 @@ object Bench {
 
     var passes = Vector.empty[Map[String, Double]]
     var t = 0
-    while (t < trials && (t == 0 || elapsed < budget)) {
+    while (t < Trials && (t == 0 || elapsed < BudgetSecs)) {
       passes :+= timedPass()
       t += 1
       // persist + short line after EVERY trial: a kill from here on still
       // leaves a valid artifact with `trials_completed` = what actually ran
       persist(artifactLine(passes), canaryOf(acrossPasses(passes, _.min)))
       val tot = passes.last.values.filter(_ >= 0).sum
-      println(s"""{"metric":"trial","trial":$t,"of":$trials,"total":${r3d(tot)},"unit":"sec","sf":"$sfDir"}""")
+      println(s"""{"metric":"trial","trial":$t,"of":$Trials,"total":${r3d(tot)},"unit":"sec","sf":"$sfDir"}""")
       System.out.flush()
     }
-    if (t < trials)
-      System.err.println(s"[bench] wall budget ($budget s) hit after $t/$trials " +
+    if (t < Trials)
+      System.err.println(s"[bench] wall budget ($BudgetSecs s) hit after $t/$Trials " +
         s"trials (${r3d(elapsed)} s elapsed) — artifact records trials_completed=$t")
 
     // Artifact robustness (VERDICT r2 #4, r3 #3, r8 #1), belt and braces:

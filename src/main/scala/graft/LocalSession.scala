@@ -26,6 +26,19 @@ object LocalSession {
     spark
   }
 
+  /** Runs `body` with the session confs `confs` set, then puts each back
+    * as it was (its old value, or unset). The change is session-global
+    * while `body` runs, so only sequential callers may use it. */
+  def withConfs[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** `$SPARK_GRAFT_CPUS` cores, 4 when unset. */
   def fromEnv(logLevel: String = "WARN"): SparkSession =
     withCores(sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(4), logLevel)

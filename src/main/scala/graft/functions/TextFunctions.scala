@@ -13,6 +13,15 @@ import org.apache.spark.sql.functions._
   */
 object TextFunctions {
 
+  /** Canonical code of a free-text name: whitespace runs collapsed and
+    * ends trimmed, then looked up in `aliases` (a literal map Catalyst
+    * folds once), else its uppercase letters. */
+  def aliasCode(raw: Column, aliases: Map[String, String]): Column = {
+    val clean = trim(regexp_replace(raw, "\\s+", " "))
+    coalesce(try_element_at(typedlit(aliases), clean),
+      upper(regexp_replace(clean, "[^A-Z]", "")))
+  }
+
   /** Whitespace tokens with empties dropped (leading/trailing whitespace
     * would otherwise yield "" entries). Codegen'd native scanner
     * ([[Native.Tokens]]); [[tokensHof]] is the built-in reference

@@ -1,6 +1,6 @@
 package graft.hockey
 
-import org.apache.spark.ml.{Pipeline => MlPipeline, PipelineModel}
+import org.apache.spark.ml.{Pipeline => MlPipeline, PipelineModel, Predictor}
 import org.apache.spark.ml.classification.{GBTClassifier, LogisticRegression, MultilayerPerceptronClassifier, RandomForestClassifier}
 import org.apache.spark.ml.feature.VectorAssembler
 
@@ -26,39 +26,34 @@ object Models {
     .setOutputCol("features")
     .setHandleInvalid("skip")
 
+  /** The assembler feeding `classifier`, which learns `label_binary`. */
+  private def assembled(classifier: Predictor[_, _, _]): MlPipeline = {
+    classifier.setLabelCol("label_binary"); classifier.setFeaturesCol("features")
+    new MlPipeline().setStages(Array(assembler, classifier))
+  }
+
   /** M2 (ref code/experiment.py:697-703). */
   def randomForest(cfg: ModelConfig = ModelConfig()): MlPipeline =
-    new MlPipeline().setStages(Array(assembler,
-      new RandomForestClassifier()
-        .setLabelCol("label_binary").setFeaturesCol("features")
-        .setNumTrees(cfg.rfNumTrees).setMaxDepth(cfg.rfMaxDepth)
-        .setSeed(cfg.seed)))
+    assembled(new RandomForestClassifier()
+      .setNumTrees(cfg.rfNumTrees).setMaxDepth(cfg.rfMaxDepth).setSeed(cfg.seed))
 
   /** M3 (ref code/experiment.py:719-726). */
   def logisticRegression(cfg: ModelConfig = ModelConfig()): MlPipeline =
-    new MlPipeline().setStages(Array(assembler,
-      new LogisticRegression()
-        .setLabelCol("label_binary").setFeaturesCol("features")
-        .setMaxIter(cfg.lrMaxIter).setRegParam(cfg.lrRegParam)
-        .setElasticNetParam(cfg.lrElasticNet).setFamily("binomial")))
+    assembled(new LogisticRegression()
+      .setMaxIter(cfg.lrMaxIter).setRegParam(cfg.lrRegParam)
+      .setElasticNetParam(cfg.lrElasticNet).setFamily("binomial"))
 
   /** M4 (ref code/experiment.py:743-749). */
   def gbt(cfg: ModelConfig = ModelConfig()): MlPipeline =
-    new MlPipeline().setStages(Array(assembler,
-      new GBTClassifier()
-        .setLabelCol("label_binary").setFeaturesCol("features")
-        .setMaxIter(cfg.gbtMaxIter).setMaxDepth(cfg.gbtMaxDepth)
-        .setSeed(cfg.seed)))
+    assembled(new GBTClassifier()
+      .setMaxIter(cfg.gbtMaxIter).setMaxDepth(cfg.gbtMaxDepth).setSeed(cfg.seed))
 
   /** M5 (ref code/experiment.py:767-777): layers fixed to
     * [|features|, 64, 32, 2]. */
   def mlp(cfg: ModelConfig = ModelConfig()): MlPipeline =
-    new MlPipeline().setStages(Array(assembler,
-      new MultilayerPerceptronClassifier()
-        .setLabelCol("label_binary").setFeaturesCol("features")
-        .setLayers(Array(Schemas.featureCols.size, 64, 32, 2))
-        .setMaxIter(cfg.mlpMaxIter).setBlockSize(cfg.mlpBlockSize)
-        .setSeed(cfg.seed)))
+    assembled(new MultilayerPerceptronClassifier()
+      .setLayers(Array(Schemas.featureCols.size, 64, 32, 2))
+      .setMaxIter(cfg.mlpMaxIter).setBlockSize(cfg.mlpBlockSize).setSeed(cfg.seed))
 
   /** One fittable model: its `--models` key, the display name its metrics
     * are reported under, and its pipeline. */

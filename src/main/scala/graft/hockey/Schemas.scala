@@ -1,5 +1,8 @@
 package graft.hockey
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{avg, col, sum}
 import org.apache.spark.sql.types._
 
 /** Explicit input schemas (ref infers them at double scan cost —
@@ -80,13 +83,62 @@ object Schemas {
   val MinSeason = 20072008
   val MinGameId = 2007020001L
 
-  /** The 25 model features (ref code/experiment.py:581-610; README.md:124-142). */
-  val featureCols: Seq[String] = Seq(
-    "home_goals_avg", "home_win_pct", "home_points_avg", "home_corsi_avg",
-    "home_fenwick_avg", "home_shots_avg", "home_xg_avg", "home_recent_form",
-    "home_recent_goals", "home_games_played",
-    "away_goals_avg", "away_win_pct", "away_points_avg", "away_corsi_avg",
-    "away_fenwick_avg", "away_shots_avg", "away_xg_avg", "away_recent_form",
-    "away_recent_goals", "away_games_played",
-    "win_pct_diff", "goals_avg_diff", "xg_diff", "corsi_diff", "recent_form_diff")
+  // ---- The feature spec: the one table every stage of the job reads ----
+
+  /** A rolling frame: rows `start`..−1 of the team's season, so a game
+    * never sees itself (no target leakage) and a season's first game
+    * averages nothing and takes the default. */
+  sealed abstract class Frame(val start: Long)
+  case object History extends Frame(Window.unboundedPreceding)
+  case object Recent extends Frame(-5) // literally −5..−1 (SURVEY §2.6: not −4)
+
+  /** A rolling average: its window column, the expression it averages, its
+    * frame, its league default (X4) and its matchup suffix
+    * (`home_<suffix>`/`away_<suffix>`; None: computed, but no model input). */
+  final case class Rolling(column: String, input: Column, frame: Frame, default: Double,
+      suffix: Option[String])
+
+  /** The six per-(game, team) event aggregates (ref code/experiment.py:359-366). */
+  val eventAggregates: Seq[(String, Column)] = Seq(
+    "game_corsi" -> sum("Corsi"), "game_fenwick" -> sum("Fenwick"), "game_shots" -> sum("Shot"),
+    "game_avg_shot_dist" -> avg("ShotDistance"), "game_avg_shot_angle" -> avg("ShotAngle"),
+    "game_xg" -> sum("xG_F"))
+
+  /** The eleven rolling features in window-pass order (ref
+    * code/experiment.py:416-494); matchup rows carry the suffixed ones in
+    * this order. */
+  val rolling: Seq[Rolling] = {
+    import Defaults._
+    val (goals, win, points) = (col("Goals"), col("Win").cast("double"), col("Points").cast("double"))
+    Seq(
+      Rolling("hist_goals_avg", goals, History, GoalsAvg, Some("goals_avg")),
+      Rolling("hist_win_pct", win, History, WinPct, Some("win_pct")),
+      Rolling("hist_points_avg", points, History, PointsAvg, Some("points_avg")),
+      Rolling("hist_corsi_avg", col("game_corsi"), History, CorsiAvg, Some("corsi_avg")),
+      Rolling("hist_fenwick_avg", col("game_fenwick"), History, FenwickAvg, Some("fenwick_avg")),
+      Rolling("hist_shots_avg", col("game_shots"), History, ShotsAvg, Some("shots_avg")),
+      Rolling("hist_xg_avg", col("game_xg"), History, XgAvg, Some("xg_avg")),
+      Rolling("hist_shot_dist_avg", col("game_avg_shot_dist"), History, ShotDistAvg, None),
+      Rolling("hist_shot_angle_avg", col("game_avg_shot_angle"), History, ShotAngleAvg, None),
+      Rolling("recent_win_pct", win, Recent, RecentWinPct, Some("recent_form")),
+      Rolling("recent_goals_avg", goals, Recent, RecentGoalsAvg, Some("recent_goals")))
+  }
+
+  /** The season game ordinal (row_number) and its matchup suffix, which
+    * follows the rolling features in the matchup row. */
+  val gameOrdinal: (String, String) = ("team_game_num", "games_played")
+
+  /** The five home − away differentials (X7) as (name, matchup suffix). */
+  val differentials: Seq[(String, String)] = Seq("win_pct_diff" -> "win_pct",
+    "goals_avg_diff" -> "goals_avg", "xg_diff" -> "xg_avg", "corsi_diff" -> "corsi_avg",
+    "recent_form_diff" -> "recent_form")
+
+  /** Per side, each matchup feature's window column and suffix. */
+  val matchupFeatures: Seq[(String, String)] =
+    rolling.flatMap(r => r.suffix.map(r.column -> _)) :+ gameOrdinal
+
+  /** The 25 model features: home, away, then the differentials (ref
+    * code/experiment.py:581-610; README.md:124-142). */
+  val featureCols: Seq[String] = Seq("home", "away").flatMap(side =>
+    matchupFeatures.map { case (_, suffix) => s"${side}_$suffix" }) ++ differentials.map(_._1)
 }

@@ -1,7 +1,8 @@
 package graft.hockey
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+
+import graft.functions.TextFunctions
 
 /** Team-name normalization (ref code/experiment.py:58-246,272-274,305-316).
   *
@@ -57,18 +58,10 @@ object TeamNames {
       (code -> code) +: aliases.map(_ -> code)
     }
 
-  /** Collapse runs of whitespace and trim (ref code/experiment.py:305-307). */
-  def cleaned(raw: Column): Column = trim(regexp_replace(raw, "\\s+", " "))
-
-  /** Canonical team code: literal-map lookup on the cleaned name, falling
-    * back to the uppercase letters already present (so unknown codes like
-    * "BOS" pass through and unknown names degrade deterministically; ref
-    * code/experiment.py:308-316). The literal map constant-folds once in
-    * Catalyst — no join, no shuffle, no per-row Scala. */
-  def teamCode(raw: Column): Column = {
-    val clean = cleaned(raw)
-    coalesce(
-      try_element_at(typedlit(aliasToCode), clean),
-      upper(regexp_replace(clean, "[^A-Z]", "")))
-  }
+  /** Canonical team code (ref code/experiment.py:305-316): the
+    * whitespace-cleaned name looked up in [[aliasToCode]], falling back to
+    * the uppercase letters already present (so unknown codes like "BOS"
+    * pass through and unknown names degrade deterministically) — see
+    * [[graft.functions.TextFunctions.aliasCode]]. */
+  def teamCode(raw: Column): Column = TextFunctions.aliasCode(raw, aliasToCode)
 }

@@ -48,6 +48,11 @@ object Stats {
     * gather per range. */
   private val MaxCollect = 1 << 16
 
+  /** Narrowing levels between cuts of the loop's (rid, v) lineage: each
+    * level adds a broadcast join to it, so uncut, level k re-runs all k
+    * joins. Deeper than any shipped quantile gate narrows at sf0.01. */
+  private[operators] val LevelsPerCut = 8
+
   def exactMedian(df: DataFrame, valueCol: String, buckets: Int = 2048): Double =
     exactPercentile(df, valueCol, 0.5, buckets)
 
@@ -154,6 +159,7 @@ object Stats {
     val ranges = scala.collection.mutable.LinkedHashMap.empty[Int, (Double, Double)]
     val result = scala.collection.mutable.Map.empty[(Any, Int), Double]
     var nextRid = 0
+    var levels = 0
 
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
@@ -316,6 +322,8 @@ object Stats {
           cur = cur.join(broadcast(f), "rid")
             .filter(bucketCol === col("bLo"))
             .select(col("child").as("rid"), col("v"))
+          levels += 1
+          if (levels % LevelsPerCut == 0) cur = cur.localCheckpoint()
           // the child spans its rows' own [min, max], not the bucket's
           // nominal bounds: two values packed far below the bucket width
           // (0 and 1e-300) separate at the next level instead of after one

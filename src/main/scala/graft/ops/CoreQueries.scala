@@ -169,19 +169,18 @@ object CoreQueries {
 
   /** X1-X3 (ref code/experiment.py:272-316): whitespace collapse + literal
     * map lookup + regex-uppercase fallback — the TEAM_MAP normalization
-    * pattern. The map is a folded literal expression (constant-folded once by
-    * Catalyst), not a join. */
+    * pattern, through the same `TextFunctions.aliasCode` as the hockey
+    * job's `TeamNames.teamCode`. The map is a folded literal expression
+    * (constant-folded once by Catalyst), not a join. */
   def mapNormalize(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val codeMap = Map("AFRICA" -> "AFR", "AMERICA" -> "AMER", "ASIA" -> "AS")
-    val clean = trim(regexp_replace($"r_name", "\\s+", " "))
-    val mapped = try_element_at(typedlit(codeMap), clean)
     val n = Tables.nation(spark, dir)
     val r = Tables.region(spark, dir)
     n.join(broadcast(r), $"n_regionkey" === $"r_regionkey")
       .select(
         $"n_nationkey", $"n_name",
-        coalesce(mapped, upper(regexp_replace(clean, "[^A-Z]", ""))).as("region_code"))
+        graft.functions.TextFunctions.aliasCode($"r_name", codeMap).as("region_code"))
   }
 
   /** X6 (ref code/experiment.py:628-633): when/otherwise binarization. */

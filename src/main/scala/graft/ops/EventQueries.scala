@@ -386,6 +386,11 @@ object EventQueries {
         ($"total_cents".cast("double") / lit(100.0)).as("total_value"))
   }
 
+  /** The state-store provider `transformWithState` requires (q182, q184),
+    * as a session conf for [[graft.LocalSession.withConfs]]. */
+  private val RocksDbProvider = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Spark 4 `transformWithState` as a gate query (q182) — the SIXTH
     * stateful streaming class: typed named-state processors (the
     * arbitrary-state API that succeeds q92's flatMapGroupsWithState).
@@ -402,11 +407,7 @@ object EventQueries {
     import spark.implicits._
     Tables.enableNanosRead(spark)
     val (drivePath, _) = q92DriveFor(spark, dir)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.LocalSession.withConfs(spark, RocksDbProvider) {
       graft.streaming.Streaming.runOnce(spark, drivePath,
         ev => {
           val typed = Tables.rebuildNanosTs(ev)
@@ -423,9 +424,6 @@ object EventQueries {
         sourceOptions = Map("maxFilesPerTrigger" -> "1"))
         .select($"user_id", $"n_events",
           ($"total_cents".cast("double") / lit(100.0)).as("total_value"))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -624,11 +622,7 @@ object EventQueries {
             coalesce(($"value".cast("decimal(14,2)") * lit(100)).cast("long"),
               lit(0L)).as("cents"))
           .as[graft.streaming.Streaming.TwsEvent]).toDF()
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    graft.LocalSession.withConfs(spark, RocksDbProvider) {
       // phase 1: corpus only — state accumulates, nothing emits, the
       // query stops gracefully at the committed batch boundary
       graft.streaming.Streaming.runForeachBatch(spark, drive.toString, out,
@@ -639,9 +633,6 @@ object EventQueries {
       // …and phase 2 restarts from the same checkpoint
       graft.streaming.Streaming.runForeachBatch(spark, drive.toString, out,
         plan, "q184_phase2", checkpointDir = Some(ckpt))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     spark.read.schema("user_id LONG, n_events LONG, total_cents LONG")
       .parquet(out)

@@ -347,17 +347,14 @@ object ExtendedQueries {
     * semantically invisible, so the oracle is the plain join SQL. */
   def runtimeFilterJoin(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val confs = Seq(
+    graft.LocalSession.withConfs(spark,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       // at 100 TB both sides exceed the broadcast threshold; model that
       // (InjectRuntimeFilter skips broadcast joins — correctly, the build
       // side is already hashed locally)
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val lineitem = spark.read.parquet(s"$dir/lineitem.parquet")
       val orders = spark.read.parquet(s"$dir/orders.parquet")
         .filter($"o_orderpriority".isin("1-URGENT", "2-HIGH"))
@@ -373,9 +370,6 @@ object ExtendedQueries {
       // the grouped result is a handful of rows (one per priority)
       val rows = joined.collect()
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), joined.schema)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

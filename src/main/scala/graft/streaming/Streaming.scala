@@ -452,17 +452,15 @@ object Streaming {
       sourceOptions: Map[String, String], checkpointDir: Option[String] = None)(
       sink: DataFrame => org.apache.spark.sql.streaming.DataStreamWriter[
         org.apache.spark.sql.Row]): Unit = {
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      graft.Tables.partitionsFor(sourceDir, floor = 2).toString)
-    try {
+    graft.LocalSession.withConfs(spark, "spark.sql.shuffle.partitions" ->
+        graft.Tables.partitionsFor(sourceDir, floor = 2).toString) {
       val q = sink(fileStream(spark, sourceDir, sourceOptions))
         .option("checkpointLocation", checkpointDir.getOrElse(
           graft.Scratch.fresh(s"ckpt_${name}_").resolve("ckpt").toString))
         .queryName(name)
         .start()
       try q.processAllAvailable() finally { StateMeter.record(q); q.stop() }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
+    }
   }
 
   /** `checkpointDir`: pass the SAME path across two invocations to

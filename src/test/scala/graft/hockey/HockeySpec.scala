@@ -128,7 +128,19 @@ class HockeySpec extends SparkSpec {
     val feats = Pipeline.withRollingFeatures(gd)
     val matchups = Pipeline.matchups(feats)
     assert(matchups.count() == 5)
-    assert(matchups.columns.length == 31)
+    // the reference's column order (ref code/experiment.py:502-610)
+    val perSide = Seq("goals_avg", "win_pct", "points_avg", "corsi_avg", "fenwick_avg",
+      "shots_avg", "xg_avg", "recent_form", "recent_goals", "games_played")
+    val diffs = Seq("win_pct_diff", "goals_avg_diff", "xg_diff", "corsi_diff", "recent_form_diff")
+    assert(gd.columns.toSeq == toyGameData.columns.toSeq)
+    assert(feats.columns.toSeq == gd.columns.toSeq ++ Seq("team_game_num",
+      "hist_goals_avg", "hist_win_pct", "hist_points_avg", "hist_corsi_avg",
+      "hist_fenwick_avg", "hist_shots_avg", "hist_xg_avg", "hist_shot_dist_avg",
+      "hist_shot_angle_avg", "recent_win_pct", "recent_goals_avg"))
+    assert(matchups.columns.toSeq ==
+      Seq("GameID", "Season", "Date", "home_team", "away_team") ++
+        perSide.map("home_" + _) ++ perSide.map("away_" + _) ++ Seq("label") ++ diffs)
+    assert(Schemas.featureCols == perSide.map("home_" + _) ++ perSide.map("away_" + _) ++ diffs)
     assert(matchups.select("label").as[Int].collect().forall(Set(0, 1, 2)))
 
     // golden run invariants (SURVEY §5 / VERDICT r2 #5): the matchup count

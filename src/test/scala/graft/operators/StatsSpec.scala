@@ -251,4 +251,42 @@ class StatsSpec extends SparkSpec {
       assert(jobs <= 12, s"p=$p ran $jobs jobs")
     }
   }
+
+  test("a deep narrowing cuts its lineage: the per-level plan stops growing with depth") {
+    // powers of two with 2 buckets: every level splits off only the top
+    // value, so p = 0.1 narrows ~20 levels. Uncut, level k's histogram
+    // plan carries all k earlier joins; cut every LevelsPerCut levels it
+    // carries at most that many plus its own
+    val df = Seq.tabulate(24)(i => math.pow(2, i)).toDF("v")
+    val want = df.agg(expr("percentile(v, 0.1D)")).head().getDouble(0)
+    val joins = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val id = java.util.UUID.randomUUID().toString
+    def joinsIn(p: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+      (if (p.nodeName.contains("Join")) 1 else 0) + p.children.map(joinsIn).sum
+    val listener = new SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            joins.add(joinsIn(s.sparkPlanInfo)): Unit
+          case _ =>
+        }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).contains(id))
+          marked.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val got = try {
+      val got = Stats.exactPercentile(df, "v", 0.1, buckets = 2, maxCollect = 2)
+      sc.setJobGroup(id, "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
+      got
+    } finally sc.removeSparkListener(listener)
+    assert(got == want, s"$got vs $want")
+    val perQuery = joins.toArray.map(_.asInstanceOf[Int]).toSeq
+    assert(perQuery.count(_ > 0) >= 16, s"only ${perQuery.count(_ > 0)} join queries: $perQuery")
+    assert(perQuery.max <= Stats.LevelsPerCut + 1, s"joins per query: $perQuery")
+  }
 }

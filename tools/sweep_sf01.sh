@@ -10,6 +10,11 @@
 # is tool output — edit THIS SCRIPT's narrative block, not the file, or
 # the next run reverts it.
 #
+# It also regenerates PLANS.md into a temp file (graft.tools.PlanAudit at
+# the committed settings: 8 cores, the sf dir named in PLANS.md's header)
+# and exits 1, naming the gates, when a row differs from the committed
+# PLANS.md.
+#
 # Usage: tools/sweep_sf01.sh            (from the repo root; ~15 min)
 #   SF=/root/testdata/sf0.1 OUT=/tmp/v_sf01 to override.
 set -euo pipefail
@@ -37,6 +42,31 @@ SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} sbt -batch \
   "runMain graft.tools.KCoreCertify $SF" > /tmp/sweep_sf01_kcore.log 2>&1 \
   || { echo "[sweep] KCoreCertify FAILED — see /tmp/sweep_sf01_kcore.log" >&2; exit 1; }
 KCORE_JSON=$(grep -o '{"gate":"q301_kcore_peeling".*}' /tmp/sweep_sf01_kcore.log | tail -1)
+
+echo "[sweep] PLANS.md drift: PlanAudit at 8 cores vs the committed file" >&2
+PLANS_SF=$(sed -n 's/^# Physical-plan audit (sf dir: \(.*\))$/\1/p' PLANS.md)
+PLANS_NEW=$(mktemp /tmp/sweep_sf01_plans.XXXXXX.md)
+SPARK_GRAFT_CPUS=8 sbt -batch \
+  "runMain graft.tools.PlanAudit $PLANS_NEW --dir $PLANS_SF" > /tmp/sweep_sf01_plans.log 2>&1 \
+  || { echo "[sweep] PlanAudit FAILED — see /tmp/sweep_sf01_plans.log" >&2; exit 1; }
+# the gates whose (scans, shuffles, broadcasts, sorts, hashAggs) row was
+# added, removed or changed
+PLAN_DRIFT=$(python3 - "$PLANS_NEW" PLANS.md <<'PY'
+import sys
+def rows(path):
+    out = {}
+    for line in open(path):
+        cells = [c.strip() for c in line.strip().strip("|").split("|")]
+        if len(cells) == 6 and cells[0] not in ("query", "---"):
+            out[cells[0]] = cells[1:]
+    return out
+new, old = rows(sys.argv[1]), rows(sys.argv[2])
+print(" ".join(sorted(g for g in new.keys() | old.keys() if new.get(g) != old.get(g))))
+PY
+)
+if [ -z "$PLAN_DRIFT" ] && ! cmp -s "$PLANS_NEW" PLANS.md; then
+  PLAN_DRIFT="(header text)"
+fi
 
 GATE_LIST=$(paste -sd' ' "$GATES_FILE" | fold -s -w 68 | sed 's/ *$//')
 
@@ -115,6 +145,10 @@ EOF
 echo "[sweep] wrote VERIFY_SF01.md" >&2
 echo "$SUMMARY"
 echo "$KCORE_JSON"
+if [ -n "$PLAN_DRIFT" ]; then
+  echo "[sweep] PLANS.md is stale (regenerated: $PLANS_NEW) — rows differ for: $PLAN_DRIFT" >&2
+  exit 1
+fi
 if [ -n "$FAILS" ] || ! echo "$SUMMARY" | grep -q ' 0 failed'; then
   echo "[sweep] FAILURES present" >&2
   exit 1
