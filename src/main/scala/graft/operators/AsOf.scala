@@ -1,96 +1,72 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.bridge
+import org.apache.spark.sql.types.{DataType, LongType, TimestampNTZType, TimestampType}
+
+import graft.plans.{AsOfJoinPlan, AsOfJoinStrategy}
 
 /** As-of (point-in-time) join: for every left row, attach the most recent
   * right row with `rightTs <= leftTs` within the same key — the standard
   * market-data/feature-store lookup that Spark has no built-in operator for.
   *
-  * Implementation choice (SURVEY §7 preference order (a): compose built-in
-  * operators): tag both inputs, UNION them, and run one `last(value,
-  * ignoreNulls)` window per key ordered by (ts, side) — right rows sort
-  * before left rows at equal timestamps so the match is inclusive. This is
-  * a single exchange on the key + one sort: exactly the shuffle profile of
-  * a sort-merge join, with no custom SparkPlan, no codegen loss, and no
-  * per-key driver logic. A range/broadcast variant only wins when the right
-  * side is tiny; at 100 TB both sides shuffle once regardless.
+  * One implementation: the custom plan stack ([[graft.plans.AsOfJoinPlan]]
+  * → AsOfJoinStrategy → single-pass merge AsOfJoinExec). Both sides
+  * hash-cluster on the key and sort by (key, ts[, tie]) — exactly the
+  * shuffle profile of a sort-merge join — and one merge pass per partition
+  * keeps O(1) state: no window buffer, no unioned wide schema.
   *
-  * Left rows with no preceding right row keep NULLs (left-asof semantics,
-  * mirroring DuckDB's `ASOF LEFT JOIN`).
+  * Left rows with no preceding right row (or a NULL ts) keep NULLs
+  * (left-asof semantics, mirroring DuckDB's `ASOF LEFT JOIN`). The output
+  * is every left column in the left input's order, then `asof_<name>` per
+  * carried value.
   */
 object AsOf {
 
+  /** The merge reads timestamps as longs: microsecond timestamps or plain
+    * longs (q141's negated time). */
+  private val TsTypes = Set[DataType](TimestampType, TimestampNTZType, LongType)
+
   /** @param left       probe side (each row gets matched)
     * @param right      reference side (source of carried values)
-    * @param keys       equi-join key columns (both sides)
-    * @param tsCol      event-time column name (both sides)
+    * @param keys       equi-join key columns (both sides, one type each)
+    * @param tsCol      event-time column name (both sides): TIMESTAMP,
+    *                   TIMESTAMP_NTZ or BIGINT, the same type on both
     * @param valueCols  right-side columns to carry (emitted as `asof_<name>`)
     * @param tieBreak   right-side-ONLY column ordering right rows that tie at
     *                   equal ts (latest wins); the left input need not have it
     */
   def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
       tsCol: String, valueCols: Seq[String], tieBreak: String): DataFrame = {
-    val keyCols = keys.map(col)
-    // side 0 = right (sorts first at equal ts ⇒ inclusive match), 1 = left.
-    // Carried values ride in ONE struct per right row: the struct itself is
-    // null only for left rows, so last(ignoreNulls) distinguishes "no right
-    // row yet" (null struct → null outputs) from "matched a right row whose
-    // value happens to be NULL" (non-null struct, null field) — carrying
-    // bare value columns would skip the latter and resurrect stale values.
-    val payload = struct(valueCols.map(col): _*)
-    val taggedRight = right.select(
-      keyCols ++ Seq(col(tsCol), lit(0).as("__side"), col(tieBreak).as("__tie"),
-        payload.as("__payload")): _*)
-    val payloadType = taggedRight.schema("__payload").dataType
-    val tieType = taggedRight.schema("__tie").dataType
-    val leftCols = left.columns.filterNot(c => keys.contains(c) || c == tsCol)
-    // left rows carry a typed-null __tie: tieBreak orders RIGHT rows only
-    // (left rows already sort after all equal-ts right rows via __side), so
-    // requiring the column on the left input would be a spurious analysis
-    // failure for probe tables that don't have it
-    val taggedLeft = left.select(
-      keyCols ++ Seq(col(tsCol), lit(1).as("__side"),
-        lit(null).cast(tieType).as("__tie"),
-        lit(null).cast(payloadType).as("__payload")) ++
-        leftCols.map(col): _*)
-
-    val unioned = taggedLeft.unionByName(taggedRight, allowMissingColumns = true)
-    val w = Window.partitionBy(keyCols: _*)
-      .orderBy(col(tsCol).asc, col("__side").asc, col("__tie").asc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    unioned
-      .withColumn("__asof", last(col("__payload"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .select(keyCols ++ Seq(col(tsCol)) ++ leftCols.map(col) ++
-        valueCols.map(c => col("__asof").getField(c).as(s"asof_$c")): _*)
-  }
-
-  /** Whole-operator variant through the custom plan stack
-    * ([[graft.plans.AsOfJoinPlan]] → strategy → single-pass merge exec):
-    * same semantics and shuffle profile as [[asofJoin]], but the physical
-    * operator keeps O(1) state per partition instead of running the union
-    * through a window buffer. The right side is re-aliased so self-joins
-    * (both inputs derived from one scan) keep distinct attribute ids. */
-  def asofJoinMerged(left: DataFrame, right: DataFrame, keys: Seq[String],
-      tsCol: String, valueCols: Seq[String], tieBreak: String): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.Alias
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.graftbridge.bridge
     val spark = left.sparkSession
-    bridge.registerStrategy(spark, graft.plans.AsOfJoinStrategy)
+    bridge.registerStrategy(spark, AsOfJoinStrategy)
     val lPlan = left.queryExecution.analyzed
     val rBase = right.queryExecution.analyzed
+    // re-alias the right side so self-joins (both inputs derived from one
+    // scan) keep distinct attribute ids
     val rPlan = Project(rBase.output.map(a => Alias(a, a.name)()), rBase)
-    def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-        name: String) = plan.output.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"column $name not found"))
-    bridge.ofRows(spark, graft.plans.AsOfJoinPlan.create(
-      lPlan, rPlan,
-      keys.map(attr(lPlan, _)), keys.map(attr(rPlan, _)),
-      attr(lPlan, tsCol), attr(rPlan, tsCol),
-      valueCols.map(c => c -> (attr(rPlan, c): org.apache.spark.sql.catalyst.expressions.Expression)),
+    def attr(plan: LogicalPlan, name: String): Attribute =
+      plan.output.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(s"column $name not found"))
+    val (lTs, rTs) = (attr(lPlan, tsCol), attr(rPlan, tsCol))
+    require(TsTypes.contains(lTs.dataType) && rTs.dataType == lTs.dataType,
+      s"as-of timestamp column $tsCol must be timestamp, timestamp_ntz or " +
+        s"bigint, the same on both sides; it is ${lTs.dataType.simpleString} " +
+        s"(left) and ${rTs.dataType.simpleString} (right)")
+    val (lKeys, rKeys) = (keys.map(attr(lPlan, _)), keys.map(attr(rPlan, _)))
+    // the exec hashes and compares keys without casts: an int key on one
+    // side and a bigint on the other would land in different partitions
+    lKeys.zip(rKeys).foreach { case (l, r) =>
+      require(l.dataType == r.dataType, s"as-of key column ${l.name} must " +
+        s"have one type on both sides; it is ${l.dataType.simpleString} " +
+        s"(left) and ${r.dataType.simpleString} (right)")
+    }
+    bridge.ofRows(spark, AsOfJoinPlan.create(
+      lPlan, rPlan, lKeys, rKeys, lTs, rTs,
+      valueCols.map(c => c -> (attr(rPlan, c): Expression)),
       attr(rPlan, tieBreak)))
   }
 

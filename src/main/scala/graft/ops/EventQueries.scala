@@ -97,20 +97,23 @@ object EventQueries {
         $"asof_value".as("last_error_value"))
   }
 
-  /** Range join (graft.operators.RangeJoin): clicks occurring within 60
-    * minutes after an error, per user. Oracle is DuckDB's inequality join
-    * (IEJoin); the Spark side is the bucketized equi-join formulation. */
+  /** Range join: clicks occurring within 60 minutes after an error, per
+    * user, written as the plain bounded-window join
+    * (`click_ts BETWEEN error_ts AND error_ts + INTERVAL`);
+    * [[graft.plans.RangeJoinRule]] adds the time-bucket equi key. Oracle is
+    * DuckDB's inequality join (IEJoin). */
   def errorFollowedByClick(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
     val errors = ev.filter($"event_type" === "error")
-      .select($"user_id", $"ts", $"event_id")
+      .select($"user_id", $"ts".as("error_ts"), $"event_id".as("error_id"))
     val clicks = ev.filter($"event_type" === "click")
-      .select($"user_id", $"ts", $"event_id")
-    graft.operators.RangeJoin.rangeJoin(errors, clicks,
-      keys = Seq("user_id"), tsCol = "ts", maxGapUs = 3600L * 1000000)
-      .select($"event_id".as("error_id"), $"r_event_id".as("click_id"),
-        $"user_id", $"ts".as("error_ts"), $"r_ts".as("click_ts"))
+      .select($"user_id".as("c_user"), $"ts".as("click_ts"),
+        $"event_id".as("click_id"))
+    errors.join(clicks,
+      $"user_id" === $"c_user" && $"click_ts" >= $"error_ts" &&
+        $"click_ts" <= expr("error_ts + INTERVAL 60 MINUTE"))
+      .select($"error_id", $"click_id", $"user_id", $"error_ts", $"click_ts")
   }
 
   /** Streaming DEDUP-within-watermark as a gate query — the fourth

@@ -607,8 +607,8 @@ object ExtendedQueries {
     * [[graft.plans.RangeJoinRule]] Spark keys the join on user_id alone and
     * cross-products each user's events; with the rule (active in the
     * Verify/Bench sessions via GraftExtensions) the optimizer adds the
-    * gap-bucket equi key automatically — same plan shape as the hand-
-    * bucketized q46, from unmodified user syntax. */
+    * gap-bucket equi key automatically, from unmodified user syntax (q46
+    * is the same shape on error → click). */
   def rangeJoinAuto(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
@@ -623,11 +623,11 @@ object ExtendedQueries {
         $"view_ts", $"p_ts".as("purchase_ts"))
   }
 
-  /** As-of join through the CUSTOM PLAN STACK ([[graft.plans.AsOfJoinPlan]]
-    * → AsOfJoinStrategy → single-pass AsOfJoinExec): each purchase picks up
-    * the most recent prior view by the same user. Same oracle shape as q45
-    * (DuckDB ASOF LEFT JOIN) but executed by the bespoke merge operator —
-    * the gate proves the custom physical plan is hash-exact. */
+  /** As-of join ([[graft.operators.AsOf]], the custom plan stack
+    * [[graft.plans.AsOfJoinPlan]] → AsOfJoinStrategy → single-pass
+    * AsOfJoinExec): each purchase picks up the most recent prior view by the
+    * same user. Same oracle shape as q45 (DuckDB ASOF LEFT JOIN) on another
+    * event-type pair. */
   def asofMerged(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val ev = Tables.events(spark, dir)
@@ -636,7 +636,7 @@ object ExtendedQueries {
     val views = ev.filter($"event_type" === "view")
       .withColumn("view_ts", $"ts")
       .select($"user_id", $"ts", $"event_id", $"view_ts", $"value")
-    graft.operators.AsOf.asofJoinMerged(purchases, views,
+    graft.operators.AsOf.asofJoin(purchases, views,
       keys = Seq("user_id"), tsCol = "ts",
       valueCols = Seq("view_ts", "value"), tieBreak = "event_id")
       .select($"event_id", $"user_id", $"ts".as("purchase_ts"),

@@ -9,15 +9,16 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Whole-operator as-of join through the full custom-plan stack: logical
   * node → planner strategy → physical exec (SURVEY §7 preference (c) — the
-  * one operator where we go below the DataFrame API on purpose).
+  * one operator where we go below the DataFrame API on purpose). Built by
+  * [[graft.operators.AsOf.asofJoin]], which checks that both timestamps are
+  * long-backed (timestamp, timestamp_ntz or bigint) of one type and that
+  * each key has one type on both sides.
   *
   * Semantics: for every left row, the payload of the LATEST right row with
   * `rightTs <= leftTs` in the same key group (ties on equal right ts broken
-  * by the greatest `tieBreak`), NULL-padded when no right row precedes —
-  * identical to [[graft.operators.AsOf.asofJoin]] (which composes
-  * union+window) and to DuckDB's `ASOF LEFT JOIN` (proven by the q69 gate
-  * oracle). Like the composition — and unlike SQL equality — null keys
-  * group together.
+  * by the greatest `tieBreak`), NULL-padded when no right row precedes or
+  * the left ts is NULL — DuckDB's `ASOF LEFT JOIN` (proven by the q45, q69
+  * and q141 gate oracles). Unlike SQL equality, null keys group together.
   *
   * Physical algorithm: both sides hash-cluster on the key and sort within
   * partitions by (key, ts[, tie]); one streaming merge pass per partition

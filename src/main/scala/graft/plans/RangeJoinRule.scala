@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DayTimeIntervalType, LongType, TimestampType}
 
 /** Optimizer rule: bucketized range-join acceleration.
   *
-  * Spark has no range-join optimization — an inner join whose condition is a
+  * Spark has no range-join optimization — a join whose condition is a
   * bounded time window
   * {{{ rts >= lts AND rts <= lts + INTERVAL g }}}
   * plans as a BroadcastNestedLoopJoin (no equi conjunct: every pair is
@@ -16,16 +16,18 @@ import org.apache.spark.sql.types.{DayTimeIntervalType, LongType, TimestampType}
   * predicates only filter AFTER the per-key cross product — a hot key with n
   * rows on both sides still materializes n² pairs.
   *
-  * This rule detects the shape and adds a time-bucket equi key, the same
-  * rewrite [[graft.operators.RangeJoin]] applies by hand (bucket width = the
-  * gap; the right side duplicated into its own and the preceding bucket, so
-  * every qualifying pair shares a bucket cell). The original range
-  * predicates remain in the join condition as the exact filter; the rewrite
-  * is therefore semantics-preserving for ANY matched join, and the pair
-  * space drops from O(n²) per key to O(pairs within 2·gap).
+  * This rule detects the shape and adds a time-bucket equi key (bucket
+  * width = the gap; the right side duplicated into its own and the
+  * preceding bucket, so every qualifying pair shares a bucket cell). The
+  * original range predicates remain in the join condition as the exact
+  * filter; the rewrite is therefore semantics-preserving for ANY matched
+  * join, and the pair space drops from O(n²) per key to O(pairs within
+  * 2·gap). It is the engine's one range join: q46 and q68 are written as
+  * plain joins.
   *
   * Scope (deliberately conservative — miss, never corrupt):
-  *   - Inner joins only; bounds between bare TimestampType attribute refs,
+  *   - Inner and left outer joins (see `apply` for why right and full
+  *     outer are skipped); bounds between bare TimestampType attribute refs,
   *     one side each; upper bound `lts + <foldable day-time interval>`
   *     (`TimestampAddInterval` with a positive literal).
   *   - Any other conjuncts (equi keys included) are preserved untouched.
@@ -106,9 +108,11 @@ object RangeJoinRule extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
-  /** Exact long floor-division bucket (pmod + integral divide — see
-    * RangeJoin: `div` truncation misbuckets pre-1970 timestamps, doubles
-    * lose bits past 2^53). */
+  /** Exact long floor-division bucket. Bare `div` truncates toward zero,
+    * which disagrees with floor bucketing for pre-1970 (negative
+    * unix_micros) timestamps and would drop boundary pairs there; `pmod`
+    * makes the numerator exactly divisible, so `div` is the floor — all in
+    * long arithmetic (a double round-trip loses bits past 2^53). */
   private def bucketExpr(ts: Expression, gapUs: Long): Expression = {
     val x = UnixMicros(ts)
     val g = Literal(gapUs, LongType)

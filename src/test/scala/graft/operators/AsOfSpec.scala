@@ -95,4 +95,24 @@ class AsOfSpec extends SparkSpec {
     assert(out(204L).isEmpty) // 20 min old → too stale
     assert(out(205L).contains(99.0))
   }
+
+  test("a DATE timestamp or mismatched key types are rejected before the job runs") {
+    val days = Seq((1L, java.sql.Date.valueOf("2024-01-01"), 101L, 10.0))
+      .toDF("user_id", "day", "event_id", "px")
+    val badTs = intercept[IllegalArgumentException] {
+      AsOf.asofJoin(days.select("user_id", "day", "event_id"), days,
+        keys = Seq("user_id"), tsCol = "day",
+        valueCols = Seq("px"), tieBreak = "event_id")
+    }
+    assert(badTs.getMessage.contains("day") && badTs.getMessage.contains("date"),
+      badTs.getMessage)
+    // an int key against a bigint key hashes to different partitions
+    val badKey = intercept[IllegalArgumentException] {
+      AsOf.asofJoin(trades.withColumn("user_id", $"user_id".cast("int")), quotes,
+        keys = Seq("user_id"), tsCol = "ts",
+        valueCols = Seq("px"), tieBreak = "event_id")
+    }
+    assert(badKey.getMessage.contains("user_id") && badKey.getMessage.contains("int (left)"),
+      badKey.getMessage)
+  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.{SparkSpec, Tables}
+import graft.{LocalSession, SparkSpec, Tables}
 
 class BucketingSpec extends SparkSpec {
   import spark.implicits._
@@ -27,9 +27,7 @@ class BucketingSpec extends SparkSpec {
     // disable auto-broadcast so the fact-fact sort-merge path is exercised
     // (the scenario bucketing exists for — at real scale neither side fits
     // in a broadcast)
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    LocalSession.withConfs(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = Bucketing.bucketedJoin(spark, "li_bucketed", "o_bucketed", "l_orderkey")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"),
@@ -38,7 +36,7 @@ class BucketingSpec extends SparkSpec {
       val expected = li.join(o, "l_orderkey").count()
       assert(joined.count() == expected)
       assert(expected > 0)
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    }
   }
 
   test("q156 gate: the bucketed fact-fact join itself plans with zero exchanges") {

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{LocalSession, SparkSpec}
 
 /** Executed-plan proof for the skew posture (VERDICT r8 #5): the 100×-scale
   * claim in the join operators' docs — "AQE splits a skewed partition at
@@ -15,19 +15,8 @@ import graft.SparkSpec
 class SkewSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConfs[A](pairs: (String, String)*)(body: => A): A = {
-    val saved = pairs.map { case (k, _) =>
-      k -> spark.conf.getOption(k)
-    }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits a skewed shuffle-join partition at runtime (skew=true)") {
-    withConfs(
+    LocalSession.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       // gate-scale thresholds: the hot partition (~90% of 200k rows) is
@@ -62,7 +51,7 @@ class SkewSpec extends SparkSpec {
     // side's shuffle stage MATERIALIZES small, and AQE rewrites the
     // remaining plan to a broadcast-hash join — no second shuffle-sort of
     // the fact. Pinned on the executed plan like the skew split above.
-    withConfs(
+    LocalSession.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1", // static: never BHJ
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "10MB") { // runtime: allow

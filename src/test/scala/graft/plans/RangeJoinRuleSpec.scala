@@ -21,11 +21,18 @@ import graft.SparkSpec
 class RangeJoinRuleSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
-  override def beforeAll(): Unit =
-    spark.conf.set(SQLConf.OPTIMIZER_EXCLUDED_RULES.key, RangeJoinRule.ruleName)
+  private val excludedKey = SQLConf.OPTIMIZER_EXCLUDED_RULES.key
+  private var savedExcluded: Option[String] = None
 
-  override def afterAll(): Unit =
-    spark.conf.unset(SQLConf.OPTIMIZER_EXCLUDED_RULES.key)
+  override def beforeAll(): Unit = {
+    savedExcluded = spark.conf.getOption(excludedKey)
+    spark.conf.set(excludedKey, RangeJoinRule.ruleName)
+  }
+
+  override def afterAll(): Unit = savedExcluded match {
+    case Some(v) => spark.conf.set(excludedKey, v)
+    case None => spark.conf.unset(excludedKey)
+  }
 
   private def ts(min: Int) = new Timestamp(1700000000000L + min * 60000L)
 
@@ -55,6 +62,29 @@ class RangeJoinRuleSpec extends SparkSpec with BeforeAndAfterAll {
     assert(fired, "rule did not fire on the canonical range-join shape")
     assert(sortedRows(rewritten) == sortedRows(naive))
     assert(sortedRows(naive).nonEmpty)
+  }
+
+  test("inclusive [ts, ts+gap] window per key, bucket edges exact") {
+    def at(s: String) = Timestamp.valueOf(s)
+    val starts = Seq((1L, at("2024-01-01 10:00:00"), 11L),
+      (2L, at("2024-01-01 10:00:00"), 12L)).toDF("k", "lts", "probe_id")
+    val follows = Seq(
+      (1L, at("2024-01-01 09:59:59"), 21L), // before start → excluded
+      (1L, at("2024-01-01 10:00:00"), 22L), // equal ts → included (gap 0)
+      (1L, at("2024-01-01 10:04:00"), 23L), // same bucket → included
+      (1L, at("2024-01-01 10:05:00"), 24L), // exactly the gap → included
+      (1L, at("2024-01-01 10:05:01"), 25L), // gap + 1 s → excluded
+      (2L, at("2024-01-01 10:03:00"), 26L) // other key
+    ).toDF("k2", "rts", "event_id")
+    val naive = starts.join(follows,
+      $"k" === $"k2" && $"rts" >= $"lts" && $"rts" <= expr("lts + INTERVAL 5 MINUTE"))
+    val (rewritten, fired) = applyRule(naive)
+    assert(fired, "rule did not fire on the edge fixture")
+    def pairs(df: DataFrame) =
+      df.select($"probe_id", $"event_id").as[(Long, Long)].collect().toSet
+    val want = Set((11L, 22L), (11L, 23L), (11L, 24L), (12L, 26L))
+    assert(pairs(rewritten) == want)
+    assert(pairs(naive) == want)
   }
 
   test("rewritten plan keys the join on the bucket (equi conjunct present)") {

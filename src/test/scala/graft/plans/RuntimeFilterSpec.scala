@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{LocalSession, SparkSpec}
 
 /** Runtime Bloom-filter join pruning — the 100 TB lever where static
   * predicate pushdown cannot help: a selective filter on the DIMENSION side
@@ -23,9 +23,7 @@ class RuntimeFilterSpec extends SparkSpec {
       // InjectRuntimeFilter correctly skips broadcast joins (the filter
       // would add nothing: the build side is already hashed locally)
       "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    LocalSession.withConfs(spark, confs: _*) {
       // raw scans: InjectRuntimeFilter only descends through
       // scan/filter/project shapes, so the parallelism-floor repartition
       // Tables.load adds for the tiny test files would mask eligibility
@@ -48,9 +46,6 @@ class RuntimeFilterSpec extends SparkSpec {
         s"expected the bloom filter built from the creation side in:\n$optimized")
       // and the rewrite is semantically invisible
       assert(joined.collect().length == 1)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

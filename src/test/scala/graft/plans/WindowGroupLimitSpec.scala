@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{LocalSession, SparkSpec}
 import graft.tools.PlanChecks
 
 /** Executed-plan pin for the rank-filter gates' limit-pushdown reliance
@@ -79,14 +79,10 @@ class WindowGroupLimitSpec extends SparkSpec {
 
   test("non-vacuity: disabling both mechanisms restores the global funnel") {
     import spark.implicits._
-    val exclKey = "spark.sql.optimizer.excludedRules"
-    val wglKey = "spark.sql.optimizer.windowGroupLimitThreshold"
-    val oldExcl = spark.conf.getOption(exclKey)
-    val oldWgl = spark.conf.get(wglKey)
-    try {
-      spark.conf.set(exclKey,
-        "org.apache.spark.sql.catalyst.optimizer.LimitPushDownThroughWindow")
-      spark.conf.set(wglKey, "-1")
+    LocalSession.withConfs(spark,
+        "spark.sql.optimizer.excludedRules" ->
+          "org.apache.spark.sql.catalyst.optimizer.LimitPushDownThroughWindow",
+        "spark.sql.optimizer.windowGroupLimitThreshold" -> "-1") {
       val df = spark.range(10000).select($"id")
         .withColumn("rk", row_number().over(Window.orderBy($"id")))
         .filter($"rk" <= 10)
@@ -98,12 +94,6 @@ class WindowGroupLimitSpec extends SparkSpec {
           "be pinning the wrong mechanism")
       assert(PlanChecks.maxSinglePartitionWindowRows(plan) == 10000L,
         "detector misread the unbounded funnel's row count")
-    } finally {
-      oldExcl match {
-        case Some(v) => spark.conf.set(exclKey, v)
-        case None => spark.conf.unset(exclKey)
-      }
-      spark.conf.set(wglKey, oldWgl)
     }
   }
 }

@@ -2,12 +2,15 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import graft.SparkSpec
+import graft.{LocalSession, SparkSpec}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  private val RocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   private lazy val eventsDir: String = {
     val dir = graft.Scratch.fresh("stream-events").toString
@@ -56,11 +59,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.move(p3.toPath,
       java.nio.file.Paths.get(s"$dir/zz_sentinel.parquet"))
 
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    LocalSession.withConfs(spark, RocksDb) {
       val out = Streaming.runOnce(spark, dir,
         df => Streaming.twsCountSum(df.as[Streaming.TwsEvent]).toDF(),
         "tws_test",
@@ -68,9 +67,6 @@ class StreamingSpec extends SparkSpec {
         sourceOptions = Map("maxFilesPerTrigger" -> "1"))
         .as[(Long, Long, Long)].collect().toSet
       assert(out == Set((7L, 2L, 400L), (9L, 1L, 800L)))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -84,11 +80,7 @@ class StreamingSpec extends SparkSpec {
       Streaming.TwsEvent(7, isSentinel = true, 0),
       Streaming.TwsEvent(7, isSentinel = false, 200))
       .toDF().coalesce(1).write.parquet(dir)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    LocalSession.withConfs(spark, RocksDb) {
       val out = Streaming.runOnce(spark, dir,
         df => Streaming.twsCountSum(df.as[Streaming.TwsEvent]).toDF(),
         "tws_mixed_test",
@@ -96,9 +88,6 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Long, Long)].collect().toSet
       assert(out == Set((7L, 2L, 300L)),
         "a mid-batch sentinel must flush state plus the full batch delta")
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
@@ -124,11 +113,7 @@ class StreamingSpec extends SparkSpec {
     val ckpt = graft.Scratch.fresh("ckrec-ckpt").resolve("ckpt").toString
     val plan: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
       df => Streaming.twsCountSum(df.as[Streaming.TwsEvent]).toDF()
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    LocalSession.withConfs(spark, RocksDb) {
       Streaming.runForeachBatch(spark, drive.toString, out, plan, "ckrec_p1",
         sourceOptions = Map("maxFilesPerTrigger" -> "1"),
         checkpointDir = Some(ckpt))
@@ -138,9 +123,6 @@ class StreamingSpec extends SparkSpec {
       Streaming.runForeachBatch(spark, drive.toString, out, plan, "ckrec_p2",
         sourceOptions = Map("maxFilesPerTrigger" -> "1"),
         checkpointDir = Some(ckpt))
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     val rows = spark.read
       .schema("user_id LONG, n_events LONG, total_cents LONG").parquet(out)
@@ -224,11 +206,7 @@ class StreamingSpec extends SparkSpec {
     writeBatch("zz_advance.parquet", Seq(
       Streaming.TimedEvent(99, ts("2024-01-02 00:00:00"))))
 
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val saved = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    LocalSession.withConfs(spark, RocksDb) {
       val out = Streaming.runOnce(spark, dir,
         df => Streaming.twsTimerCounts(df.as[Streaming.TimedEvent], 60000L).toDF(),
         "tws_timer_test",
@@ -237,9 +215,6 @@ class StreamingSpec extends SparkSpec {
         .as[(Long, Long)].collect().toSet
       assert(out == Set((7L, 2L), (9L, 1L)),
         "only the watermark-expired keys may flush; the advancer must not")
-    } finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
   }
 
