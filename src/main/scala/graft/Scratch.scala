@@ -42,7 +42,11 @@ object Scratch {
 
   /** Writes `df` as parquet to `dir/tag` and reads it back: the file hop
     * that cuts a lineage once and, unlike a `.persist`, gives every reader
-    * real size statistics (so joins against it can stay broadcasts). */
+    * real size statistics (so joins against it can stay broadcasts). Its
+    * callers are `Graph.integerPageRank` (the degree frame),
+    * `Graph.kCorePeelCensus` (per-round degrees and surviving edges) and
+    * q112's shingle-array checkpoint (`DedupQueries`); BFS and label
+    * propagation hold their |V|-bounded frames on the driver instead. */
   def hop(df: DataFrame, dir: Path, tag: String): DataFrame = {
     val p = dir.resolve(tag).toString
     df.write.mode("overwrite").parquet(p)

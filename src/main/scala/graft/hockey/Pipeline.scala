@@ -1,6 +1,6 @@
 package graft.hockey
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,19 @@ import org.apache.spark.sql.functions._
   */
 object Pipeline {
 
+  /** `df` with each named column set to its expression, in ONE projection:
+    * an existing column is replaced in place and a new one is appended, in
+    * `cols` order — the result of the same `withColumn` chain, without
+    * analysing the whole plan again for every column (Spark's `withColumn`
+    * doc warns against calling it in a loop). Each expression reads `df`'s
+    * own columns, never another entry of `cols`. */
+  private def setColumns(df: DataFrame, cols: Seq[(String, Column)]): DataFrame = {
+    val set = cols.toMap
+    val names = df.columns.toSeq
+    df.select(names.map(n => set.get(n).fold(col(s"`$n`"))(_.as(n))) ++
+      cols.collect { case (n, e) if !names.contains(n) => e.as(n) }: _*)
+  }
+
   /** S1/P1/P2/F1 + X1-X3 (ref code/experiment.py:280-316): results scan,
     * typed, season/game floors, team-code normalization. */
   def loadResults(spark: SparkSession, path: String): DataFrame =
@@ -34,11 +47,9 @@ object Pipeline {
       .withColumnRenamed("Ev_Team", "Ev_Team_raw")
       .filter(col("Season") >= Schemas.MinSeason &&
         col("GameID") >= Schemas.MinGameId)
-      .withColumn("Is_Home", col("Is_Home").cast("int"))
-      .withColumn("Goal", col("Goal").cast("int"))
-      .withColumn("Win", col("Win").cast("int"))
-      .withColumn("Points", col("Points").cast("int"))
-      .withColumn("TeamCode", TeamNames.teamCode(col("Ev_Team_raw")))
+      .transform(setColumns(_,
+        Seq("Is_Home", "Goal", "Win", "Points").map(c => c -> col(c).cast("int")) :+
+          ("TeamCode" -> TeamNames.teamCode(col("Ev_Team_raw")))))
 
   /** S2/P3/F1 + X1-X3 (ref code/experiment.py:322-356): events scan. */
   def loadEvents(spark: SparkSession, path: String): DataFrame =
@@ -84,11 +95,9 @@ object Pipeline {
     * game in the frame) takes the feature's league default. */
   def withRollingFeatures(gameData: DataFrame): DataFrame = {
     val ordered = Window.partitionBy("TeamCode", "Season").orderBy("Date", "GameID")
-    Schemas.rolling.foldLeft(gameData.withColumn(Schemas.gameOrdinal._1,
-        row_number().over(ordered))) { (df, f) =>
-      df.withColumn(f.column, coalesce(avg(f.input).over(ordered.rowsBetween(f.frame.start, -1)),
-        lit(f.default)))
-    }
+    setColumns(gameData, (Schemas.gameOrdinal._1 -> row_number().over(ordered)) +:
+      Schemas.rolling.map(f => f.column ->
+        coalesce(avg(f.input).over(ordered.rowsBetween(f.frame.start, -1)), lit(f.default))))
   }
 
   /** F3/J2/P6/X7/F6 (ref code/experiment.py:502-555): home×away self-join on
@@ -107,9 +116,8 @@ object Pipeline {
       .select(Seq("GameID", "Season", "Date").map(c => col(s"home.$c").as(c)) ++
         Seq(col("home.TeamCode").as("home_team"), col("away.TeamCode").as("away_team")) ++
         sides :+ col("home.Points").as("label"): _*)
-    Schemas.differentials.foldLeft(joined) { case (df, (name, suffix)) =>
-      df.withColumn(name, col(s"home_$suffix") - col(s"away_$suffix"))
-    }.na.drop()
+    setColumns(joined, Schemas.differentials.map { case (name, suffix) =>
+      name -> (col(s"home_$suffix") - col(s"away_$suffix")) }).na.drop()
   }
 
   /** A2/F4/C2 (ref code/experiment.py:564-572): temporal split — latest
@@ -140,7 +148,7 @@ object Pipeline {
     * double before assembly (games-played ordinals are int; the reference
     * casts explicitly rather than relying on assembler widening). */
   def castFeatures(df: DataFrame): DataFrame =
-    Schemas.featureCols.foldLeft(df)((d, c) => d.withColumn(c, col(c).cast("double")))
+    setColumns(df, Schemas.featureCols.map(c => c -> col(c).cast("double")))
 
   /** Full ETL: paths → cached matchups (the reference materializes
     * game_data and matchups with cache()+count() — C1 — because the

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.Scratch
+import graft.{Derived, Scratch}
 
 /** Distributed graph analytics over edge lists — the co-occurrence /
   * similarity-graph layer of a data-curation pipeline (near-dup clusters
@@ -197,14 +197,18 @@ object Graph {
     * driver state. At web scale pick `scale` so |V|·scale·17 < 2⁶³ (the
     * sum bound) — or shard the rank column into hi/lo longs.
     *
-    * The degree frame is CHECKPOINTED as a tiny parquet hop (r15
-    * optimization, the [[bfsFrontiers]]/[[labelPropagation]] scratch
-    * pattern): deg is read once per iteration plus once for the seed —
-    * lazily it was an independent subtree each time, so the full 2-scan
-    * degree agg re-executed iters+1 times (the q130 static plan carried
-    * 14 scans; checkpointed it carries iters·2 = 6 over the edge list).
-    * The file hop (not a `.persist`) keeps real size statistics so every
-    * per-iteration deg join stays a broadcast. */
+    * The degree frame is CHECKPOINTED as a tiny parquet hop
+    * ([[graft.Scratch.hop]], r15 optimization): deg is read once per
+    * iteration plus once for the seed — lazily it was an independent
+    * subtree each time, so the full 2-scan degree agg re-executed iters+1
+    * times (the q130 static plan carried 14 scans; checkpointed it carries
+    * iters·2 = 6 over the edge list). The file hop (not a `.persist`)
+    * keeps real size statistics so every per-iteration deg join stays a
+    * broadcast. It stays a file, not the driver-held local relation
+    * [[bfsFrontiers]] and [[labelPropagation]] use: collecting the
+    * degrees and shipping them back measured neutral for q130 on a
+    * 4-core host (0.87 → 0.81 s), so the lazily-consumed file hop was
+    * kept. */
   def integerPageRank(edges: DataFrame, iters: Int = 3,
       scale: Long = 1000000000000L,
       scratchKey: Option[String] = None,
@@ -232,59 +236,56 @@ object Graph {
   /** k-hop BFS frontier census from a DETERMINISTIC seed — the minimum-
     * degree vertex, ties to the smallest id (the hardest seed on a
     * near-clique co-purchase graph: a hub would reach everything in one
-    * hop). Level k is one adjacency equi-join on the previous frontier +
-    * distinct + anti-join against the reached set — the Pregel superstep
-    * as relational algebra, shuffle-bounded by frontier × degree, never
-    * all-pairs. Output is one row per hop (frontier size, cumulative
-    * reached); the running sum is a window over those k+1 rows — a
-    * single implicit partition, fine because the frame is the hop
-    * census, not data.
+    * hop). Output is one row per hop (hop, n_frontier, n_reached), hops
+    * 0..`hops`; an edgeless graph has no seed and gives all-zero rows.
     *
-    * Every hop's `next` frontier (and the seed) is CHECKPOINTED as a
-    * tiny parquet hop, exactly like [[kCorePeelCensus]]: without it the
-    * lazy `frontier`/`reached` lineages compound — hop k's join,
-    * anti-join, AND census count each re-derive every earlier hop (the
-    * unrolled plan had 152 scans / 79 shuffles at hops=3, and grows
-    * exponentially in `hops`). With the checkpoint each hop is a
-    * constant-size plan over two parquet frames; the cumulative reached
-    * set is the union of the (disjoint) frontier files.
+    * A superstep loop the DRIVER coordinates (the Pregel superstep with
+    * the frontier as driver state): one aggregate picks the seed; each hop
+    * is ONE distributed step — the adjacency semi-joined to the frontier,
+    * shipped as a local relation (a broadcast), and its distinct `dst` ids
+    * collected — and the driver subtracts the reached set and keeps the
+    * census. Driver state is O(|V|) vertex ids (the reached set and the
+    * frontier), like q323's O(k) centers: 2,000 ids at sf0.01, 20,000 at
+    * sf0.1. The census is returned as a local relation, so the work runs
+    * eagerly, inside this call.
     *
-    * `scratchKey` (r12 ADVICE): repeated invocations with the same key
-    * (bench warm-up + N timed trials of one gate) reuse ONE per-JVM
-    * scratch dir, overwriting the same hop files instead of accumulating
-    * a fresh tmpfs dir per run — all hop files of one invocation stay
-    * live until its result frame is consumed (the census reads every
-    * hop lazily), so within-run deletion is NOT safe here; reuse is. */
+    * The parquet hop this replaced (`Scratch.hop` per frontier) wrote and
+    * re-read every hop — 19 Spark jobs per q219 execution at sf0.01 on 4
+    * cores, against 9 here — to cut a lineage that a local relation never
+    * grows: each hop's plan is one bucketed scan, one broadcast semi-join
+    * and one exchange-free distinct whatever the depth.
+    *
+    * `edges` is by-name and read only when `adjOpt` is absent: a caller
+    * that passes its adjacency table pays no edge-file read (each parquet
+    * read runs a schema job). */
   def bfsFrontiers(spark: org.apache.spark.sql.SparkSession,
-      edges: DataFrame, hops: Int = 3,
-      scratchKey: Option[String] = None,
+      edges: => DataFrame, hops: Int = 3,
       adjOpt: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val run = Scratch.runDir("bfs", scratchKey)
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
     // adjOpt (r16): a dst-bucketed symmetric adjacency makes each hop's
-    // frontier `distinct` (keyed on the matched dst) and the seed's
-    // degree census (groupBy dst ≡ groupBy src by symmetry) exchange-free.
+    // `distinct dst` and the seed's degree census (groupBy dst ≡ groupBy
+    // src by symmetry) exchange-free.
     val adj = adjOpt.getOrElse(adjacency(edges))
-    val deg = adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg"))
-    val seed = Scratch.hop(deg.orderBy(col("deg").asc, col("vtx").asc)
-      .limit(1).select(col("vtx")), run, "seed")
-    var frontier = seed
-    var reached = seed // union of disjoint per-hop frontier files
-    var counts = seed.agg(count(lit(1)).as("n_frontier"))
-      .select(lit(0).as("hop"), col("n_frontier"))
-    (1 to hops).foreach { k =>
-      val next = Scratch.hop(
-        adj.join(frontier, adj("src") === frontier("vtx"))
-          .select(col("dst").as("vtx")).distinct()
-          .join(reached, Seq("vtx"), "left_anti"), run, s"f$k")
-      counts = counts.unionAll(next.agg(count(lit(1)).as("n_frontier"))
-        .select(lit(k).as("hop"), col("n_frontier")))
-      reached = reached.unionAll(next) // disjoint by the anti-join
-      frontier = next
+    val vtxSchema = StructType(Seq(StructField("vtx", adj.schema("dst").dataType)))
+    val seed = adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg"))
+      .agg(min(struct(col("deg"), col("vtx"))).getField("vtx").as("vtx"))
+      .head()
+    var frontier = if (seed.isNullAt(0)) Array.empty[Row] else Array(seed)
+    val reached = scala.collection.mutable.HashSet.empty[Any] ++= frontier.map(_.get(0))
+    val census = (0 to hops).map { k =>
+      if (k > 0 && frontier.nonEmpty) {
+        val f = Derived.Rows(frontier, vtxSchema).toDF(spark)
+        frontier = adj.join(broadcast(f), adj("src") === f("vtx"), "left_semi")
+          .select(col("dst")).distinct().collect()
+          .filter(r => reached.add(r.get(0)))
+      }
+      Row(k, frontier.length.toLong, reached.size.toLong)
     }
-    val w = Window.orderBy(col("hop"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    counts.withColumn("n_reached", sum(col("n_frontier")).over(w))
+    spark.createDataFrame(java.util.Arrays.asList(census: _*), StructType(Seq(
+      StructField("hop", IntegerType, nullable = false),
+      StructField("n_frontier", LongType, nullable = false),
+      StructField("n_reached", LongType, nullable = false))))
   }
 
   /** LABEL PROPAGATION community detection (Raghavan's LPA), made
@@ -310,34 +311,35 @@ object Graph {
     * they move). Identical trajectory: both formulations realize the
     * same (count DESC, label ASC) arg-max.
     *
-    * Each round's label frame is CHECKPOINTED as a parquet hop (same
-    * rationale as [[bfsFrontiers]]/[[kCorePeelCensus]]): round r's join
-    * would otherwise re-derive rounds 1..r−1's join+window lineage, so
-    * plan size grows with iters² while the checkpointed plan stays one
-    * join + one window per round. */
+    * Each round's label frame is collected to the driver and shipped to
+    * the next round as a local relation ([[graft.Derived.Rows]]): round
+    * r's join would otherwise re-derive rounds 1..r−1's lineage, so plan
+    * size would grow with iters², while a local relation keeps every
+    * round one join + two aggregations. Driver state is one label per
+    * vertex, O(|V|) — the [[bfsFrontiers]] bound — and the returned
+    * census aggregates the last round's local relation. */
   def labelPropagation(spark: org.apache.spark.sql.SparkSession,
-      edges: DataFrame, iters: Int = 3,
-      scratchKey: Option[String] = None,
+      edges: => DataFrame, iters: Int = 3,
       adjOpt: Option[DataFrame] = None): DataFrame = {
-    val run = Scratch.runDir("lpa", scratchKey)
     // adjOpt (r16): callers that keep the symmetric adjacency as a
     // dst-bucketed table pass it in — HashPartitioning(dst) satisfies
     // both per-round aggregations' clustering AND the seed distinct (by
     // symmetry, distinct dst ≡ distinct src), so every round runs with
     // zero exchanges. Any (src, dst) symmetric closure is accepted;
-    // results are identical either way.
+    // results are identical either way. `edges` (by-name) is read only
+    // without one, as in bfsFrontiers.
     val adj = adjOpt.getOrElse(adjacency(edges))
     var labels = adj.select(col("dst").as("vtx")).distinct()
       .select(col("vtx"), col("vtx").as("lbl"))
-    (1 to iters).foreach { i =>
-      labels = Scratch.hop(
+    (1 to iters).foreach { _ =>
+      labels = Derived.rows(
         adj.join(labels, adj("src") === labels("vtx"))
           .groupBy(col("dst").as("vtx"), col("lbl"))
           .agg(count(lit(1)).as("c"))
           .groupBy(col("vtx"))
           .agg(max(struct(col("c").as("c"), negate(col("lbl")).as("neg"),
             col("lbl").as("lbl"))).as("m"))
-          .select(col("vtx"), col("m").getField("lbl").as("lbl")), run, s"l$i")
+          .select(col("vtx"), col("m").getField("lbl").as("lbl"))).toDF(spark)
     }
     labels.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"))
@@ -361,7 +363,11 @@ object Graph {
     * parquet hop, same rationale as the q125 edge checkpoint — the census
     * row AND the next round both re-read it, and the census frame is
     * consumed lazily long after this method returns). Driver state is
-    * nil: k travels as a broadcast 1-row cross join, never a collect. */
+    * nil: k travels as a broadcast 1-row cross join, never a collect.
+    * The hops stay parquet files rather than driver-held local relations
+    * (the [[bfsFrontiers]] form): the surviving EDGE set is not bounded
+    * by |V|, and collecting the per-round degree frames instead measured
+    * slower for q301 on a 4-core host (2.2 → 2.4–2.6 s). */
   def kCorePeelCensus(spark: org.apache.spark.sql.SparkSession,
       edges: DataFrame, rounds: Int = 3,
       scratchKey: Option[String] = None): DataFrame = {

@@ -109,7 +109,7 @@ object GraphQueries {
       adjOpt = Some(coPurchaseAdj(spark, dir)))
 
   /** 3-hop BFS reachability census
-    * ([[graft.operators.Graph.bfsFrontiers]] — per-hop checkpointed
+    * ([[graft.operators.Graph.bfsFrontiers]] — driver-coordinated
     * Pregel supersteps from the min-degree seed). The oracle replays the same level
     * structure as chained CTEs (fᵢ = neighbors of fᵢ₋₁ minus everything
     * reached), so every per-hop frontier size is checked, not just the
@@ -117,7 +117,6 @@ object GraphQueries {
     * the periphery-seeded traversal genuinely needs all three hops. */
   def bfsCensus(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.bfsFrontiers(spark, coPurchaseEdges(spark, dir),
-      scratchKey = Some(graft.Scratch.dirKey(dir)),
       adjOpt = Some(coPurchaseAdj(spark, dir)))
 
   /** Deterministic label-propagation communities
@@ -128,7 +127,6 @@ object GraphQueries {
     * not just the final census. */
   def lpaCensus(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Graph.labelPropagation(spark, coPurchaseEdges(spark, dir),
-      scratchKey = Some(graft.Scratch.dirKey(dir)),
       adjOpt = Some(coPurchaseAdj(spark, dir)))
 
   /** Mean-core peeling trajectory

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Second-scale self-certification for q301_kcore_peeling (VERDICT r14
-  * #2): the one sweep gate whose DuckDB oracle is INFEASIBLE at sf0.1 —
+  * #2): the first sweep gate whose DuckDB oracle was INFEASIBLE at sf0.1 —
   * the one-shot CTE replay of the iterative peel spilled >55 GB
   * (VERIFY_SF01.md) — so until now its only sf0.1 evidence was a
   * wall-clock slope. The oracle's limitation doesn't need DuckDB to
@@ -32,14 +32,27 @@ import org.apache.spark.sql.SparkSession
   * comparator is spec-pinned (KCoreCertifySpec tampers a census row and
   * asserts detection).
   *
-  * Run via `tools/sweep_sf01.sh` (which records the result in
+  * The same driver-side edge set also certifies q219_bfs_frontiers,
+  * whose DuckDB replay runs out of temp disk at sf0.1 (VERIFY_SF01.md):
+  * a plain-Scala BFS over an adjacency map ([[referenceBfsCensus]]) —
+  * min-degree seed with ties to the smallest id, then each hop's
+  * neighbors minus everything reached — must reproduce the engine's
+  * (hop, n_frontier, n_reached) census exactly.
+  *
+  * Run via `tools/sweep_sf01.sh` (which records both results in
   * VERIFY_SF01.md) or directly:
   * {{{ sbt "runMain graft.tools.KCoreCertify /root/testdata/sf0.1" }}}
   */
 object KCoreCertify {
 
+  /** One row of a certified census, keyed by its step (round or hop). */
+  sealed trait Step { def step: Int }
+
   final case class CensusRow(round: Int, nRemoved: Long, nKept: Long,
-      nEdges: Long)
+      nEdges: Long) extends Step { def step: Int = round }
+
+  final case class BfsRow(hop: Int, nFrontier: Long, nReached: Long)
+      extends Step { def step: Int = hop }
 
   /** Pure reference peel: edges → (k, 3-round census). Independent of the
     * engine path end to end (no DataFrames past the input scan). */
@@ -67,6 +80,27 @@ object KCoreCertify {
       row
     }
     (k, census)
+  }
+
+  /** Pure reference BFS: edges → the `hops`-hop frontier census from the
+    * minimum-degree vertex, ties to the smallest id; an edgeless graph has
+    * no seed and all-zero rows. Independent of the engine path end to end
+    * (an adjacency map and two sets on the driver). */
+  def referenceBfsCensus(edges: Iterable[(Long, Long)], hops: Int = 3)
+      : Seq[BfsRow] = {
+    val adj = scala.collection.mutable.HashMap.empty[Long, List[Long]]
+    edges.foreach { case (u, v) =>
+      adj.update(u, v :: adj.getOrElse(u, Nil))
+      adj.update(v, u :: adj.getOrElse(v, Nil))
+    }
+    val seed = adj.iterator.map { case (vtx, ns) => (ns.size, vtx) }
+      .minOption.map(_._2)
+    val reached = scala.collection.mutable.HashSet.empty[Long] ++= seed
+    var frontier = seed.toSet
+    BfsRow(0, frontier.size.toLong, reached.size.toLong) +: (1 to hops).map { k =>
+      frontier = frontier.flatMap(adj(_)).filter(reached.add)
+      BfsRow(k, frontier.size.toLong, reached.size.toLong)
+    }
   }
 
   /** Driver-side co-purchase edge build from the raw table: per-order
@@ -102,12 +136,19 @@ object KCoreCertify {
         r.getAs[Long]("n_edges")))
       .sortBy(_.round).toSeq
 
+  /** Engine q219 census rows, collected and normalized. */
+  def engineBfsCensus(spark: SparkSession, dir: String): Seq[BfsRow] =
+    graft.ops.GraphQueries.bfsCensus(spark, dir)
+      .collect().map(r => BfsRow(r.getAs[Int]("hop"),
+        r.getAs[Long]("n_frontier"), r.getAs[Long]("n_reached")))
+      .sortBy(_.hop).toSeq
+
   /** Pure comparator (spec-pinned for non-vacuity): None = certified. */
-  def mismatch(engine: Seq[CensusRow], reference: Seq[CensusRow])
+  def mismatch[R <: Step](engine: Seq[R], reference: Seq[R])
       : Option[String] =
-    if (engine.sortBy(_.round) == reference.sortBy(_.round)) None
-    else Some(s"engine census ${engine.sortBy(_.round)} != reference " +
-      s"census ${reference.sortBy(_.round)}")
+    if (engine.sortBy(_.step) == reference.sortBy(_.step)) None
+    else Some(s"engine census ${engine.sortBy(_.step)} != reference " +
+      s"census ${reference.sortBy(_.step)}")
 
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -120,11 +161,16 @@ object KCoreCertify {
       s"""{"round":${c.round},"n_removed":${c.nRemoved},"n_kept":${c.nKept},"n_edges":${c.nEdges}}""")
       .mkString("[", ",", "]")
     println(s"""{"gate":"q301_kcore_peeling","sf":"$dir","n_edges_input":${edges.size},"k":$k,"engine":${rows(engine)},"reference":${rows(reference)},"certified":${verdict.isEmpty}}""")
-    verdict.foreach { why =>
-      System.err.println(s"[kcore-certify] MISMATCH: $why")
-      spark.stop()
-      sys.exit(1)
-    }
+    val bfsEngine = engineBfsCensus(spark, dir)
+    val bfsReference = referenceBfsCensus(edges)
+    val bfsVerdict = mismatch(bfsEngine, bfsReference)
+    def hops(cs: Seq[BfsRow]): String = cs.map(c =>
+      s"""{"hop":${c.hop},"n_frontier":${c.nFrontier},"n_reached":${c.nReached}}""")
+      .mkString("[", ",", "]")
+    println(s"""{"gate":"q219_bfs_frontiers","sf":"$dir","n_edges_input":${edges.size},"engine":${hops(bfsEngine)},"reference":${hops(bfsReference)},"certified":${bfsVerdict.isEmpty}}""")
     spark.stop()
+    val failures = verdict.toSeq ++ bfsVerdict
+    failures.foreach(why => System.err.println(s"[kcore-certify] MISMATCH: $why"))
+    if (failures.nonEmpty) sys.exit(1)
   }
 }

@@ -51,7 +51,10 @@ object PlanAudit {
          |repartition/groupBy/fact-fact join), dimension joins should be
          |broadcasts, and window families should share one sort. (Codegen spans
          |are applied per query stage at AQE materialization, so they are not
-         |countable pre-execution.)
+         |countable pre-execution.) A gate that does its work eagerly while its
+         |frame is built and returns a local relation (q219's BFS census, q323's
+         |k centers) shows only that relation's scan here; its jobs have already
+         |run.
          |
          |$table
          |""".stripMargin

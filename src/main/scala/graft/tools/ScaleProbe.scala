@@ -639,6 +639,15 @@ object ScaleProbe {
       |  unique in the corpus, and q294's old plan only matched DuckDB
       |  because both engines read ties in file order — the sort key now
       |  carries the counted columns as tie-breaks.
+      |- **Driver-held BFS/LPA state: q219/q224 rows re-measured at local[4]**
+      |  (the rest of this table is local[32]): the BFS frontier and LPA
+      |  labels now pass between rounds as driver-held local relations, not
+      |  parquet hops. Same probe, same host, parent commit vs this change:
+      |  q219 1× 3.99 → 2.13 s, 10× 3.16 → 1.58 s (ratio 0.79 → 0.74, spw 1 →
+      |  0: the census window is gone); q224 1× 5.72 → 5.23 s, 10× 5.69 →
+      |  4.90 s (ratio 1.00 → 0.94). The driver holds O(|V|) ids, and the
+      |  salted 10× corpus keeps |V| (part ids are not salted), so the 10× run
+      |  grows edges, not driver state.
       |""".stripMargin
 
   def main(args: Array[String]): Unit = {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.SparkSpec
+import graft.{Scratch, SparkSpec}
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -130,5 +130,35 @@ class GraphSpec extends SparkSpec {
     assert(lpa.collect().nonEmpty)
     val nLpa = scans(lpa)
     assert(nLpa <= 3, s"LPA census plan re-derives round lineage: $nLpa scans")
+  }
+
+  test("BFS frontiers: one seed aggregate and one step per hop bound the job count") {
+    // path 1-2-...-8 keeps a non-empty frontier at every hop, so every
+    // hop runs its distributed step. Per-hop parquet hops (a write per
+    // frontier, then a count per hop in the census) ran 23 jobs here on
+    // 4 cores; the driver-held frontier runs 12.
+    val path = edges((1L to 7L).map(i => (i, i + 1)): _*)
+    var rows = Seq.empty[(Int, Long, Long)]
+    val jobs = jobsOf {
+      rows = Graph.bfsFrontiers(spark, path, hops = 3)
+        .as[(Int, Long, Long)].collect().sortBy(_._1).toSeq
+    }
+    assert(rows == Seq((0, 1L, 1L), (1, 1L, 2L), (2, 1L, 3L), (3, 1L, 4L)))
+    assert(jobs <= 16, s"bfsFrontiers ran $jobs Spark jobs")
+  }
+
+  test("BFS frontiers: an edgeless graph has no seed and all-zero hop rows") {
+    val none = Seq.empty[(Long, Long)].toDF("u", "v")
+    val rows = Graph.bfsFrontiers(spark, none, hops = 3)
+      .as[(Int, Long, Long)].collect().sortBy(_._1)
+    assert(rows.toSeq == Seq((0, 0L, 0L), (1, 0L, 0L), (2, 0L, 0L), (3, 0L, 0L)))
+  }
+
+  test("BFS and LPA write no scratch files") {
+    val g = edges((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (1L, 5L), (2L, 5L))
+    val before = Scratch.totalBytes
+    assert(Graph.bfsFrontiers(spark, g, hops = 3).collect().length == 4)
+    assert(Graph.labelPropagation(spark, g, iters = 3).collect().nonEmpty)
+    assert(Scratch.totalBytes == before, "BFS/LPA wrote scratch files")
   }
 }

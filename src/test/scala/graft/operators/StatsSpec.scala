@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,33 +8,6 @@ import graft.{SparkSpec, Tables}
 
 class StatsSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Spark jobs `body` starts on this thread, counted by a listener. A
-    * marker job in a group of its own follows `body`; the listener sees
-    * events in order, so once it has seen the marker it has seen every
-    * job of `body`. */
-  private def jobsOf(body: => Unit): Int = {
-    val id = java.util.UUID.randomUUID().toString
-    val (jobs, marked) = (new AtomicInteger, new java.util.concurrent.CountDownLatch(1))
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`id`) => jobs.incrementAndGet(): Unit
-          case Some(g) if g == s"$id-marker" => marked.countDown()
-          case _ =>
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(id, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$id-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS), "marker job not seen")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("exactMedian equals the median aggregate (odd n, even n, skew, constants)") {
     val odd = Seq(5.0, 1.0, 9.0, 3.0, 7.0).toDF("v")

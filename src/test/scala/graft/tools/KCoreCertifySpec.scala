@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.SparkSpec
-import graft.tools.KCoreCertify.CensusRow
+import graft.tools.KCoreCertify.{BfsRow, CensusRow}
 
 /** Pins the q301 second-scale self-certifier (VERDICT r14 #2).
   *
@@ -11,7 +11,8 @@ import graft.tools.KCoreCertify.CensusRow
   * reproduces the engine's census at sf0.001, (b) the reference peel is
   * correct on a hand-computed graph, and (c) the comparator actually
   * detects a tampered census (non-vacuity — a comparator that returns
-  * None unconditionally would "certify" anything).
+  * None unconditionally would "certify" anything). The q219 BFS census
+  * the same tool certifies gets the same three checks.
   */
 class KCoreCertifySpec extends SparkSpec {
 
@@ -40,6 +41,34 @@ class KCoreCertifySpec extends SparkSpec {
     val tampered = Seq(CensusRow(1, 1, 3, 3), CensusRow(2, 0, 3, 4))
     assert(KCoreCertify.mismatch(tampered, ref).nonEmpty)
     // and row order must not matter
+    assert(KCoreCertify.mismatch(ref.reverse, ref).isEmpty)
+  }
+
+  test("reference BFS census on a hand-computed graph, and an edgeless one") {
+    // path 1-2-3 plus the triangle {10,11,12} and the pendant 12-13:
+    // degrees 1,2,1 | 2,2,3,1 — min degree 1 ties 1, 3 and 13; seed 1.
+    // Hops: {2}, {3}, then nothing; the other component is never reached.
+    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (10L, 12L), (11L, 12L),
+      (12L, 13L))
+    assert(KCoreCertify.referenceBfsCensus(edges) == Seq(BfsRow(0, 1, 1),
+      BfsRow(1, 1, 2), BfsRow(2, 1, 3), BfsRow(3, 0, 3)))
+    assert(KCoreCertify.referenceBfsCensus(Nil) == Seq(BfsRow(0, 0, 0),
+      BfsRow(1, 0, 0), BfsRow(2, 0, 0), BfsRow(3, 0, 0)))
+  }
+
+  test("engine BFS census == independent reference BFS census at sf0.001") {
+    val engine = KCoreCertify.engineBfsCensus(spark, sf0001)
+    val reference = KCoreCertify.referenceBfsCensus(
+      KCoreCertify.referenceEdges(spark, sf0001))
+    assert(engine.size == 4 && reference.size == 4)
+    assert(KCoreCertify.mismatch(engine, reference).isEmpty,
+      s"engine $engine vs reference $reference")
+  }
+
+  test("non-vacuity: a tampered BFS census row is detected") {
+    val ref = Seq(BfsRow(0, 1, 1), BfsRow(1, 38, 39), BfsRow(2, 3990, 4029))
+    val tampered = Seq(BfsRow(0, 1, 1), BfsRow(1, 38, 39), BfsRow(2, 3989, 4028))
+    assert(KCoreCertify.mismatch(tampered, ref).nonEmpty)
     assert(KCoreCertify.mismatch(ref.reverse, ref).isEmpty)
   }
 }

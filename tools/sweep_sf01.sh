@@ -3,9 +3,10 @@
 #
 # Runs the scale-sensitive gate families (tools/sweep_gates_sf01.txt)
 # through the full graft.Verify + DuckDB tools/check.py loop at sf0.1,
-# runs the q301 engine-side k-core self-certification (graft.tools.
-# KCoreCertify — q301's DuckDB replay is infeasible at sf0.1, see the
-# generated VERIFY_SF01.md), and REGENERATES VERIFY_SF01.md from the
+# runs the q301 k-core and q219 BFS engine-side self-certifications
+# (graft.tools.KCoreCertify — q301's DuckDB replay is infeasible at sf0.1
+# and q219's runs out of temp disk on a small host, see the generated
+# VERIFY_SF01.md), and REGENERATES VERIFY_SF01.md from the
 # results. Like SCALING.md (regenerated by ScaleProbe), VERIFY_SF01.md
 # is tool output — edit THIS SCRIPT's narrative block, not the file, or
 # the next run reverts it.
@@ -37,11 +38,12 @@ CHECK_OUT=$(python3 tools/check.py "$OUT" "$SF") || true
 SUMMARY=$(echo "$CHECK_OUT" | tail -1)
 FAILS=$(echo "$CHECK_OUT" | grep '^FAIL' || true)
 
-echo "[sweep] q301 k-core self-certification (independent driver-side reference)" >&2
+echo "[sweep] q301 k-core + q219 BFS self-certification (independent driver-side reference)" >&2
 SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-16} sbt -batch \
   "runMain graft.tools.KCoreCertify $SF" > /tmp/sweep_sf01_kcore.log 2>&1 \
   || { echo "[sweep] KCoreCertify FAILED — see /tmp/sweep_sf01_kcore.log" >&2; exit 1; }
 KCORE_JSON=$(grep -o '{"gate":"q301_kcore_peeling".*}' /tmp/sweep_sf01_kcore.log | tail -1)
+BFS_JSON=$(grep -o '{"gate":"q219_bfs_frontiers".*}' /tmp/sweep_sf01_kcore.log | tail -1)
 
 echo "[sweep] PLANS.md drift: PlanAudit at 8 cores vs the committed file" >&2
 PLANS_SF=$(sed -n 's/^# Physical-plan audit (sf dir: \(.*\))$/\1/p' PLANS.md)
@@ -102,6 +104,15 @@ raw distinct (order, part) pairs — no shared code or plan shape with
 the engine's join-built, checkpoint-peeled path) recomputes the entire
 3-round census and must match count-exactly.
 
+q219_bfs_frontiers stays in the DuckDB list, but its replay (three
+chained frontier CTEs over the co-purchase self-join) needs more temp
+disk than a ~20 GB-free host has: it has failed with \`No space left on
+device\`. The same tool therefore also certifies q219 from the same
+driver-side edge set: a plain-Scala BFS over an adjacency map
+(min-degree seed, ties to the smallest id; each hop's neighbors minus
+everything reached) must reproduce the engine's (hop, n_frontier,
+n_reached) census exactly.
+
 ## Result ($DATE)
 
 DuckDB sweep: **$SUMMARY** (rows + sorted-column schema + exact
@@ -125,6 +136,12 @@ q301 engine-side self-certification (graft.tools.KCoreCertify):
 $KCORE_JSON
 \`\`\`
 
+q219 engine-side BFS census certification (graft.tools.KCoreCertify):
+
+\`\`\`json
+$BFS_JSON
+\`\`\`
+
 ## Why these families
 
 - The \`Sweep.prefixSum\` consumers (q257/q271/q278/q282/q289/q294)
@@ -145,6 +162,7 @@ EOF
 echo "[sweep] wrote VERIFY_SF01.md" >&2
 echo "$SUMMARY"
 echo "$KCORE_JSON"
+echo "$BFS_JSON"
 if [ -n "$PLAN_DRIFT" ]; then
   echo "[sweep] PLANS.md is stale (regenerated: $PLANS_NEW) — rows differ for: $PLAN_DRIFT" >&2
   exit 1
