@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the test corpus (one parquet file per table, see TESTDATA.md).
   *
@@ -42,8 +43,35 @@ object Tables {
     * re-plan the same scans hundreds of times. */
   private val scanPartsCache = scala.collection.concurrent.TrieMap.empty[String, Int]
 
+  /** Parquet schema inference is a Spark job (a one-task footer read) per
+    * `spark.read.parquet`, and every gate reads its corpus tables afresh.
+    * The schema is a pure function of the files and the session's parquet
+    * confs, so it is memoized under exactly those: the path, the name,
+    * length and mtime of every entry at its top level, and every explicitly
+    * set conf with `.parquet.` in its key. A path that is not a local file
+    * or directory is read uncached. */
+  private val schemaCache = scala.collection.concurrent.TrieMap
+    .empty[(String, Seq[(String, Long, Long)], Seq[(String, String)]), StructType]
+
+  private def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val f = new java.io.File(path)
+    val entries = (if (f.isDirectory) f.listFiles.toSeq else Seq(f)).filter(_.exists)
+      .map(e => (e.getName, e.length, e.lastModified)).sortBy(_._1)
+    if (entries.isEmpty) spark.read.parquet(path)
+    else {
+      val key = (path, entries, spark.conf.getAll.toSeq.filter(_._1.contains(".parquet.")).sorted)
+      schemaCache.get(key) match {
+        case Some(schema) => spark.read.schema(schema).parquet(path)
+        case None =>
+          val df = spark.read.parquet(path)
+          schemaCache.putIfAbsent(key, df.schema)
+          df
+      }
+    }
+  }
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     spreadKeys.get(name) match {
       case Some(key) =>
         val scanParts =

@@ -240,7 +240,7 @@ object Graph {
     * 0..`hops`; an edgeless graph has no seed and gives all-zero rows.
     *
     * A superstep loop the DRIVER coordinates (the Pregel superstep with
-    * the frontier as driver state): one aggregate picks the seed; each hop
+    * the frontier as driver state): one top-1 job picks the seed; each hop
     * is ONE distributed step — the adjacency semi-joined to the frontier,
     * shipped as a local relation (a broadcast), and its distinct `dst` ids
     * collected — and the driver subtracts the reached set and keeps the
@@ -251,7 +251,7 @@ object Graph {
     *
     * The parquet hop this replaced (`Scratch.hop` per frontier) wrote and
     * re-read every hop — 19 Spark jobs per q219 execution at sf0.01 on 4
-    * cores, against 9 here — to cut a lineage that a local relation never
+    * cores, against 8 here — to cut a lineage that a local relation never
     * grows: each hop's plan is one bucketed scan, one broadcast semi-join
     * and one exchange-free distinct whatever the depth.
     *
@@ -268,10 +268,9 @@ object Graph {
     // src by symmetry) exchange-free.
     val adj = adjOpt.getOrElse(adjacency(edges))
     val vtxSchema = StructType(Seq(StructField("vtx", adj.schema("dst").dataType)))
-    val seed = adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg"))
-      .agg(min(struct(col("deg"), col("vtx"))).getField("vtx").as("vtx"))
-      .head()
-    var frontier = if (seed.isNullAt(0)) Array.empty[Row] else Array(seed)
+    // a top-1 over the degree census: one job on the dst-bucketed adjacency
+    var frontier = adj.groupBy(col("dst").as("vtx")).agg(count(lit(1)).as("deg"))
+      .orderBy(col("deg"), col("vtx")).limit(1).select(col("vtx")).collect()
     val reached = scala.collection.mutable.HashSet.empty[Any] ++= frontier.map(_.get(0))
     val census = (0 to hops).map { k =>
       if (k > 0 && frontier.nonEmpty) {

@@ -78,4 +78,18 @@ class TablesSpec extends SparkSpec {
     assert(cols.subsetOf(Set("lang", "doc_id")),
       s"spread widened the scan to $cols")
   }
+
+  test("a repeated table load runs no schema job; a rewritten table is re-read") {
+    import spark.implicits._
+    val dir = Scratch.fresh("schemamemo").toString
+    Seq((1L, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    val first = Tables.load(spark, dir, "t")
+    assert(jobsOf(Tables.load(spark, dir, "t"): Unit) == 0,
+      "the second load of an unchanged table must reuse its schema")
+    assert(Tables.load(spark, dir, "t").schema == first.schema)
+    Seq((2L, 3.5)).toDF("k", "w").write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val again = Tables.load(spark, dir, "t")
+    assert(again.columns.toSeq == Seq("k", "w"))
+    assert(again.as[(Long, Double)].collect().toSeq == Seq((2L, 3.5)))
+  }
 }
