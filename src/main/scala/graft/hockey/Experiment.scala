@@ -98,8 +98,10 @@ object Experiment {
     println(s"Train = $trainRows, Test = $testRows, Test season = $testSeason")
 
     // Each fit+eval is a chain of small driver-bound jobs, so the models
-    // run side by side in one SparkContext and their jobs overlap. Results
-    // print afterwards, from this thread and in `opts.models` order.
+    // run side by side in one SparkContext and their jobs overlap. On the
+    // one-partition split each job is one task, so each chain keeps a core
+    // of its own. Results print afterwards, from this thread and in
+    // `opts.models` order.
     val fitted = concurrently(chosen.map { m =>
       () => {
         val t0 = System.nanoTime()

@@ -127,17 +127,30 @@ object Pipeline {
     *
     * One aggregate job decides: the test side holds the max season, so it
     * is never empty, and the train side is empty exactly when the min
-    * season equals the max. */
+    * season equals the max.
+    *
+    * Both sides come back as ONE partition sorted on `GameID` (unique per
+    * matchup row), in either branch. The fits then see one row order
+    * whatever the core count, shuffle partitions, AQE or cache eviction
+    * did upstream — Random Forest's bootstrap and MLP's block stacking are
+    * seeded per partition, so a 4-way layout made their scores depend on
+    * it. It is also the fast layout at this size (thousands of rows): each
+    * MLlib job over the fit input runs one task, so the concurrent fits in
+    * [[Experiment.run]] each keep one core busy instead of queueing behind
+    * each other's 4–8-task jobs. `coalesce(1)` adds no shuffle; in the
+    * fallback it keeps `randomSplit`'s per-partition samples as they were. */
   def temporalSplit(matchups: DataFrame): (DataFrame, DataFrame, Int) = {
     val seasons = matchups.agg(min("Season"), max("Season")).head()
     require(!seasons.isNullAt(1), "no matchups to split — check the input data")
     val maxSeason = seasons.getInt(1)
-    if (seasons.getInt(0) == maxSeason) {
-      val Array(tr, te) = matchups.randomSplit(Array(0.8, 0.2), seed = 42)
-      (tr, te, maxSeason)
-    } else
-      (matchups.filter(col("Season") < maxSeason), matchups.filter(col("Season") === maxSeason),
-        maxSeason)
+    val (train, test) =
+      if (seasons.getInt(0) == maxSeason) {
+        val Array(tr, te) = matchups.randomSplit(Array(0.8, 0.2), seed = 42)
+        (tr, te)
+      } else
+        (matchups.filter(col("Season") < maxSeason), matchups.filter(col("Season") === maxSeason))
+    def fitLayout(df: DataFrame) = df.coalesce(1).sortWithinPartitions("GameID")
+    (fitLayout(train), fitLayout(test), maxSeason)
   }
 
   /** X6 (ref code/experiment.py:628-633): Win (2 points) vs Not-Win. */

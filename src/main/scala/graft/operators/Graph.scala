@@ -208,8 +208,12 @@ object Graph {
     * [[bfsFrontiers]] and [[labelPropagation]] use: collecting the
     * degrees and shipping them back measured neutral for q130 on a
     * 4-core host (0.87 → 0.81 s), so the lazily-consumed file hop was
-    * kept. */
-  def integerPageRank(edges: DataFrame, iters: Int = 3,
+    * kept.
+    *
+    * `edges` is by-name and read only when `adjOpt` is absent, as in
+    * [[bfsFrontiers]]: a caller that passes its adjacency table pays no
+    * edge-file read (each parquet read runs a schema job). */
+  def integerPageRank(edges: => DataFrame, iters: Int = 3,
       scale: Long = 1000000000000L,
       scratchKey: Option[String] = None,
       adjOpt: Option[DataFrame] = None): DataFrame = {

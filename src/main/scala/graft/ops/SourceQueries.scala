@@ -703,20 +703,31 @@ object SourceQueries {
     * recomputes them from the source tables) proves the audit looked at
     * the right bytes, not just the right names. The listing is
     * O(entries-at-root) driver metadata — the same cost class as the
-    * pointer reads every generation op already does. */
+    * pointer reads every generation op already does.
+    *
+    * The entries have different schemas, and counting needs none: each is
+    * read with the empty schema (no schema-inference job), tagged with its
+    * name, and one grouped count over the union counts every entry's rows
+    * in ONE job — a read + count per entry ran two jobs each. */
   def orphanFileAudit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val root = orphanRoot(spark, dir)
     val current = graft.operators.Ann.currentGeneration(spark, root)
     val entries = new java.io.File(root).listFiles().toSeq
       .filter(_.getName != "_CURRENT")
+    val counts = entries
+      .map(f => spark.read.schema(new org.apache.spark.sql.types.StructType())
+        .parquet(f.getPath).select(lit(f.getName).as("entry")))
+      .reduce(_ union _)
+      .groupBy($"entry").count()
+      .as[(String, Long)].collect().toMap
     val rows = entries.map { f =>
       val cls =
         if (f.getName.startsWith("gen-") && current.contains(f.getName))
           "published"
         else if (f.getName.startsWith("gen-")) "staged"
         else "stray"
-      (cls, spark.read.parquet(f.getPath).count())
+      (cls, counts.getOrElse(f.getName, 0L))
     }
     rows.toDF("entry_class", "n_rows")
       .groupBy($"entry_class")

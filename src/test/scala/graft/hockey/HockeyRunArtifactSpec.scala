@@ -24,19 +24,53 @@ import graft.SparkSpec
   *     --events fixtures/hockey/events.csv
   *     --results fixtures/hockey/results.csv
   *     --fast --json hockey_run.json"
-  * (cpus pinned to 4 = this suite's session, so the seeded fits see the
-  * same partitioning and the whole report — counts AND metrics — is
-  * bit-reproducible, not range-checked.)
+  * The seeded fits see one input layout whatever the session's cores or
+  * shuffle partitions: `Pipeline.temporalSplit` hands them one partition
+  * sorted on GameID. So the whole report — counts AND metrics — is
+  * bit-reproducible, not range-checked, and the layout-independence tests
+  * below re-derive it under other shuffle-partition counts and with AQE
+  * off after the cache is dropped.
   */
 class HockeyRunArtifactSpec extends SparkSpec {
 
   private val eventsCsv = "fixtures/hockey/events.csv"
   private val resultsCsv = "fixtures/hockey/results.csv"
 
+  private lazy val json = new String(java.nio.file.Files.readAllBytes(
+    java.nio.file.Paths.get("hockey_run.json")), "UTF-8")
+
   private def field(json: String, key: String): String = {
     val m = ("\"" + key + "\":([0-9.eE+-]+)").r.findFirstMatchIn(json)
     assert(m.nonEmpty, s"hockey_run.json missing field $key")
     m.get.group(1)
+  }
+
+  private def fastRun(): Experiment.RunReport =
+    Experiment.run(spark, Experiment.Opts(eventsCsv, resultsCsv, fast = true))
+
+  /** `report`'s counts, every model's five scores and the baselines equal
+    * the artifact's, the scores to its 6-dp precision. */
+  private def assertMatchesArtifact(report: Experiment.RunReport): Unit = {
+    for ((key, got) <- Seq("game_team_rows" -> report.gameTeamRows,
+        "matchups" -> report.matchups, "train_rows" -> report.trainRows,
+        "test_rows" -> report.testRows, "test_season" -> report.testSeason.toLong))
+      assert(field(json, key).toLong == got, s"$key: artifact ${field(json, key)}, run $got")
+    val metricsBlock = json.substring(json.indexOf("\"models\""))
+    def recorded(model: String, metric: String): Double = {
+      val seg = metricsBlock.substring(metricsBlock.indexOf("\"" + model + "\""))
+      field(seg, metric).toDouble
+    }
+    for ((name, m) <- report.metrics; (metric, v) <- Seq(
+        "accuracy" -> m.accuracy, "auc" -> m.auc, "precision" -> m.precision,
+        "recall" -> m.recall, "f1" -> m.f1)) {
+      assert(v >= 0.0 && v <= 1.0, s"$name $metric out of range: $v")
+      assert(math.abs(recorded(name, metric) - v) <= 5e-7 + 1e-9,
+        s"$name $metric drifted: artifact ${recorded(name, metric)}, run $v")
+    }
+    assert(math.abs(field(json, "majority_class").toDouble -
+      report.baselines.majorityClass) <= 5e-7 + 1e-9)
+    assert(math.abs(field(json, "weighted_random").toDouble -
+      report.baselines.weightedRandom) <= 5e-7 + 1e-9)
   }
 
   test("the committed fixture CSVs regenerate byte-identically") {
@@ -55,25 +89,17 @@ class HockeyRunArtifactSpec extends SparkSpec {
   }
 
   test("the committed hockey_run.json is re-derived by a fresh Experiment.run") {
-    val json = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("hockey_run.json")), "UTF-8")
-
-    val report = Experiment.run(spark,
-      Experiment.Opts(eventsCsv, resultsCsv, fast = true))
+    val report = fastRun()
 
     // golden counts, exact: one row per (game, team), two per game, a
     // REAL temporal split (the sample CSVs used to degenerate to 3/2)
-    assert(field(json, "game_team_rows").toLong == report.gameTeamRows)
+    assertMatchesArtifact(report)
     assert(field(json, "rows_per_game").toInt == 2)
     assert(report.gameTeamRows == 2 * report.matchups)
-    assert(field(json, "matchups").toLong == report.matchups)
     assert(report.matchups == 360L)
-    assert(field(json, "train_rows").toLong == report.trainRows)
-    assert(field(json, "test_rows").toLong == report.testRows)
     assert(report.testRows >= 100,
       s"test set degenerated to ${report.testRows} rows — metric " +
         "assertions below would be vacuous again")
-    assert(field(json, "test_season").toInt == report.testSeason)
     assert(report.testSeason == 20132014)
     assert(report.trainRows + report.testRows == report.matchups)
 
@@ -81,21 +107,6 @@ class HockeyRunArtifactSpec extends SparkSpec {
     for (name <- Seq("Random Forest", "Logistic Regression",
         "Gradient Boosted Trees", "Multilayer Perceptron"))
       assert(report.metrics.contains(name), s"run lost model $name")
-
-    // metrics, reproduced to artifact precision (6 dp): same data, same
-    // seeds, same partitioning => same fits
-    val metricsBlock = json.substring(json.indexOf("\"models\""))
-    def recorded(model: String, metric: String): Double = {
-      val seg = metricsBlock.substring(metricsBlock.indexOf("\"" + model + "\""))
-      field(seg, metric).toDouble
-    }
-    for ((name, m) <- report.metrics; (metric, v) <- Seq(
-        "accuracy" -> m.accuracy, "auc" -> m.auc, "precision" -> m.precision,
-        "recall" -> m.recall, "f1" -> m.f1)) {
-      assert(v >= 0.0 && v <= 1.0, s"$name $metric out of range: $v")
-      assert(math.abs(recorded(name, metric) - v) <= 5e-7 + 1e-9,
-        s"$name $metric drifted: artifact ${recorded(name, metric)}, run $v")
-    }
     for ((name, m) <- report.metrics)
       assert(m.confusion.values.sum == report.testRows,
         s"$name confusion matrix does not cover the test set")
@@ -103,10 +114,6 @@ class HockeyRunArtifactSpec extends SparkSpec {
     // the reference's behavioral invariants (output.txt:23-30): the
     // models LEARN — every one beats the majority baseline by a real
     // margin on the 120-game held-out season, and majority ≥ coin-flip
-    assert(math.abs(field(json, "majority_class").toDouble -
-      report.baselines.majorityClass) <= 5e-7 + 1e-9)
-    assert(math.abs(field(json, "weighted_random").toDouble -
-      report.baselines.weightedRandom) <= 5e-7 + 1e-9)
     assert(field(json, "coin_flip").toDouble == 0.5)
     assert(report.baselines.majorityClass >= 0.5,
       s"majority baseline ${report.baselines.majorityClass} below coin-flip")
@@ -117,4 +124,18 @@ class HockeyRunArtifactSpec extends SparkSpec {
       assert(m.auc >= 0.6, s"$name auc ${m.auc} at chance level")
     }
   }
+
+  // The fits must not depend on how the upstream plan was partitioned or
+  // whether its cache survived. Each case drops the cache first: the cache
+  // manager would otherwise serve the matchups an earlier run built under
+  // the default layout, and the conf would change nothing.
+  for ((what, confs) <- Seq(
+      "shuffle partitions 1" -> Seq("spark.sql.shuffle.partitions" -> "1"),
+      "shuffle partitions 7" -> Seq("spark.sql.shuffle.partitions" -> "7"),
+      "AQE off, after clearCache" -> Seq("spark.sql.adaptive.enabled" -> "false")))
+    test(s"hockey_run.json re-derives under $what") {
+      spark.catalog.clearCache()
+      try assertMatchesArtifact(graft.LocalSession.withConfs(spark, confs: _*)(fastRun()))
+      finally spark.catalog.clearCache()
+    }
 }

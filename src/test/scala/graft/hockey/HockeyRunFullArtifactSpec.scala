@@ -22,6 +22,9 @@ import graft.SparkSpec
   *   SPARK_GRAFT_CPUS=4 sbt "runMain graft.hockey.Experiment
   *     --events /tmp/hockey_large/events.csv
   *     --results /tmp/hockey_large/results.csv --json hockey_run_full.json"
+  * As for `hockey_run.json`, the fits see `Pipeline.temporalSplit`'s one
+  * partition sorted on GameID, so the report does not follow the session's
+  * shuffle partitions (HockeyRunArtifactSpec checks that at `--fast`).
   *
   * The always-on tests assert the artifact's invariants (full config,
   * counts, every model ≥ the majority baseline, AUC > 0.6) plus the

@@ -167,6 +167,7 @@ class HockeySpec extends SparkSpec {
     assert(test.select("Season").distinct().as[Int].collect().toSeq == Seq(20132014))
     assert(train.filter($"Season" === season).isEmpty)
     assert(train.count() == 3 && test.count() == 2)
+    assertFitLayout(train); assertFitLayout(test)
     val lab = Pipeline.withBinaryLabel(matchups)
       .select("label", "label_binary").as[(Int, Double)].collect()
     assert(lab.forall { case (l, b) => b == (if (l == 2) 1.0 else 0.0) })
@@ -181,6 +182,15 @@ class HockeySpec extends SparkSpec {
     assert(ids(train) == ids(wantTrain) && ids(test) == ids(wantTest))
     assert(ids(train).nonEmpty && ids(test).nonEmpty)
     assert((ids(train) ++ ids(test)).sorted == (1L to 40L))
+    assertFitLayout(train); assertFitLayout(test)
+  }
+
+  /** The fit-input layout `temporalSplit` promises: one partition, rows in
+    * strictly ascending `GameID`. */
+  private def assertFitLayout(df: org.apache.spark.sql.DataFrame): Unit = {
+    assert(df.rdd.getNumPartitions == 1, s"${df.rdd.getNumPartitions} partitions")
+    val ids = df.select("GameID").as[Long].collect().toSeq
+    assert(ids.nonEmpty && ids == ids.distinct.sorted, s"GameID order: $ids")
   }
 
   test("fast models fit and produce sane evaluation shapes") {

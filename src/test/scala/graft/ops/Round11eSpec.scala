@@ -291,6 +291,21 @@ class Round11eSpec extends SparkSpec {
     assert(rows("stray")._1 == 1L)
   }
 
+  test("q316: one job counts every root entry's rows") {
+    SourceQueries.orphanFileAudit(spark, sf0001): Unit // builds the root
+    // a schema-inferring read plus a count per entry ran 6 jobs here
+    val jobs = jobsOf(SourceQueries.orphanFileAudit(spark, sf0001): Unit)
+    assert(jobs <= 2, s"orphanFileAudit ran $jobs Spark jobs")
+  }
+
+  test("q130: pagerank reads no edge file when it passes its adjacency") {
+    GraphQueries.pagerank(spark, sf0001): Unit // builds edges + adjacency
+    // the degree hop's write and its read-back's schema job; the eager
+    // edge-file read the adjacency made useless added a third
+    val jobs = jobsOf(GraphQueries.pagerank(spark, sf0001): Unit)
+    assert(jobs <= 2, s"pagerank ran $jobs Spark jobs")
+  }
+
   test("q317: assortativity is a valid correlation and matches corr()") {
     val r = GraphQueries.assortativity(spark, sf0001).collect().head
     assert(r.getAs[Long]("n_endpoints") == 2 * r.getAs[Long]("n_edges"))
